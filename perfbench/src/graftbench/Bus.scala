@@ -1,0 +1,10 @@
+package org.apache.spark.graftbench
+
+import org.apache.spark.SparkContext
+
+/** Waits until the listener bus has delivered every posted event, so a
+  * traced pass's figures are complete before they are read.
+  */
+object Bus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
