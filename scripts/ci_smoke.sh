@@ -11,6 +11,10 @@
 # Usage: scripts/ci_smoke.sh [quick]
 #   quick  — compile (main + test) only, no test execution. For
 #            mid-iteration sanity; the final commit gets the full run.
+#
+# The full run also runs the perfbench tests: the benchmark harness
+# compiles against this checkout (GraftSession.tune,
+# Materialize.materializeCount), so a refactor that breaks it fails here.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -20,5 +24,7 @@ sbt -batch compile Test/compile
 if [[ "${1:-}" != "quick" ]]; then
   echo "== ci_smoke: sbt test (full suite) =="
   sbt -batch test
+  echo "== ci_smoke: perfbench tests =="
+  python3 -m unittest discover -s perfbench/tests
 fi
 echo "== ci_smoke: PASS =="

@@ -1,22 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm up the session (JVM, codegen compiler, shuffle machinery,
-    // parquet footer cache) so the first measured query isn't charged
-    // ~5 s of one-time startup cost.
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    try graft.sources.Tables(spark, sfDir, "region").count()
-    catch { case _: Throwable => () }
+    val spark = GraftSession.local()
+    GraftSession.warmUp(spark, sfDir)
     // Headline set = every query except the deliberately-quadratic
     // string-array brute-force oracle paths (allPairs over 12.5M+ pairs
     // at sf0.1, and the components entry fed by it); their scalable
@@ -72,19 +61,18 @@ object Bench {
     // hidden 310 s for eleven rounds under the old action).
     def onePass(): Map[String, (Double, Option[String])] = headline.map {
       case (name, fn) =>
-        val t0 = System.nanoTime()
-        val err =
-          try { graft.tools.Materialize.materializeCount(fn(spark, sfDir)); None }
-          catch { case e: Throwable =>
-            // JSON carries the one-line summary; the full chain goes to
-            // stderr — STAGE_MATERIALIZATION-style wrappers put the real
-            // cause lines after the first, and losing them once cost a
-            // re-run to diagnose a scale failure
-            System.err.println(s"== bench failure in $name ==")
-            e.printStackTrace()
-            Some(s"${e.getClass.getSimpleName}: " +
-            Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString) }
-        name -> ((System.nanoTime() - t0) / 1e9, err)
+        val (r, secs) = graft.tools.Materialize.timed(fn(spark, sfDir))
+        val err = r.left.toOption.map { e =>
+          // JSON carries the one-line summary; the full chain goes to
+          // stderr — STAGE_MATERIALIZATION-style wrappers put the real
+          // cause lines after the first, and losing them once cost a
+          // re-run to diagnose a scale failure
+          System.err.println(s"== bench failure in $name ==")
+          e.printStackTrace()
+          s"${e.getClass.getSimpleName}: " +
+            Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString
+        }
+        name -> ((secs, err))
     }.toMap
     val (p1, p2) = (onePass(), onePass())
     val results = p1.map { case (k, (v, e1)) =>
@@ -139,6 +127,10 @@ object Bench {
     // nothing Spark logs (stderr) or sbt prints (showSuccess=false,
     // outputStrategy=StdoutOutput in build.sbt) may land after it
     // inside the driver's tail window.
+    // Spark's shutdown hooks run after main returns and log at INFO; the
+    // WARN root level hides them only while no log config names a Spark
+    // logger, so switch them off explicitly.
+    Configurator.setLevel("org.apache.spark.util.ShutdownHookManager", Level.OFF)
     println(line)
     System.out.flush()
     if (nFailed > 0) sys.exit(1)

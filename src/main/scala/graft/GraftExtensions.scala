@@ -9,9 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * SQL function registry, so plain SQL can call them:
   *
   * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  *   ...
+  * val spark = graft.GraftSession.builder("local[*]").getOrCreate()
+  *   // or any builder with .config("spark.sql.extensions", "graft.GraftExtensions")
   * spark.sql("SELECT cosine_similarity(embedding, query_vec) ...")
   * }}}
   *

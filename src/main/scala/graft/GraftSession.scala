@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Library-recommended session tuning in one place, applied by every
-  * graft entry point (Bench/Verify/GraftApp/Explain).
+/** The one place graft builds a session: library-recommended tuning,
+  * [[GraftExtensions]] and a UTC session clock, shared by every entry
+  * point (GraftApp, Bench, Verify, the tools and the test session).
   */
 object GraftSession {
 
@@ -82,6 +83,42 @@ object GraftSession {
     // nanos timestamps.
     "spark.sql.legacy.parquet.nanosAsLong" -> "true"
   )
+
+  /** `SPARK_GRAFT_CPUS`, else every core of this machine. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** A [[tune]]d builder on `master` with [[GraftExtensions]] and UTC.
+    * `conf` is applied before [[tune]], so `SPARK_GRAFT_CONF` still
+    * overrides it.
+    */
+  def builder(master: String, conf: Map[String, String] = Map.empty): SparkSession.Builder =
+    tune(SparkSession.builder()
+      .master(master)
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config(conf))
+
+  /** The measurement and test session: `local[cpus]` with one shuffle
+    * partition per core, no Spark UI, WARN logging.
+    */
+  def local(cpus: Int = GraftSession.cpus, conf: Map[String, String] = Map.empty): SparkSession = {
+    val s = builder(s"local[$cpus]", Map(
+      "spark.sql.shuffle.partitions" -> cpus.toString,
+      "spark.ui.enabled" -> "false") ++ conf).getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** Warm the session up (JVM, codegen compiler, shuffle machinery,
+    * parquet footer cache) so the first measured query isn't charged
+    * ~5 s of one-time startup cost.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000000).selectExpr("sum(id)").collect()
+    try graft.sources.Tables(spark, sfDir, "region").count()
+    catch { case _: Throwable => () }
+  }
 
   /** Apply [[recommended]] plus `SPARK_GRAFT_CONF="k=v;k=v"` env
     * overrides (overrides win — that is the A/B knob).

@@ -83,11 +83,8 @@ import org.apache.spark.sql.functions.expr
 object GraftApp {
 
   def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession.tune(SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+    val spark = graft.GraftSession.builder(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("graft")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC"))
       .getOrCreate()
     try run(spark, args.toSeq)
     finally spark.stop()

@@ -1038,13 +1038,15 @@ object Similarity {
       def finish(report: DataFrame): DataFrame =
         if (!release) report
         else {
-          val spark = report.sparkSession
-          val rows = java.util.Arrays.asList(report.collect(): _*)
-          cps.foreach(_.queryExecution.analyzed.collect {
-            case lr: org.apache.spark.sql.execution.LogicalRDD =>
-              lr.rdd.unpersist(blocking = false)
-          })
-          spark.createDataFrame(rows, report.schema)
+          // release in `finally`: a report that throws must not leak
+          // every tracked checkpoint
+          val rows =
+            try java.util.Arrays.asList(report.collect(): _*)
+            finally cps.foreach(_.queryExecution.analyzed.collect {
+              case lr: org.apache.spark.sql.execution.LogicalRDD =>
+                lr.rdd.unpersist(blocking = false)
+            })
+          report.sparkSession.createDataFrame(rows, report.schema)
         }
     }
 

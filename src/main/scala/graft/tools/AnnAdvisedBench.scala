@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the round-16 AnnAdvisor CONTROL LOOP at scale (verdict-r15
@@ -28,13 +27,7 @@ object AnnAdvisedBench {
     require(args.nonEmpty, "usage: AnnAdvisedBench <sfDir> [k]")
     val sfDir = args(0)
     val k = args.lift(1).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     import graft.operators.similarity.Similarity.{AnnAdvisor, CosineTopK, IvfPqAnn}
     val emb = graft.sources.Tables(spark, sfDir, "embeddings")
     val queries = emb.where(col("vec_id") < 5)

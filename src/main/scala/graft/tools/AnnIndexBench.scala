@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the persisted-index amortization claim
@@ -24,13 +23,7 @@ object AnnIndexBench {
     val sfDir = args(0)
     val indexDir = args(1)
     val nBatches = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val emb = graft.sources.Tables(spark, sfDir, "embeddings")
     val queries = emb.where(col("vec_id") < 5)
     def timed[A](f: => A): Double = {

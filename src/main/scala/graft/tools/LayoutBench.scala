@@ -43,12 +43,11 @@ object LayoutBench {
   val Buckets = 64
   val Db = "graft_layout"
 
-  private def session(warehouse: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = GraftSessionBuilder.build(cpus, warehouse)
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** An explicit warehouse dir, so catalog-table files land under the
+    * layout root, not the repo cwd.
+    */
+  private def session(warehouse: String): SparkSession =
+    graft.GraftSession.local(conf = Map("spark.sql.warehouse.dir" -> warehouse))
 
   /** The bucketed tables per variant: table → (bucket col, location). */
   private def bucketedTables(layoutRoot: String, variant: String)
@@ -174,27 +173,19 @@ object LayoutBench {
     val spark = session(s"$layoutRoot/warehouse_bench_$variant")
     val db = register(spark, flatDir, layoutRoot, variant)
     val dir = graft.sources.Tables.CatalogScheme + db
-    // same warmup as Bench: JVM/codegen/shuffle machinery
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    graft.GraftSession.warmUp(spark, flatDir)
     val times = queries.map { q =>
       val fn = graft.SparkEntry.queries.getOrElse(q,
         sys.error(s"unknown query: $q"))
-      // .count(): the same action graft.Bench times, so flat-vs-layout
-      // deltas are comparable to the BENCH_SF100 numbers
-      val secs = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, dir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      // shuffle count of the FINAL adaptive plan — the structural
-      // evidence the layout claim rests on (bucketed layouts must
-      // remove exchanges, not just happen to run faster)
-      val df = fn(spark, dir)
-      df.count()
-      val exchanges = df.queryExecution.executedPlan.toString
+      // the same timed action as graft.Bench, two passes, min
+      val runs = (1 to 2).map(_ => Probe.run(fn(spark, dir)))
+      // shuffle count of the FINAL adaptive plan of a timed run — the
+      // structural evidence the layout claim rests on (bucketed
+      // layouts must remove exchanges, not just happen to run faster)
+      val exchanges = Probe.finalPlan(runs.last.df).toString
         .linesIterator.count(l => l.contains("Exchange") &&
           !l.contains("BroadcastExchange") && !l.contains("Reused"))
-      (q, secs.min, exchanges)
+      (q, runs.map(_.secs).min, exchanges)
     }
     val qJson = times.map { case (q, s, _) =>
       s""""$q":${math.round(s * 1000) / 1000.0}""" }.mkString(",")
@@ -214,20 +205,4 @@ object LayoutBench {
       "usage: LayoutBench write <flatDir> <layoutRoot> [variant] | " +
       "bench <flatDir> <layoutRoot> <variant> <q1,q2,…>")
   }
-}
-
-/** Session assembly shared by layout tooling — mirrors Bench's builder
-  * (GraftSession.tune, extensions, 32 shuffle partitions) plus an
-  * explicit warehouse dir so catalog-table files land under the layout
-  * root, not the repo cwd.
-  */
-private object GraftSessionBuilder {
-  def build(cpus: String, warehouse: String): SparkSession =
-    graft.GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
 }

@@ -1,21 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 
-/** Honest full-materialization timing for named [[graft.SparkEntry]]
-  * queries: executes the query's own optimized plan to completion via
-  * `queryExecution.toRdd.count()` and reports wall seconds (min of two
-  * passes, Bench's steady-state rule).
-  *
-  * Why not `df.count()` (Bench's action): stacking an aggregate on top
-  * lets Catalyst prune every column the count doesn't need — for
-  * row-per-document rebuild queries (e.g. `text_line_dedup`'s
-  * collect_list/array_join reconstruction) that deletes the expensive
-  * projections from the measured plan entirely. `toRdd` runs the plan
-  * exactly as the query would materialize it (all projections, sorts,
-  * string building), without the write overhead or the driver collect.
-  *
-  * {{{ runMain graft.tools.Materialize /tmp/sf100 text_line_dedup_hashed }}}
+/** The honest timed action shared by [[graft.Bench]], [[Probe]] and
+  * the layout/multimodal benches.
   */
 object Materialize {
 
@@ -26,39 +14,25 @@ object Materialize {
     * the plan exactly as the query would materialize it, so an
     * expensive per-row projection can never be silently deleted from
     * the measured work (how `text_quality` hid at 310 s for eleven
-    * rounds). [[graft.Bench]] and [[Materialize]] both time THIS
-    * action; BenchHonestySpec pins the harness property.
+    * rounds). BenchHonestySpec pins the harness property.
     */
-  def materializeCount(df: org.apache.spark.sql.DataFrame): Long =
+  def materializeCount(df: DataFrame): Long =
     df.queryExecution.toRdd.count()
 
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: Materialize <sfDir> <query> [query ...]")
-    val spark = graft.GraftSession.tune(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same warmup as Bench: don't charge the first query JVM startup
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    args.tail.foreach { name =>
-      def onePass(): (Long, Double) = {
-        // construction INSIDE the timer, exactly like Bench.onePass:
-        // operators such as keyfinder do their cluster work eagerly at
-        // DataFrame-construction time and return a tiny materialized
-        // frame — timing only the materialize would report 0.03 s for
-        // a 600-second job (caught round 15)
-        val t0 = System.nanoTime()
-        val n = materializeCount(graft.SparkEntry.queries(name)(spark, args.head))
-        (n, (System.nanoTime() - t0) / 1e9)
-      }
-      val (n1, t1) = onePass()
-      val (_, t2) = onePass()
-      println(f"[materialize] $name: $n1 rows in ${math.min(t1, t2)}%.2f s")
-    }
-    spark.stop()
+  /** Build and [[materializeCount]] one frame, returning the frame (so
+    * callers read the plan that actually ran), its row count and the
+    * wall seconds — or what it threw. Construction is INSIDE the
+    * timer: operators such as keyfinder do their cluster work eagerly
+    * at DataFrame-construction time and return a tiny materialized
+    * frame, so timing only the materialize would report 0.03 s for a
+    * 600-second job (caught round 15). Everything is caught, as Bench
+    * records a throwing query as a failure and runs on.
+    */
+  def timed(build: => DataFrame): (Either[Throwable, (DataFrame, Long)], Double) = {
+    val t0 = System.nanoTime()
+    val r =
+      try { val df = build; Right((df, materializeCount(df))) }
+      catch { case e: Throwable => Left(e) }
+    (r, (System.nanoTime() - t0) / 1e9)
   }
 }

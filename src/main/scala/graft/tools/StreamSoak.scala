@@ -146,7 +146,6 @@ object StreamSoak {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     // A/B lever (round 18, verdict-r17 #7): SPARK_GRAFT_STATE_STORE=
     // rocksdb swaps the default HDFS-backed in-heap store for the
     // RocksDB provider (executor-local native memory + SST files) —
@@ -156,19 +155,14 @@ object StreamSoak {
     val store = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "hdfs")
     require(Set("hdfs", "rocksdb").contains(store),
       s"SPARK_GRAFT_STATE_STORE must be hdfs|rocksdb, got $store")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = graft.GraftSession.local(conf = Map(
       // keep every progress event for the whole run: the default 100
       // would silently drop the ramp-up batches the flatness check
       // compares against
-      .config("spark.sql.streaming.numRecentProgressUpdates", "5000")
-      .config("spark.ui.enabled", "false")
-    if (store == "rocksdb")
-      builder.config("spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.numRecentProgressUpdates" -> "5000") ++
+      (if (store == "rocksdb") Map("spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+       else Map.empty))
 
     // --- sessionize: generations of 1 000 interleaved users ---------
     // each generation spans 1 M events (=10 000 simulated seconds);
