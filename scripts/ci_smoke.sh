@@ -15,6 +15,10 @@
 # The full run also runs the perfbench tests: the benchmark harness
 # compiles against this checkout (GraftSession.tune,
 # Materialize.materializeCount), so a refactor that breaks it fails here.
+# It then runs the oracle gate: graft.Verify at sf0.01 (the TESTDATA.md
+# location) and scripts/verify_local.py against DuckDB; any oracle
+# mismatch fails the script. Without the sf0.01 tables the gate is
+# skipped, and the script says so.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -26,5 +30,15 @@ if [[ "${1:-}" != "quick" ]]; then
   sbt -batch test
   echo "== ci_smoke: perfbench tests =="
   python3 -m unittest discover -s perfbench/tests
+  sf="$HOME/testdata/sf0.01"
+  if [[ -d "$sf" ]]; then
+    echo "== ci_smoke: oracle gate (graft.Verify $sf + verify_local.py) =="
+    out="$(mktemp -d)"
+    trap 'rm -rf "$out"' EXIT
+    sbt -batch "runMain graft.Verify $sf $out"
+    python3 scripts/verify_local.py "$sf" "$out"
+  else
+    echo "== ci_smoke: oracle gate SKIPPED: $sf not found =="
+  fi
 fi
 echo "== ci_smoke: PASS =="

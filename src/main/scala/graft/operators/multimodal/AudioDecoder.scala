@@ -7,8 +7,8 @@ package graft.operators.multimodal
   * embedding→ANN/dedup legs) is codec-independent. The JDK decodes
   * WAV/AIFF PCM natively ([[AudioDecoder.JavaSoundPcm]]), and
   * [[FlacDecoder]] covers FLAC — the mainstream lossless compressed
-  * format — in pure JVM arithmetic (round 14). The remaining lossy
-  * formats (MP3/AAC/Opus) need an external codec — a deployment drops
+  * format — in pure JVM arithmetic (round 14). The lossy formats
+  * (MP3/AAC/Opus) need an external codec — a deployment drops
   * an ffmpeg/JNI-backed implementation in beside the built-ins and
   * `embedAudio` works unchanged (the exact contract MultimodalSpec
   * exercises with a fake compressed-codec decoder).
@@ -27,17 +27,6 @@ trait AudioDecoder extends Serializable {
 
   /** Mono samples in [-1, 1] (multi-channel input averaged), or None
     * if the payload is unreadable.
-    *
-    * Fidelity caveat (advice-r16): this contract guarantees
-    * EMBEDDING-grade PCM — band energies, envelopes, ZCR — not
-    * necessarily a spec-conformant waveform. In particular
-    * [[Mp3Decoder]] synthesizes through an in-repo near-PR prototype
-    * whose subband phase convention differs from ISO's tables by a
-    * per-band rotation: band energies are invariant, the waveform is
-    * not. A future WAVEFORM-level consumer (cross-correlation against
-    * foreign decodes, resynthesis, sample-exact fingerprinting) must
-    * not treat every built-in's PCM as reference output — check the
-    * decoder's own scaladoc before adding such a consumer.
     */
   def decode(data: Array[Byte]): Option[Array[Double]]
 
@@ -141,18 +130,16 @@ object AudioDecoder {
     }.toOption.flatten
   }
 
-  /** The decoders a pure JVM provides: uncompressed PCM containers via
-    * `javax.sound`, [[FlacDecoder]] — a real compressed codec, decoded
-    * from the public RFC 9639 bitstream spec entirely in JVM integer
-    * arithmetic (round 14) — [[AdpcmDecoder]] for IMA ADPCM WAV
-    * (round 15), and [[Mp3Decoder]] for MPEG-1/2 Layer III (round 16;
-    * see its scaladoc for the carried-table boundary). First claimant
-    * wins, which the built-ins never contest: AdpcmDecoder claims only
-    * RIFF/WAVE with format tag 0x11, which JavaSoundPcm cannot decode
-    * (it is listed first so the generic RIFF sniff never shadows it),
-    * and Mp3Decoder claims only 0xFFE-sync / ID3-prefixed payloads,
-    * disjoint from every container magic the others sniff.
+  /** The decoders a pure JVM provides, each implementing its whole
+    * format: uncompressed PCM containers via `javax.sound`,
+    * [[FlacDecoder]] (RFC 9639, sample-exact in JVM integer arithmetic),
+    * and [[AdpcmDecoder]] / [[MsAdpcmDecoder]] for IMA (WAVE format tag
+    * 0x11) and MS (tag 0x02) ADPCM. First claimant wins, which the
+    * built-ins never contest: the ADPCM decoders claim only their own
+    * format tag, which JavaSoundPcm cannot decode (they are listed
+    * first so the generic RIFF sniff never shadows them), and FLAC's
+    * `fLaC` magic is disjoint from every RIFF/FORM container.
     */
   val builtins: Seq[AudioDecoder] =
-    Seq(AdpcmDecoder, MsAdpcmDecoder, JavaSoundPcm, FlacDecoder, Mp3Decoder)
+    Seq(AdpcmDecoder, MsAdpcmDecoder, JavaSoundPcm, FlacDecoder)
 }

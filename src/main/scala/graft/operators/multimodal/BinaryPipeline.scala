@@ -99,10 +99,6 @@ object BinaryPipeline {
       (d(0) == 'G' && d(1) == 'I' && d(2) == 'F') ||               // GIF
       (d(0) == 'B' && d(1) == 'M'))                                // BMP
 
-  private def sniffWav(d: Array[Byte]): Boolean =
-    d.length >= 12 && d(0) == 'R' && d(1) == 'I' && d(2) == 'F' &&
-      d(3) == 'F' && d(8) == 'W' && d(9) == 'A' && d(10) == 'V'
-
   /** One-time JVM switch: ImageIO's default stream cache writes a TEMP
     * FILE per read — pure I/O overhead per row on executors, and an
     * unwritable tmpdir would make decodes fail (→ stub fallback) on
@@ -149,35 +145,17 @@ object BinaryPipeline {
       Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(data)))
     }.toOption.flatten
 
-  /** REAL WAV probe via `javax.sound.sampled`: the audio frame count
-    * (sample frames — the audio analogue of n_frames).
-    */
-  def decodeWav(data: Array[Byte]): Option[Int] =
-    if (!sniffWav(data)) None
-    else scala.util.Try {
-      val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(data))
-      try {
-        val n = in.getFrameLength
-        if (n >= 0 && n <= Int.MaxValue) Some(n.toInt) else None
-      } finally in.close()
-    }.toOption.flatten
-
   /** REAL audio decode to mono samples in [-1, 1] — the audio analogue
     * of [[decodeImage]]'s raster. Delegates to the first [[AudioDecoder]]
     * claiming the payload ([[AudioDecoder.builtins]] = WAV/AIFF PCM via
-    * `javax.sound` by default; compressed-codec adapters — MP3/AAC/
-    * FLAC — are the caller's drop-in at the same seam, round-14
-    * verdict #6). None when no decoder claims or decodes the payload.
+    * `javax.sound`, FLAC and IMA/MS ADPCM by default; lossy-codec
+    * adapters — MP3/AAC/Opus — are the caller's drop-in at the same
+    * seam). None when no decoder claims or decodes the payload.
     */
   def decodeAudioSamples(data: Array[Byte],
                          decoders: Seq[AudioDecoder] = AudioDecoder.builtins)
       : Option[Array[Double]] =
     decoders.find(_.supports(data)).flatMap(_.decode(data))
-
-  /** Back-compat name for the WAV-only built-in path. */
-  def decodeWavSamples(data: Array[Byte]): Option[Array[Double]] =
-    decodeAudioSamples(data)
 
   /** Audio feature extraction — the [[imageEmbedding]] twin for WAV
     * payloads, so audio corpora ride the SAME downstream leg (ANN
@@ -351,16 +329,12 @@ object BinaryPipeline {
           // real JDK decode first; undecodable payloads (including the
           // synthetic text-byte corpus) keep the deterministic stub
           case "image" => imageDims(m.data)
-          // WAV keeps its original javax.sound probe; the other audio
-          // containers (FLAC/ADPCM/MP3/AIFF) get the header-only
-          // AudioDecoder.probeFrames path — real metadata, still no
-          // audio-data decode (round 17: before this, every non-WAV
-          // audio payload fell to the stub even though embedAudio
-          // decodes it)
-          case "audio" => decodeWav(m.data).map(frames => (0, 0, frames))
-            .orElse(AudioDecoder.builtins.find(_.supports(m.data))
-              .flatMap(_.probeFrames(m.data))
-              .map(n => (0, 0, math.min(n, Int.MaxValue.toLong).toInt)))
+          // header-only AudioDecoder.probeFrames of the first built-in
+          // claiming the payload (WAV/AIFF/FLAC/ADPCM) — real metadata,
+          // no audio-data decode
+          case "audio" => AudioDecoder.builtins.find(_.supports(m.data))
+            .flatMap(_.probeFrames(m.data))
+            .map(n => (0, 0, math.min(n, Int.MaxValue.toLong).toInt))
           case "video" => videoProber.probe(m.data)
           case _       => None
         }

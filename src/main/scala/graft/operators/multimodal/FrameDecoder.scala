@@ -11,7 +11,7 @@ import graft.operators.multimodal.AviFrames.VideoFormat
   * frame chunk's bytes into a raster is this trait. The two codecs a
   * pure JDK can decode ship as built-ins ([[FrameDecoder.Mjpeg]],
   * [[FrameDecoder.Dib]]); a deployment with native codecs drops in an
-  * ffmpeg/JNI-backed implementation for `H264`/`HEVC`/`VP90` chunks and
+  * ffmpeg/JNI-backed implementation for H.264/HEVC/VP9 chunks and
   * every downstream leg ([[BinaryPipeline.embedVideoFrames]], the
   * frame→embedding→ANN pipeline) works unchanged — the exact contract
   * MultimodalSpec exercises with a fake compressed-codec decoder.
@@ -91,11 +91,11 @@ object FrameDecoder {
     }
   }
 
-  /** The decoders a pure JVM provides — the default for every frame
-    * leg: MJPEG and DIB (pure JDK) plus the round-14 baseline-intra
-    * H.264 decoder ([[graft.operators.multimodal.H264IntraDecoder]] —
-    * IDR keyframes, CAVLC; inter frames skipped). Order matters only
-    * when two decoders claim one format, which the built-ins never do.
+  /** The decoders a pure JDK provides — the default for every frame
+    * leg: MJPEG and DIB. Every other codec (H.264, HEVC, VP9…) yields
+    * no frames until a deployment plugs in an adapter. Order matters
+    * only when two decoders claim one format, which the built-ins
+    * never do.
     */
-  val builtins: Seq[FrameDecoder] = Seq(Mjpeg, Dib, H264IntraDecoder)
+  val builtins: Seq[FrameDecoder] = Seq(Mjpeg, Dib)
 }

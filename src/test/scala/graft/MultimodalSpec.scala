@@ -287,7 +287,7 @@ class MultimodalSpec extends AnyFunSuite {
       new javax.sound.sampled.AudioInputStream(
         new java.io.ByteArrayInputStream(pcm), fmt, 2),
       javax.sound.sampled.AudioFileFormat.Type.WAVE, out)
-    val s = BinaryPipeline.decodeWavSamples(out.toByteArray).get
+    val s = BinaryPipeline.decodeAudioSamples(out.toByteArray).get
     assert(s.length == 2)
     assert(math.abs(s(0)) < 0.01)
     assert(math.abs(s(1) - 0.5) < 0.01)

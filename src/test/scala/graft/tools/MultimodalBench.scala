@@ -9,7 +9,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.{AdpcmTestEncoder, AviFixture, FlacTestEncoder, Mp3Fixture}
+import graft.{AdpcmTestEncoder, AviFixture, FlacTestEncoder}
 import graft.operators.multimodal.BinaryPipeline
 
 /** At-scale THROUGHPUT receipt for the multimodal decode legs
@@ -21,9 +21,8 @@ import graft.operators.multimodal.BinaryPipeline
   * doc_id inside mapPartitions — the driver never holds payloads) from
   * the same in-repo encoders the codec specs trust: ImageIO PNG/JPEG/
   * BMP writes, a plain RIFF/PCM16 writer, [[graft.FlacTestEncoder]],
-  * [[graft.AdpcmTestEncoder]] (IMA WAV), [[graft.Mp3Fixture]] (tonal
-  * MPEG-1 frames over the value-trusted Huffman subset), and
-  * [[graft.AviFixture]] MJPEG/DIB containers. It is persisted
+  * [[graft.AdpcmTestEncoder]] (IMA WAV), and [[graft.AviFixture]]
+  * MJPEG/DIB containers. It is persisted
   * DISK_ONLY before any leg is timed, for two reasons: the timed legs
   * then measure storage→decode→embed (the production shape — a 100 TB
   * corpus streams from object storage, it is not a heap resident), and
@@ -50,7 +49,7 @@ object MultimodalBench {
   private val Mix: Seq[(String, Int, String)] = Seq(
     ("png", 20, "image"), ("jpeg", 10, "image"), ("bmp", 10, "image"),
     ("wav", 10, "audio"), ("flac", 10, "audio"), ("adpcm", 10, "audio"),
-    ("mp3", 10, "audio"), ("mjpeg", 15, "video"), ("dib", 5, "video"))
+    ("mjpeg", 15, "video"), ("dib", 5, "video"))
   private val TotalWeight = Mix.map(_._2).sum
 
   /** [lo, hi) doc_id range per format for a corpus of n rows. */
@@ -117,27 +116,6 @@ object MultimodalBench {
   private def adpcmBytes(seed: Int): Array[Byte] =
     AdpcmTestEncoder.encode(Array(sine(seed)), 8000, 505)._1
 
-  /** A tonal MPEG-1 mono granule over the value-trusted table subset:
-    * 64 big-value lines (|v| ≤ 1, table 1 in all three regions) + 8
-    * count1 quads — the carried-coverage regime the decoder fully
-    * decodes; the production yield story for uncarried music tables
-    * is §36d's documented degradation, not this tool's subject.
-    */
-  private def mp3Gr(seed: Int): Mp3Fixture.Gr = {
-    val is = new Array[Int](576)
-    var i = 0
-    while (i < 96) {
-      is(i) = (((seed + i) >> (i % 11)) & 1) - (((seed * 7 + i) >> 2) & 1)
-      i += 1
-    }
-    Mp3Fixture.Gr(is = is, globalGain = 150 + seed % 40,
-      bigValues = 32, count1 = 8)
-  }
-
-  private def mp3Bytes(seed: Int): Array[Byte] =
-    Mp3Fixture.encode((0 until 3).map(f =>
-      Mp3Fixture.Frame(Array(Array(mp3Gr(seed + f)), Array(mp3Gr(seed + f + 1))))))
-
   private def mjpegBytes(seed: Int): Array[Byte] =
     AviFixture.build("MJPG", 64, 48, 24,
       (0 until 6).map(f => AviFixture.jpegBytes(patternImage(64, 48, seed + f))))
@@ -153,7 +131,6 @@ object MultimodalBench {
       case "wav" => wavBytes(seed)
       case "flac" => flacBytes(seed)
       case "adpcm" => adpcmBytes(seed)
-      case "mp3" => mp3Bytes(seed)
       case "mjpeg" => mjpegBytes(seed)
       case "dib" => dibBytes(seed)
     }
