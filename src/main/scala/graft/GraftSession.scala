@@ -111,8 +111,8 @@ object GraftSession {
   }
 
   /** Warm the session up (JVM, codegen compiler, shuffle machinery,
-    * parquet footer cache) so the first measured query isn't charged
-    * ~5 s of one-time startup cost.
+    * the parquet footer and scan code paths) so the first measured query
+    * isn't charged ~5 s of one-time startup cost.
     */
   def warmUp(spark: SparkSession, sfDir: String): Unit = {
     spark.range(1000000).selectExpr("sum(id)").collect()

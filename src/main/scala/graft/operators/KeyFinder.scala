@@ -138,8 +138,33 @@ object KeyFinder {
 
   private def statsForSize(
       df: DataFrame, candidates: Seq[String], size: Int): Seq[ComboStats] =
-    prioritizeIdColumns(candidates).combinations(size).toSeq
-      .par.map(cb => comboStats(df, cb)).seq
+    parMap(df, prioritizeIdColumns(candidates).combinations(size).toSeq)(comboStats(df, _))
+
+  /** The Spark local properties that scope a job: group, description,
+    * cancel policy, tags and scheduler pool.
+    */
+  private val JobScopeKeys = Seq("spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel", "spark.job.tags", "spark.scheduler.pool")
+
+  /** `xs.par.map(f)` whose jobs run in the caller's job scope. `.par`
+    * runs on ForkJoin workers that keep whatever local properties they
+    * inherited when the pool created them, so without this a combo's job
+    * lands in a stale job group or none. Each task takes the caller's
+    * [[JobScopeKeys]] and restores the worker's afterwards.
+    * `spark.sql.execution.id` is not copied: every collect starts its
+    * own SQL execution.
+    */
+  private def parMap[A, B](df: DataFrame, xs: Seq[A])(f: A => B): Seq[B] = {
+    val sc = df.sparkSession.sparkContext
+    def scope = JobScopeKeys.map(k => k -> sc.getLocalProperty(k))
+    def enter(s: Seq[(String, String)]): Unit = s.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    val caller = scope
+    xs.par.map { x =>
+      val worker = scope
+      enter(caller)
+      try f(x) finally enter(worker)
+    }.seq
+  }
 
   /** Run `f` against the candidate-column projection persisted in
     * memory: every combo job then aggregates from the cached columnar
@@ -336,7 +361,8 @@ object KeyFinder {
           else combos
         val keyCombos =
           if (fusedEnabled) keysByHashFused(proj, survivors, total)
-          else survivors.par.filter(cb => isKeyByHash(proj, cb, total)).seq
+          else survivors.zip(parMap(proj, survivors)(isKeyByHash(proj, _, total)))
+            .collect { case (cb, true) => cb }
         val keys = keyCombos.map(_.mkString(",")).sorted
         (size, keys)
       }.collectFirst { case (size, keys) if keys.nonEmpty => (size, keys) }

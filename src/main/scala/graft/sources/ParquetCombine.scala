@@ -31,10 +31,12 @@ object ParquetCombine {
 
   /** Combine `paths`, taking the first readable file's schema as the
     * reference. Unreadable and schema-mismatched files are skipped.
+    * Each schema is one driver-side footer read ([[Tables.footerSchema]]),
+    * so no input costs a Spark job before the combined scan.
     */
   def combine(spark: SparkSession, paths: Seq[String]): Combined = {
     val withSchemas: Seq[(String, Option[StructType])] = paths.map { p =>
-      p -> (try Some(spark.read.parquet(p).schema) catch { case _: Exception => None })
+      p -> (try Tables.footerSchema(spark, p) catch { case _: Exception => None })
     }
     val reference: Option[StructType] = withSchemas.collectFirst {
       case (_, Some(s)) => s

@@ -1,6 +1,12 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Catalog of the driver-generated test tables (see /root/repo/TESTDATA.md).
   *
@@ -45,16 +51,17 @@ object Tables {
   val CatalogScheme = "catalog:"
 
   /** Load one table. Column pruning + predicate pushdown reach the scan
-    * because this stays a plain parquet relation.
+    * because this stays a plain parquet relation. The schema comes from
+    * [[footerSchema]], so loading a table starts no Spark job.
     *
     * `events.ts` has shipped in two physical layouts over time: parquet
     * TIMESTAMP(NANOS) (which Spark 4 only reads as a raw long, via the
     * legacy nanosAsLong conversion) and plain TIMESTAMP(MICROS). We
-    * probe the loaded schema instead of assuming either: a LongType `ts`
+    * probe the footer schema instead of assuming either: a LongType `ts`
     * means the nanos layout was read as a long, so rebuild a
     * microsecond TimestampType column; any timestamp type passes
-    * through untouched. The probe is a driver-side footer read Spark
-    * performs for schema inference anyway — no extra job.
+    * through untouched. The probe is the same driver-side footer read
+    * that gives every path-backed table its schema.
     */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (dir.startsWith(CatalogScheme))
@@ -63,7 +70,7 @@ object Tables {
       // nanos layouts need spark.sql.legacy.parquet.nanosAsLong=true,
       // set once at session build (GraftSession.recommended) — never
       // mutated from here
-      val df = spark.read.parquet(path(dir, name))
+      val df = read(spark, path(dir, name))
       df.schema.find(_.name == "ts").map(_.dataType) match {
         case Some(org.apache.spark.sql.types.LongType) =>
           // nanos → micros with INTEGER division: `ts / 1000` is double
@@ -83,8 +90,59 @@ object Tables {
         case _ => df
       }
     } else {
-      spark.read.parquet(path(dir, name))
+      read(spark, path(dir, name))
     }
+
+  /** A parquet relation over `path` with its schema given up front.
+    * Without a footer to read (missing path, no data file) Spark infers
+    * as usual, so those cases keep Spark's own error.
+    */
+  private[graft] def read(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path).fold(spark.read)(spark.read.schema(_)).parquet(path)
+
+  /** The data schema of the parquet file or directory at `path`, read on
+    * the driver from the one footer Spark's schema inference would read:
+    * the file itself, or for a directory its `_common_metadata`, else
+    * `_metadata`, else the first data file in path order. Spark's
+    * inference (`ParquetUtils.inferSchema`) launches one job per table
+    * even for that single footer; this reads it directly and converts
+    * it the same way (`ParquetFileFormat.readSchemaFromFooter`: the
+    * Spark row-metadata JSON when present, else the session-conf
+    * converter, so nanosAsLong, binaryAsString, int96AsTimestamp and
+    * inferTimestampNTZ apply unchanged). One footer defines the schema;
+    * graft never sets `mergeSchema`. Hive-style partition columns are
+    * not in the footer: Spark still discovers them from the paths.
+    * None when `path` does not exist or holds no footer.
+    */
+  private[graft] def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val root = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = root.getFileSystem(conf)
+    val rootStatus =
+      try fs.getFileStatus(root) catch { case _: java.io.FileNotFoundException => return None }
+    val files = leafFiles(fs, rootStatus).sortBy(_.getPath.toString)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    named("_common_metadata").orElse(named("_metadata"))
+      .orElse(files.find(f => !SummaryFiles(f.getPath.getName)))
+      .map { st =>
+        val meta = ParquetFileReader.readFooter(HadoopInputFile.fromStatus(st, conf), SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, meta),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      }
+  }
+
+  private val SummaryFiles = Set("_common_metadata", "_metadata")
+
+  /** Files under `st` that Spark's file index lists: names starting with
+    * `_` (unless a `k=v` partition directory) or `.` are skipped, except
+    * the two summary files.
+    */
+  private def leafFiles(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
+    if (!st.isDirectory) Seq(st)
+    else fs.listStatus(st.getPath).toSeq.filter { c =>
+      val n = c.getPath.getName
+      SummaryFiles(n) || !((n.startsWith("_") && !n.contains("=")) || n.startsWith("."))
+    }.flatMap(leafFiles(fs, _))
 
   /** Load every known table lazily (plans only; nothing is read until an
     * action runs).

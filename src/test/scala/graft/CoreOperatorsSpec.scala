@@ -215,6 +215,31 @@ class CoreOperatorsSpec extends AnyFunSuite {
     assert(c.df.count() == 2 * spark.read.parquet(region).count())
   }
 
+  test("combine: unreadable and missing inputs are skipped; schema reads start no job") {
+    val region = Tables.path(sf0001, "region")
+    val tmp = java.nio.file.Files.createTempDirectory("combine")
+    val junk = java.nio.file.Files.write(tmp.resolve("junk.parquet"), "not parquet".getBytes).toString
+    val missing = tmp.resolve("missing.parquet").toString
+    var c: ParquetCombine.Combined = null
+    assert(jobGroupsOf { c = ParquetCombine.combine(spark, Seq(junk, region, missing, region)) }.isEmpty)
+    assert(c.kept == Seq(region, region))
+    assert(c.skipped == Seq(junk, missing))
+  }
+
+  test("keyfinder: parallel combo jobs carry the caller's job group") {
+    val df = Tables(spark, sf0001, "orders")
+    val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
+    val sc = spark.sparkContext
+    def underGroup(g: String) = jobGroupsOf {
+      sc.setJobGroup(g, g)
+      try KeyFinder.candidateReport(spark, df, cols, 2).collect() finally sc.clearJobGroup()
+    }
+    underGroup("a")
+    val groups = underGroup("b")
+    assert(groups.size >= 6, groups)
+    assert(groups.forall(_ == "b"), groups)
+  }
+
   test("parquetizer: magic-byte sniff and rename") {
     val tmp = java.nio.file.Files.createTempDirectory("pqz").toFile
     val pq = new java.io.File(tmp, "datafile")
