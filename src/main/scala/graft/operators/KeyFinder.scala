@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Hll
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -25,7 +26,9 @@ import scala.collection.parallel.CollectionConverters._
   * scans. A fused single-scan variant (multi-distinct aggregate) was
   * measured 10× slower at sf0.1 because Catalyst plans n distinct groups
   * as an Expand (row count × n) followed by a giant shuffle; per-combo
-  * jobs shuffle only each combo's partial-agg output instead.
+  * jobs shuffle only each combo's partial-agg output instead. Fusing
+  * the 8-byte hash-witness jobs below the same way was no better at
+  * sf100 (900.2 s fused vs 599.6 s per-combo, BENCH_SF100.md round 15).
   *
   * Also measured and REJECTED (round 6, 60 M rows, 4 candidates,
   * maxKeySize 4): a single-scan `approx_count_distinct(struct(...))`
@@ -248,20 +251,25 @@ object KeyFinder {
 
   /** HLL prefilter margin (round-14, verdict-r13 #5): a combo whose
     * approx-distinct estimate falls below `PrefilterThreshold × total`
-    * is pruned as a provable non-key without its exact job. At
-    * [[PrefilterRsd]] = 0.02 the threshold sits 10 standard deviations
+    * is pruned as a provable non-key without its exact job. The sketch
+    * is [[Hll.approxDistinct]] at [[PrefilterRsd]] = 0.02, a DataSketches
+    * HLL at lgK 12 whose relative standard error is 1.04/√4096 ≈ 1.6%,
+    * so the threshold sits 20% — more than 12 standard deviations —
     * under a true key's expected estimate (a key's distinct count IS
-    * total), so a wrongly-pruned key needs a 10σ HLL deviation —
+    * total): a wrongly-pruned key needs a deviation beyond 10σ,
     * beyond-hardware-error territory, same confidence class as
     * [[HashDeficitBand]]'s collision argument. Everything at-or-above
     * the threshold — including every true key and every near-key —
     * still gets the exact hash-witness job, so answers are unchanged;
     * the prefilter only deletes exact jobs for combos that are
     * overwhelmingly duplicate-heavy. The win is structural: ALL combos
-    * of a size share ONE scan (HLL partials merge map-side, no
+    * of a size share ONE scan (sketch partials merge map-side, no
     * shuffle), where the exact path runs one full countDistinct job
-    * per combo. Toggle: SPARK_GRAFT_KEYFINDER_PREFILTER=off (the
-    * sf100 A/B lever; adopted after measuring — see BENCH_SF100.md).
+    * per combo. Each combo's sketch is one binary buffer field, so the
+    * shared aggregate stays narrow; HyperLogLog++ carries 410 long
+    * fields per combo at this rsd. Toggle:
+    * SPARK_GRAFT_KEYFINDER_PREFILTER=off (the sf100 A/B lever; adopted
+    * after measuring — see BENCH_SF100.md).
     */
   val PrefilterRsd = 0.02
   val PrefilterThreshold = 0.8
@@ -277,52 +285,13 @@ object KeyFinder {
                              total: Long): Seq[Seq[String]] = {
     if (combos.isEmpty) return combos
     val aggs = combos.zipWithIndex.map { case (cb, i) =>
-      approx_count_distinct(xxhash64(cb.map(col): _*), PrefilterRsd).as(s"a_$i")
+      Hll.approxDistinct(PrefilterRsd, cb.map(col): _*).as(s"a_$i")
     }
     val row = proj.agg(aggs.head, aggs.tail: _*).collect()(0)
     val cut = (total * PrefilterThreshold).toLong
     combos.zipWithIndex.collect {
       case (cb, i) if row.getLong(i) >= cut => cb
     }
-  }
-
-  /** Round-15 A/B lever (verdict-r14 #6): fold ALL of a size's
-    * surviving exact hash-witness jobs into ONE multi-countDistinct
-    * aggregate. Catalyst plans n distinct groups as an Expand (n× the
-    * rows) feeding one shuffle — the shape round 6 measured 10× slower
-    * over TUPLES — but here every distinct argument is an 8-byte
-    * xxhash64, so the expanded row is (gid, long) and the map-side
-    * partial distinct dedups each group before the shuffle. One shared
-    * scan replaces n scans of the cached projection. Verdict semantics
-    * are identical: same hash counts, same [[HashDeficitBand]], same
-    * exact fallback per ambiguous combo.
-    * Toggle: SPARK_GRAFT_KEYFINDER_FUSED=on. Measured at sf100 and
-    * REJECTED as the default (BENCH_SF100.md round 15): 599.6 s
-    * per-combo vs 900.2 s fused — RewriteDistinctAggregates expands
-    * 600 M rows × groups before the partial aggregate, and the
-    * concurrent per-combo jobs already overlap their scans of the
-    * cached projection, so the fused plan serializes ~3× the aggregate
-    * work. The round-6 Expand verdict holds at the hash shape too.
-    */
-  private def fusedEnabled: Boolean =
-    sys.env.get("SPARK_GRAFT_KEYFINDER_FUSED").contains("on")
-
-  private[graft] def keysByHashFused(proj: DataFrame, combos: Seq[Seq[String]],
-                                     total: Long): Seq[Seq[String]] = {
-    if (combos.isEmpty) return Nil
-    val aggs = combos.zipWithIndex.map { case (cb, i) =>
-      countDistinct(xxhash64(cb.map(col): _*)).as(s"d_$i")
-    }
-    val row = proj.agg(aggs.head, aggs.tail: _*).collect()(0)
-    combos.zipWithIndex.filter { case (cb, i) =>
-      val hashed = row.getLong(i)
-      if (hashed == total) true
-      else if (total - hashed > HashDeficitBand) false
-      else // collisions possible: exact tuple-distinct decides
-        proj.select(cb.map(col): _*)
-          .agg(countDistinct(cb.head, cb.tail: _*))
-          .collect()(0).getLong(0) == total
-    }.map(_._1)
   }
 
   /** Size-ascending minimal-key search with the reference's early stop:
@@ -359,10 +328,8 @@ object KeyFinder {
         val survivors =
           if (prefilterEnabled) plausibleByHll(proj, combos, total)
           else combos
-        val keyCombos =
-          if (fusedEnabled) keysByHashFused(proj, survivors, total)
-          else survivors.zip(parMap(proj, survivors)(isKeyByHash(proj, _, total)))
-            .collect { case (cb, true) => cb }
+        val keyCombos = survivors.zip(parMap(proj, survivors)(isKeyByHash(proj, _, total)))
+          .collect { case (cb, true) => cb }
         val keys = keyCombos.map(_.mkString(",")).sorted
         (size, keys)
       }.collectFirst { case (size, keys) if keys.nonEmpty => (size, keys) }

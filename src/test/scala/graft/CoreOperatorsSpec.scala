@@ -1,9 +1,10 @@
 package graft
 
+import graft.functions.Hll
 import graft.operators._
 import graft.sources.{ParquetCombine, Parquetizer, SchemaIntrospect, Tables}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.functions.{approx_count_distinct, col, xxhash64}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 class CoreOperatorsSpec extends AnyFunSuite {
@@ -41,7 +42,7 @@ class CoreOperatorsSpec extends AnyFunSuite {
     // true count sits at the threshold — not the case for these columns.
     assert(exact.keys == approx.keys)
     assert(exact.filter(_._2._2 == "NULL") == approx.filter(_._2._2 == "NULL"))
-    // HLL++ relative error: |approx - exact| / exact within ~5σ of the
+    // HLL relative error: |approx - exact| / exact within ~5σ of the
     // configured rsd (deterministic for a fixed input — no flake)
     exact.foreach { case (c, (d, _)) =>
       if (d > 0) {
@@ -106,21 +107,6 @@ class CoreOperatorsSpec extends AnyFunSuite {
     assert(keys.toSeq == Seq(("a,b", 2)))
   }
 
-  test("keyfinder: fused multi-countDistinct leg returns the per-combo verdicts") {
-    // the round-15 A/B lever (one Expand-shared scan instead of one
-    // job per combo) must be verdict-identical to the sequential
-    // hash-witness path: keys pass, near-keys (one duplicate) fail
-    import spark.implicits._
-    val df = (0 until 1000).map(i => (i, i / 2, if (i == 999) 998 else i))
-      .toDF("k", "half", "nearkey")
-    val combos = Seq(Seq("k"), Seq("half"), Seq("nearkey"),
-      Seq("half", "nearkey"), Seq("k", "half"))
-    // (half, nearkey) is a NEAR-key: rows 998/999 both map to
-    // (499, 998) — a single duplicate the exact fallback must catch
-    val fused = KeyFinder.keysByHashFused(df, combos, total = 1000L)
-    assert(fused == Seq(Seq("k"), Seq("k", "half")), s"fused verdicts: $fused")
-  }
-
   test("keyfinder: near-key with a single duplicate is rejected (hash-witness fallback)") {
     import spark.implicits._
     // 100 rows, exactly one duplicated (a, s) pair: the hash-witness
@@ -151,8 +137,8 @@ class CoreOperatorsSpec extends AnyFunSuite {
     // estimate sits far under the threshold, s's within it
     val proj = df.select("a", "s", "b")
     val est = proj.agg(
-      approx_count_distinct(xxhash64(col("b")), KeyFinder.PrefilterRsd).as("b"),
-      approx_count_distinct(xxhash64(col("s")), KeyFinder.PrefilterRsd).as("s"))
+      Hll.approxDistinct(KeyFinder.PrefilterRsd, col("b")).as("b"),
+      Hll.approxDistinct(KeyFinder.PrefilterRsd, col("s")).as("s"))
       .collect()(0)
     val cut = (200 * KeyFinder.PrefilterThreshold).toLong
     assert(est.getLong(0) < cut, "duplicate-heavy column must be prunable")
