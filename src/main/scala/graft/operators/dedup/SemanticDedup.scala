@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * Two variants, same prune:
   *
   *   - [[run]] — production: cells come from the trained IVF coarse
-  *     quantizer ([[graft.operators.similarity.Similarity.IvfAnn]]
+  *     quantizer ([[graft.operators.similarity.Similarity.IvfPqAnn]]
   *     `assignCells`: driver-local Lloyd on a value-selected bounded
   *     sample, one map-side assignment pass, no shuffle). Cluster
   *     count `nCells` is the cost knob — size it so corpus/nCells
@@ -46,8 +46,8 @@ object SemanticDedup {
   def run(df: DataFrame, threshold: Double, nCells: Int = 32,
           vecCol: String = "embedding", idCol: String = "vec_id",
           maxTrain: Long = 100000L): DataFrame = {
-    val (assigned, _) = graft.operators.similarity.Similarity.IvfAnn
-      .assignCells(df, nCells, vecCol, idCol, maxTrain)
+    val assigned = graft.operators.similarity.Similarity.IvfPqAnn
+      .assignCells(df, nCells, vecCol, idCol, maxTrain).assigned
     prune(assigned.select(col("corpus_id").as("vec_id"),
       col("cell").cast("bigint").as("cell"), col("corpus_v").as("v")), threshold)
   }

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * The model tables are bounded by construction (nCells + m·ksub
   * rows), so loading them to the driver is the same bounded-collect
   * class as training was. Training is seeded and value-sampled
-  * ([[Similarity.IvfAnn.assignCells]] discipline), so a rebuilt index
+  * ([[Similarity.IvfPqAnn.assignCells]] discipline), so a rebuilt index
   * over the same corpus is bit-identical — IvfPqIndexSpec pins
   * build→query ≡ the direct in-memory path.
   *
@@ -110,9 +110,7 @@ object IvfPqIndex {
     */
   def append(newCorpus: DataFrame, dir: String,
              vecCol: String = "embedding", idCol: String = "vec_id"): Unit = {
-    val spark = newCorpus.sparkSession
-    import spark.implicits._
-    val (ctrs, books, bs) = loadModel(spark, dir)
+    val (ctrs, books, bs) = loadModel(newCorpus.sparkSession, dir)
     // loud dimension check (code-review r14): the encode loops carry
     // min-length guards, so dimension-drifted vectors would otherwise
     // be silently coded over a truncated slice and corrupt every
@@ -126,15 +124,9 @@ object IvfPqIndex {
       Similarity.requireUniformVectors(vDf, "v", vecCol, "IvfPqIndex.append")
     require(nNew == 0 || newDim == dim,
       s"append: new vectors must be $dim-dimensional like the index, got $newDim")
-    val assigned = newCorpus.select(col(idCol).as("corpus_id"),
-        col(vecCol).cast("array<float>").as("corpus_v"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        it.map { case (id, v) =>
-          (id, v, Similarity.IvfAnn.nearest(Similarity.IvfAnn.normalized(v), ctrs))
-        }
-      }.toDF("corpus_id", "corpus_v", "cell")
-    Similarity.IvfPqAnn.encodeWith(assigned, ctrs, books, bs)
+    val assigned = Similarity.IvfPqAnn.assign(newCorpus.select(col(idCol).as("corpus_id"),
+      col(vecCol).cast("array<float>").as("corpus_v")), ctrs)
+    Similarity.IvfPqAnn.encode(assigned, ctrs, books, bs)
       .write.mode("append").parquet(s"$dir/codes")
   }
 

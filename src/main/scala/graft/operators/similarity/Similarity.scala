@@ -1,7 +1,7 @@
 package graft.operators.similarity
 
 import graft.operators.dedup.Dedup.EmbeddingDedup
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,6 +20,9 @@ import org.apache.spark.sql.functions._
   * keyed on (table, bucket) — O(rows × L), never O(rows²). Candidates
   * are verified with exact cosine, so buckets affect recall only,
   * never precision of the returned scores.
+  *
+  * [[IvfPqAnn]] is the one quantized index; [[IvfAnn]] (no PQ stage)
+  * and [[PqAnn]] (one cell) are settings of it.
   */
 object Similarity {
 
@@ -115,156 +118,35 @@ object Similarity {
          |ORDER BY query_id, rank""".stripMargin
   }
 
-  /** IVF (inverted-file) ANN: coarse-quantize the corpus into
-    * `nCells` k-means cells (driver-local Lloyd on L2-normalized
-    * vectors ≈ spherical k-means, fixed seed — the training sample is
-    * bounded, so distributed training would be per-iteration scheduler
-    * overhead with no scale benefit), then answer each query by probing
-    * only its `nProbe` nearest cells and exact-cosine-ranking the
-    * candidates inside them.
+  /** IVF (inverted-file) ANN — the no-PQ setting of the one index
+    * ([[IvfPqAnn]]): coarse-quantize the corpus into `nCells` k-means
+    * cells, then answer each query by probing only its `nProbe`
+    * nearest cells and exact-cosine-ranking every member of them.
     *
     * Scale shape: training touches a bounded sample; assignment is one
-    * map-side pass; the query-side shuffle is keyed on cell id —
-    * O(corpus) once + O(queries × nProbe × cellSize) scoring, never
-    * O(queries × corpus). The centroid table (nCells × dim) is tiny
-    * and broadcast. Recall is governed by nProbe — the standard IVF
-    * trade-off — and returned scores are always exact.
+    * map-side pass; the probed `(query, cell)` frame — nQueries ×
+    * nProbe rows carrying the query vectors — is joined on cell id to
+    * the assigned corpus, which carries its own vectors: O(corpus) once
+    * + O(queries × nProbe × cellSize) scoring, never O(queries ×
+    * corpus). Recall is governed by nProbe — the standard IVF trade-off
+    * — and returned scores are always exact.
     *
     * QUERY-SIDE SIZE CONTRACT: `queries` must be a bounded probe set
-    * (thousands, not the corpus) — [[topK]] broadcasts the probed
-    * query×cell frame unconditionally, so a corpus-sized query set
-    * fails at Spark's 8 GiB broadcast cap / driver memory. This is
-    * deliberate: both join legs exit typed kernels whose copied stats
-    * price array columns at `defaultSize`, so leaving the choice to
-    * the planner risks broadcasting the O(corpus) side instead (the
-    * exact 1000×-scale failure the minhash pipeline hit). For
-    * corpus-vs-corpus all-pairs similarity use
-    * [[graft.operators.dedup.Dedup.EmbeddingDedup]], whose joins are
-    * shuffle-shaped for two unbounded sides.
+    * (thousands, not the corpus) — [[topK]] collects it to the driver
+    * and broadcasts the probed query×cell frame unconditionally, so a
+    * corpus-sized query set fails at Spark's 8 GiB broadcast cap /
+    * driver memory. This is deliberate: the assigned corpus leg exits a
+    * typed kernel whose copied stats price array columns at
+    * `defaultSize`, so leaving the choice to the planner risks
+    * broadcasting the O(corpus) side instead (the exact 1000×-scale
+    * failure the minhash pipeline hit). For corpus-vs-corpus all-pairs
+    * similarity use [[graft.operators.dedup.Dedup.EmbeddingDedup]],
+    * whose joins are shuffle-shaped for two unbounded sides.
     */
   object IvfAnn {
-
-    val Seed = 42L
-    val MaxTrainRows = 100000L
     val DefaultCells = 32
     val DefaultProbe = 4
-
-    /** L2-normalized copy of a float vector. */
-    private[similarity] def normalized(v: Array[Float]): Array[Double] = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i); i += 1 }
-      val inv = if (s == 0) 0.0 else 1.0 / math.sqrt(s)
-      val out = new Array[Double](v.length)
-      i = 0
-      while (i < v.length) { out(i) = v(i) * inv; i += 1 }
-      out
-    }
-
-    /** Nearest centroid by squared Euclidean distance (lowest index on
-      * ties — deterministic).
-      */
-    private[similarity] def nearest(x: Array[Double], ctrs: Array[Array[Double]]): Int = {
-      var best = 0; var bestD = Double.MaxValue; var c = 0
-      while (c < ctrs.length) {
-        val ctr = ctrs(c)
-        var d = 0.0; var i = 0
-        while (i < x.length && i < ctr.length) {
-          val diff = x(i) - ctr(i); d += diff * diff; i += 1
-        }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      best
-    }
-
-    /** Plain Lloyd on the driver over the bounded training sample.
-      * Coarse quantization doesn't need converged centroids — `iters`
-      * rounds from a seeded random init give the same recall as a full
-      * MLlib fit, and because the sample is bounded (≤ maxTrain ×
-      * dim floats) by construction, training it ON THE DRIVER costs
-      * zero cluster jobs — versus one distributed pass per Lloyd round,
-      * which at any scale is scheduler overhead on a kilobyte-scale
-      * problem. Empty cells keep their previous centroid.
-      */
-    private[similarity] def lloyd(points: Array[Array[Double]], nCells: Int,
-                                  iters: Int, seed: Long): Array[Array[Double]] = {
-      val rng = new scala.util.Random(seed)
-      val k = math.min(nCells, points.length)
-      var ctrs = rng.shuffle(points.indices.toList).take(k)
-        .map(points(_).clone()).toArray
-      for (_ <- 1 to iters) {
-        val sums = Array.fill(k)(new Array[Double](points.head.length))
-        val counts = new Array[Long](k)
-        points.foreach { p =>
-          val c = nearest(p, ctrs)
-          counts(c) += 1
-          var i = 0
-          while (i < p.length) { sums(c)(i) += p(i); i += 1 }
-        }
-        ctrs = Array.tabulate(k) { c =>
-          if (counts(c) == 0) ctrs(c)
-          else sums(c).map(_ / counts(c))
-        }
-      }
-      ctrs
-    }
-
-    /** Train-and-assign (the corpus half of [[topK]], reusable by
-      * [[graft.operators.dedup.SemanticDedup]]): driver-local Lloyd on a
-      * value-selected bounded sample, then one map-side assignment pass.
-      * Returns `(corpus_id, corpus_v, cell)` plus the trained centroids.
-      */
-    private[graft] def assignCells(corpus: DataFrame, nCells: Int,
-                                   vecCol: String, idCol: String,
-                                   maxTrain: Long): (DataFrame, Array[Array[Double]]) = {
-      val (assigned, ctrs, _) = assignCellsSampled(corpus, nCells, vecCol, idCol, maxTrain)
-      (assigned, ctrs)
-    }
-
-    /** [[assignCells]] plus the normalized training sample it already
-      * collected — so a caller that needs the same value-hash sample
-      * (IVF-PQ residual training) doesn't re-scan the corpus for it
-      * (one count + one collect saved per build).
-      */
-    private[similarity] def assignCellsSampled(corpus: DataFrame, nCells: Int,
-                                   vecCol: String, idCol: String,
-                                   maxTrain: Long)
-        : (DataFrame, Array[Array[Double]], Array[Array[Double]]) = {
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      // accept any numeric array (array<double> from upstream UDFs or
-      // parquet written by another engine): an explicit cast to
-      // array<float> — the typed encoder alone rejects double arrays
-      val cDf = corpus.select(col(idCol).as("corpus_id"),
-        col(vecCol).cast("array<float>").as("corpus_v"))
-      val c = cDf.as[(Long, Array[Float])]
-      // training sample selected by VALUE (hash of the id), never by
-      // partition layout: limit()/sample() change contents when file
-      // splits shift, which would silently change trained centroids —
-      // and thus recall — between cluster runs over the same data.
-      // The count pass doubles as the dim/null validation (advice-r14:
-      // the encode/nearest loops carry min-length guards, so a
-      // dimension-drifted or null vector would otherwise be silently
-      // truncated/NPE'd) — one aggregate, zero extra corpus scans.
-      // Total corpus reads = stats-agg + sample-collect + assignment,
-      // versus one pass PER LLOYD ROUND for distributed training
-      val (n, _) = requireUniformVectors(cDf, "corpus_v", vecCol, "IVF train")
-      val train =
-        if (n <= maxTrain) c
-        else c.where(pmod(xxhash64(col("corpus_id")),
-          lit((n + maxTrain - 1) / maxTrain)) === 0)
-      // sorted by id after collect → centroids are independent of the
-      // cluster's partition/split arrangement
-      val sample = train.collect().sortBy(_._1).map(t => normalized(t._2))
-      val ctrs = lloyd(sample, nCells, iters = 8, seed = Seed)
-
-      // assignment: one map-side pass, JIT'd kernel, no shuffle — the
-      // centroid array (nCells × dim doubles) rides the task closure
-      val assigned = c.mapPartitions { it =>
-        it.map { case (id, v) => (id, v, nearest(normalized(v), ctrs)) }
-      }.toDF("corpus_id", "corpus_v", "cell")
-      (assigned, ctrs, sample)
-    }
+    val MaxTrainRows = 100000L
 
     def topK(corpus: DataFrame, queries: DataFrame, k: Int,
              nCells: Int = DefaultCells, nProbe: Int = DefaultProbe,
@@ -272,65 +154,8 @@ object Similarity {
              maxTrain: Long = MaxTrainRows,
              maxQueryBatch: Long = DefaultMaxQueryBatch): DataFrame = {
       requireBoundedQueries(queries, maxQueryBatch, "IvfAnn.topK")
-      val (assigned, ctrs) = assignCells(corpus, nCells, vecCol, idCol, maxTrain)
-      queryAssigned(assigned, ctrs, queries, k, nProbe, vecCol, idCol)
-    }
-
-    /** The query half of [[topK]] over an already-assigned `(corpus_id,
-      * corpus_v, cell)` frame — factored out (round 17) so
-      * [[Similarity.RecallReport]] can run several probe settings over
-      * ONE train+assign pass instead of rebuilding the identical seeded
-      * index per grid point. Exactly [[topK]]'s plan below the
-      * assignment.
-      */
-    private[similarity] def queryAssigned(assigned: DataFrame,
-                                          ctrs: Array[Array[Double]],
-                                          queries: DataFrame, k: Int, nProbe: Int,
-                                          vecCol: String, idCol: String): DataFrame =
-      CosineTopK.rankTopK(scoredCandidates(assigned, ctrs, queries, nProbe,
-        vecCol, idCol).drop("cell_rank"), k)
-
-    /** Exact-cosine-scored (query, corpus) candidates from the probed
-      * cells, with each candidate's probed-cell RANK attached
-      * (`cell_rank` — the rank()-over-(cosine desc, cell) position of
-      * the candidate's cell for that query). Filtering `cell_rank <= p`
-      * for any p <= nProbe yields exactly the candidate set a direct
-      * nProbe=p run scores, because rank values over the full centroid
-      * list do not change when the tail is later discarded — the
-      * sweep's shared-scan contract (AnnShareSpec pins the equivalence).
-      */
-    private[similarity] def scoredCandidates(assigned: DataFrame,
-                                             ctrs: Array[Array[Double]],
-                                             queries: DataFrame, nProbe: Int,
-                                             vecCol: String, idCol: String): DataFrame = {
-      val spark = assigned.sparkSession
-      // centroid table: tiny, broadcast into the query-side scoring
-      val centroids = spark.createDataFrame(
-        ctrs.zipWithIndex.map { case (ctr, i) =>
-          (i, ctr.map(_.toFloat))
-        }.toSeq).toDF("cell", "centroid")
-      val q = queries.select(col(idCol).as("query_id"),
-        col(vecCol).cast("array<float>").as("query_v"))
-      val probed = q.crossJoin(broadcast(centroids))
-        .withColumn("cdist", EmbeddingDedup.cosine(col("query_v"), col("centroid")))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id").orderBy(col("cdist").desc, col("cell"))
-      val cells = probed.withColumn("r", rank().over(w)).where(col("r") <= nProbe)
-        .select(col("query_id"), col("query_v"), col("cell"),
-          col("r").as("cell_rank"))
-
-      // every corpus vector lives in exactly one cell, so (query, vec)
-      // candidates are already unique — no dedup shuffle needed.
-      // broadcast the QUERY side explicitly (bounded at nQueries ×
-      // nProbe rows by construction, same pattern as CosineTopK.run):
-      // `assigned` flows through a typed kernel, whose copied stats
-      // price the embedding array at defaultSize, so leaving the choice
-      // to the planner risks broadcasting the O(corpus) side — the
-      // 8 GiB-cap failure mode the minhash pipeline hit at 1000×
-      broadcast(cells).join(assigned, Seq("cell"))
-        .where(col("query_id") =!= col("corpus_id"))
-        .withColumn("cos_raw", EmbeddingDedup.cosine(col("query_v"), col("corpus_v")))
-        .withColumnRenamed("corpus_id", "vec_id")
+      IvfPqAnn.queryAssigned(IvfPqAnn.assignCells(corpus, nCells, vecCol, idCol, maxTrain),
+        queries, k, nProbe, vecCol, idCol)
     }
   }
 
@@ -422,290 +247,90 @@ object Similarity {
   }
 
   /** Product-quantization ANN (Jégou et al. 2011, "Product quantization
-    * for nearest neighbor search"): split each L2-normalized vector
-    * into `m` subspaces, k-means each subspace to `ksub` centroids
-    * (driver-local on the same bounded value-hash sample as [[IvfAnn]]),
-    * and store each corpus vector as `m` byte codes — at dim=64/m=8
-    * that is 8 bytes instead of 256, the 32× compression that lets a
-    * 100 TB embedding corpus's index live in executor memory where the
-    * raw vectors cannot.
+    * for nearest neighbor search") — the one-cell setting of the one
+    * index: [[IvfPqAnn]] with `nCells = 1, nProbe = 1`. Each
+    * L2-normalized vector's residual against the corpus sample mean
+    * (the single centroid) is split into `m` subspaces and stored as
+    * `m` byte codes — at dim=64/m=8 that is 8 bytes instead of 256, the
+    * 32× compression that lets a 100 TB embedding corpus's index live
+    * in executor memory where the raw vectors cannot.
     *
-    * Query path: asymmetric distance computation (ADC) — per query, one
-    * `m × ksub` lookup table of subspace dots; scoring a corpus code is
-    * `m` table lookups instead of `dim` multiply-adds. The ADC pass
-    * ranks codes only (the original vectors are NOT carried through
-    * scoring — that would defeat the compression), keeps the top
-    * `refine × k` per query (WindowGroupLimit partial top-k), then ONE
-    * broadcast join of that bounded candidate set back to the corpus
-    * re-ranks with exact cosine. Returned scores are always exact;
-    * `m`/`ksub`/`refine` govern recall only.
+    * Query path: asymmetric distance computation (ADC) over the codes,
+    * the top `refine × k` per query, then an exact re-rank — returned
+    * scores are always exact; `m`/`ksub`/`refine` govern recall only.
     *
-    * QUERY-SIDE SIZE CONTRACT: same as [[IvfAnn]] — `queries` is a
-    * bounded probe set; it rides the ADC task closure and the candidate
-    * set is broadcast by construction.
+    * QUERY-SIDE SIZE CONTRACT: same as [[IvfPqAnn]].
     */
   object PqAnn {
-    val Seed = 4242L
     val DefaultM = 8
     val DefaultKsub = 16
     val DefaultRefine = 4
     val MaxTrainRows = 100000L
-
-    /** Subspace slice boundaries: m near-equal spans of `dim`. */
-    private[similarity] def bounds(dim: Int, m: Int): Array[(Int, Int)] = {
-      val mm = math.min(m, dim)
-      Array.tabulate(mm) { j =>
-        (j * dim / mm, (j + 1) * dim / mm)
-      }
-    }
-
-    /** Train per-subspace codebooks on a bounded, value-selected,
-      * id-sorted sample (layout-independent — same discipline as
-      * [[IvfAnn.assignCells]]). Returns `codebooks(j)(code)` = centroid
-      * of subspace j, plus the slice bounds.
-      */
-    private[graft] def train(corpus: DataFrame, m: Int, ksub: Int,
-                             vecCol: String, idCol: String,
-                             maxTrain: Long): (Array[Array[Array[Double]]], Array[(Int, Int)]) = {
-      // codes are stored as bytes and read back with `& 0xff` — a ksub
-      // above 256 would silently alias distinct centroids onto the same
-      // code (garbage ADC ranking the exact re-rank then hides)
-      require(m >= 1 && ksub >= 2 && ksub <= 256,
-        s"PQ needs 1 <= m and 2 <= ksub <= 256 (byte codes), got m=$m ksub=$ksub")
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      val cDf = corpus.select(col(idCol), col(vecCol).cast("array<float>").as(vecCol))
-      val c = cDf.as[(Long, Array[Float])]
-      // count pass doubles as the dim/null validation (advice-r14) —
-      // build now fails as loudly as IvfPqIndex.append does
-      val (n, _) = requireUniformVectors(cDf, vecCol, vecCol, "PQ train")
-      val sampleDs =
-        if (n <= maxTrain) c
-        else c.where(pmod(xxhash64(col(idCol)),
-          lit((n + maxTrain - 1) / maxTrain)) === 0)
-      val sample = sampleDs.collect().sortBy(_._1).map(t => normalize01(t._2))
-      trainBooks(sample, m, ksub)
-    }
-
-    /** Codebook training from an ALREADY-collected normalized id-sorted
-      * sample — factored out (round 17) so [[Similarity.RecallReport]]
-      * can train several ksub settings from ONE sample collect (the
-      * sample is identical across ksub values by construction: same
-      * value-hash selection, same normalization, same id sort).
-      */
-    private[similarity] def trainBooks(sample: Array[Array[Double]], m: Int,
-                                       ksub: Int): (Array[Array[Array[Double]]], Array[(Int, Int)]) = {
-      require(m >= 1 && ksub >= 2 && ksub <= 256,
-        s"PQ needs 1 <= m and 2 <= ksub <= 256 (byte codes), got m=$m ksub=$ksub")
-      require(sample.nonEmpty, "PQ training needs a non-empty corpus")
-      val dim = sample.head.length
-      val bs = bounds(dim, m)
-      val books = bs.zipWithIndex.map { case ((from, until), j) =>
-        val sub = sample.map(v => java.util.Arrays.copyOfRange(v, from, until))
-        IvfAnn.lloyd(sub, ksub, iters = 8, seed = Seed + j)
-      }
-      (books, bs)
-    }
-
-    /** L2-normalize to double (cosine ⇒ plain dot after this). */
-    private[similarity] def normalize01(v: Array[Float]): Array[Double] = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i); i += 1 }
-      val inv = if (s == 0) 0.0 else 1.0 / math.sqrt(s)
-      val out = new Array[Double](v.length)
-      i = 0
-      while (i < v.length) { out(i) = v(i) * inv; i += 1 }
-      out
-    }
-
-    /** Map-side encode: `(vec_id, codes)` — the compressed index. */
-    private[graft] def encode(corpus: DataFrame,
-                              books: Array[Array[Array[Double]]],
-                              bs: Array[(Int, Int)],
-                              vecCol: String, idCol: String): DataFrame = {
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      corpus.select(col(idCol), col(vecCol).cast("array<float>"))
-        .as[(Long, Array[Float])]
-        .mapPartitions { it =>
-          it.map { case (id, v) =>
-            val x = normalize01(v)
-            val codes = new Array[Byte](bs.length)
-            var j = 0
-            while (j < bs.length) {
-              val (from, until) = bs(j)
-              val book = books(j)
-              var best = 0; var bestD = Double.MaxValue; var cIdx = 0
-              while (cIdx < book.length) {
-                val ctr = book(cIdx)
-                var d = 0.0; var i = from
-                while (i < until && i < x.length) {
-                  val diff = x(i) - ctr(i - from); d += diff * diff; i += 1
-                }
-                if (d < bestD) { bestD = d; best = cIdx }
-                cIdx += 1
-              }
-              codes(j) = best.toByte
-              j += 1
-            }
-            (id, codes)
-          }
-        }.toDF("vec_id", "codes")
-    }
 
     def topK(corpus: DataFrame, queries: DataFrame, k: Int,
              m: Int = DefaultM, ksub: Int = DefaultKsub,
              refine: Int = DefaultRefine,
              vecCol: String = "embedding", idCol: String = "vec_id",
              maxTrain: Long = MaxTrainRows,
-             maxQueryBatch: Long = DefaultMaxQueryBatch): DataFrame = {
-      requireBoundedQueries(queries, maxQueryBatch, "PqAnn.topK")
-      val (books, bs) = train(corpus, m, ksub, vecCol, idCol, maxTrain)
-      val coded = encode(corpus, books, bs, vecCol, idCol)
-      queryCoded(coded, books, bs, corpus, queries, k, refine, vecCol, idCol)
-    }
-
-    /** Driver-collected normalized id-sorted query array — the form the
-      * ADC task closure consumes. Bounded by the query-side contract.
-      */
-    private[similarity] def collectQueries(queries: DataFrame, vecCol: String,
-                                           idCol: String): Array[(Long, Array[Double])] = {
-      val spark = queries.sparkSession
-      import spark.implicits._
-      queries.select(col(idCol), col(vecCol).cast("array<float>"))
-        .as[(Long, Array[Float])].collect().sortBy(_._1)
-        .map { case (id, v) => (id, normalize01(v)) }
-    }
-
-    /** ADC scores for every (query, corpus-code) pair: per partition,
-      * each query precomputes its m × ksub LUT once, then every corpus
-      * code costs `m` lookups — the ADC inner loop never touches a raw
-      * vector. Factored out of [[topK]] (round 17) for the shared-build
-      * sweep path.
-      */
-    private[similarity] def adcScores(coded: DataFrame,
-                                      books: Array[Array[Array[Double]]],
-                                      bs: Array[(Int, Int)],
-                                      qArr: Array[(Long, Array[Double])]): DataFrame = {
-      val spark = coded.sparkSession
-      import spark.implicits._
-      coded.as[(Long, Array[Byte])].mapPartitions { it =>
-        val luts = qArr.map { case (qid, q) =>
-          val lut = Array.ofDim[Double](bs.length, books(0).length)
-          var j = 0
-          while (j < bs.length) {
-            val (from, until) = bs(j)
-            var cIdx = 0
-            while (cIdx < books(j).length) {
-              var dot = 0.0; var i = from
-              val ctr = books(j)(cIdx)
-              while (i < until && i < q.length) { dot += q(i) * ctr(i - from); i += 1 }
-              lut(j)(cIdx) = dot
-              cIdx += 1
-            }
-            j += 1
-          }
-          (qid, lut)
-        }
-        it.flatMap { case (id, codes) =>
-          luts.iterator.collect { case (qid, lut) if qid != id =>
-            var s = 0.0; var j = 0
-            while (j < codes.length) { s += lut(j)(codes(j) & 0xff); j += 1 }
-            (qid, id, s)
-          }
-        }
-      }.toDF("query_id", "vec_id", "adc")
-    }
-
-    /** The query half of [[topK]] over an already-encoded `(vec_id,
-      * codes)` frame — factored out (round 17) so the sweep can reuse
-      * one train+encode across its refine grid. Exactly [[topK]]'s plan
-      * below the encode.
-      */
-    private[similarity] def queryCoded(coded: DataFrame,
-                                       books: Array[Array[Array[Double]]],
-                                       bs: Array[(Int, Int)],
-                                       corpus: DataFrame, queries: DataFrame,
-                                       k: Int, refine: Int,
-                                       vecCol: String, idCol: String): DataFrame = {
-      // bounded probe set rides the closure
-      val qArr = collectQueries(queries, vecCol, idCol)
-      val adc = adcScores(coded, books, bs, qArr)
-
-      // partial top-(refine·k) per query — WindowGroupLimit keeps it
-      // map-side; this is the ONLY shuffle over corpus-derived rows
-      val wAdc = Window.partitionBy("query_id").orderBy(col("adc").desc, col("vec_id"))
-      val cands = adc.withColumn("r", rank().over(wAdc))
-        .where(col("r") <= refine * k).select("query_id", "vec_id")
-      rerank(cands, corpus, queries, k, vecCol, idCol)
-    }
-
-    /** Exact re-rank: the bounded candidate set broadcast against the
-      * corpus (explicit — the planner sees defaultSize-priced arrays on
-      * the corpus leg, the IvfAnn rationale).
-      */
-    private[similarity] def rerank(cands: DataFrame, corpus: DataFrame,
-                                   queries: DataFrame, k: Int,
-                                   vecCol: String, idCol: String): DataFrame =
-      CosineTopK.rankTopK(rerankScored(cands, corpus, queries, vecCol, idCol), k)
-
-    /** The exact-cosine scoring half of [[rerank]] without the final
-      * top-k, so the sweep can score one max-refine candidate pool and
-      * derive every smaller pool's ranking from it (extra columns on
-      * `cands` — e.g. the ADC rank — are carried through).
-      */
-    private[similarity] def rerankScored(cands: DataFrame, corpus: DataFrame,
-                                         queries: DataFrame,
-                                         vecCol: String, idCol: String): DataFrame = {
-      val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("query_v"))
-      broadcast(cands).join(
-          corpus.select(col(idCol).as("vec_id"), col(vecCol).as("corpus_v")),
-          Seq("vec_id"))
-        .join(broadcast(q), Seq("query_id"))
-        .withColumn("cos_raw", EmbeddingDedup.cosine(col("query_v"), col("corpus_v")))
-    }
+             maxQueryBatch: Long = DefaultMaxQueryBatch): DataFrame =
+      IvfPqAnn.topK(corpus, queries, k, nCells = 1, nProbe = 1, m = m, ksub = ksub,
+        refine = refine, vecCol = vecCol, idCol = idCol, maxTrain = maxTrain,
+        maxQueryBatch = maxQueryBatch)
   }
 
   /** IVF-PQ ANN (Jégou et al. 2011 §IV, "IVFADC: coarse quantizer +
-    * product quantization of RESIDUALS"): coarse-quantize the corpus
-    * into `nCells` cells ([[IvfAnn.assignCells]]), then PQ-encode each
-    * vector's residual (normalized vector MINUS its cell centroid).
+    * product quantization of RESIDUALS") — the one quantized index.
+    * [[IvfAnn]] is its no-PQ setting (every probed member scored
+    * exactly) and [[PqAnn]] its one-cell setting.
     *
-    * When residuals win — MEASURED, two regimes (BENCH_SF100.md round
-    * 14): when the clusters assigned to one coarse cell outnumber the
-    * codebook's resolution, absolute-position PQ collapses whole
-    * clusters onto shared codes and residual coding genuinely
-    * discriminates — AnnSweepSpec's isolated test (probe effect held
-    * fixed, equal candidate budget) pins residual ADC beating absolute
-    * ADC in exactly this regime, the paper's SIFT-style many-diverse-
-    * neighborhoods case. But when ONE cluster's member count dwarfs
-    * refine·k and its radius sits below code resolution (sf100-gauss:
-    * 7,800-member Gaussians), NEITHER quantizer can rank inside the
-    * cluster: plain PQ's members share codes and its tie-block fills
-    * the candidate pool with true-cluster members (recall 0.50 at
-    * refine=256), while residual codes break the ties with noise-
-    * dominated fine structure that interleaves other clusters into
-    * the pool (0.24) — in that regime prefer [[IvfAnn]] (exact in-cell
-    * scoring, 1.0 at nProbe=1 there) or embedding DEDUP, which is what
-    * a 7,800-member near-identical ball actually calls for.
+    * Build: [[assignCells]] validates the vectors, collects a bounded
+    * value-hash training sample, trains the coarse centroids with
+    * driver-local Lloyd and assigns every vector in one map-side pass
+    * ([[assign]]). The optional PQ stage trains residual codebooks on
+    * the same sample ([[trainBooks]]) and codes each vector's residual
+    * (normalized vector MINUS its cell centroid) as m bytes
+    * ([[encode]]).
     *
-    * Query path: probe the `nProbe` nearest cells; the ADC estimate of
-    * dot(q, x) decomposes as dot(q, centroid(cell)) — one scalar per
-    * probed cell — plus Σⱼ dot(qⱼ, residual_codebookⱼ[codeⱼ]) — one
-    * m × ksub LUT per query, CELL-INDEPENDENT (residual codebooks are
-    * shared across cells), so the per-row cost is m lookups + one
-    * scalar add, identical to plain ADC. Rows outside the probed cells
-    * are skipped with one hash-set check. Top refine·k per query
-    * (WindowGroupLimit partial top-k) then exact re-rank — returned
-    * scores are always exact; nCells/nProbe/m/ksub/refine govern
-    * recall only.
+    * Query: one driver-side probe list per query ([[probeData]]) names
+    * its `nProbe` nearest cells. Without the PQ stage every member of
+    * those cells is scored exactly ([[scoredCandidates]]). With it, the
+    * ADC estimate of dot(q, x) decomposes as dot(q, centroid(cell)) —
+    * one scalar per probed cell — plus Σⱼ dot(qⱼ,
+    * residual_codebookⱼ[codeⱼ]) — one m × ksub LUT per query,
+    * CELL-INDEPENDENT (residual codebooks are shared across cells), so
+    * the per-row cost is m lookups + one scalar add ([[adcScores]]).
+    * Rows outside the probed cells are skipped with one hash-set check.
+    * Top refine·k per query (WindowGroupLimit partial top-k) then exact
+    * re-rank ([[rerankScored]]) — returned scores are always exact;
+    * nCells/nProbe/m/ksub/refine govern recall only.
+    *
+    * When per-cell residuals win — MEASURED, two regimes (BENCH_SF100.md
+    * round 14): when the clusters assigned to one coarse cell outnumber
+    * the codebook's resolution, coding against one global reference
+    * collapses whole clusters onto shared codes and per-cell residual
+    * coding genuinely discriminates — AnnSweepSpec's isolated test
+    * (probe effect held fixed, equal candidate budget) pins 32-cell
+    * ADC beating the one-cell setting in exactly this regime, the
+    * paper's SIFT-style many-diverse-neighborhoods case. But when ONE
+    * cluster's member count dwarfs refine·k and its radius sits below
+    * code resolution (sf100-gauss: 7,800-member Gaussians), NEITHER
+    * coding can rank inside the cluster: globally coded members share
+    * codes and their tie-block fills the candidate pool with
+    * true-cluster members (recall 0.50 at refine=256, measured with
+    * round 14's absolute-position PQ), while residual codes break the
+    * ties with noise-dominated fine structure that interleaves other
+    * clusters into the pool (0.24) — in that regime prefer the no-PQ
+    * setting ([[IvfAnn]]: exact in-cell scoring, 1.0 at nProbe=1 there)
+    * or embedding DEDUP, which is what a 7,800-member near-identical
+    * ball actually calls for.
     *
     * Scale shape: train on the bounded value-hash sample; encode is
     * one map-side pass; ADC is one map-side pass over (cell, codes)
-    * rows (8 bytes + a cell id per vector — the same 32× compression
-    * as [[PqAnn]]); the only corpus-derived shuffle is the partial
-    * top-k. QUERY-SIDE SIZE CONTRACT: same as [[PqAnn]] — the probe
-    * set rides the task closure.
+    * rows (8 bytes + a cell id per vector); the only corpus-derived
+    * shuffle is the partial top-k. QUERY-SIDE SIZE CONTRACT: `queries`
+    * is a bounded probe set — it is collected to the driver, rides the
+    * ADC task closure, and the re-rank candidate set is broadcast by
+    * construction.
     */
   object IvfPqAnn {
     val DefaultCells = IvfAnn.DefaultCells
@@ -715,70 +340,195 @@ object Similarity {
     val DefaultRefine = PqAnn.DefaultRefine
     val MaxTrainRows = PqAnn.MaxTrainRows
 
-    /** Train residual codebooks over the bounded value-hash sample
-      * (assigned by the SAME centroids the corpus uses) and PQ-encode
-      * every corpus vector's residual.
-      * Returns (`(vec_id, cell, codes)`, centroids, codebooks, bounds).
+    /** Coarse Lloyd seed; residual codebook j trains with `BookSeed + j`. */
+    private val Seed = 42L
+    private val BookSeed = 5242L
+
+    /** A trained coarse quantizer: the assigned corpus `(corpus_id,
+      * corpus_v, cell)`, its centroids, and the normalized id-sorted
+      * training sample they came from (the PQ stage trains on the same
+      * sample, so nothing re-scans the corpus for it).
       */
-    private[graft] def trainAndEncode(corpus: DataFrame, nCells: Int, m: Int,
-                                      ksub: Int, vecCol: String, idCol: String,
-                                      maxTrain: Long)
-        : (DataFrame, Array[Array[Double]], Array[Array[Array[Double]]], Array[(Int, Int)]) = {
-      require(m >= 1 && ksub >= 2 && ksub <= 256,
-        s"IVF-PQ needs 1 <= m and 2 <= ksub <= 256 (byte codes), got m=$m ksub=$ksub")
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      // residual training reuses the SAME normalized value-hash sample
-      // assignCells already collected (code-review r14: the first cut
-      // re-ran the count + collect — two redundant full-corpus passes
-      // per build)
-      val (assigned, ctrs, sample) =
-        IvfAnn.assignCellsSampled(corpus, nCells, vecCol, idCol, maxTrain)
-      val (books, bs) = trainResidualBooks(sample, ctrs, m, ksub)
-      val coded = encodeWith(assigned, ctrs, books, bs)
-      (coded, ctrs, books, bs)
+    private[graft] final case class Cells(assigned: DataFrame,
+                                          ctrs: Array[Array[Double]],
+                                          sample: Array[Array[Double]])
+
+    /** One query's probe list: its id, raw vector (the exact scorer's
+      * input), L2-normalized vector (the ADC table's input) and its
+      * probed cells in probe order, each with dot(q, centroid).
+      */
+    private[similarity] final case class Probe(id: Long, v: Array[Float], q: Array[Double],
+                                               cells: Array[(Int, Double)])
+
+    /** L2-normalized copy of a float vector (cosine ⇒ plain dot after this). */
+    private[similarity] def normalized(v: Array[Float]): Array[Double] = {
+      var s = 0.0; var i = 0
+      while (i < v.length) { s += v(i).toDouble * v(i); i += 1 }
+      val inv = if (s == 0) 0.0 else 1.0 / math.sqrt(s)
+      val out = new Array[Double](v.length)
+      i = 0
+      while (i < v.length) { out(i) = v(i) * inv; i += 1 }
+      out
     }
 
-    /** Residual codebook training from an ALREADY-collected normalized
-      * id-sorted sample and its coarse centroids — factored out (round
-      * 17) so [[Similarity.RecallReport]] can train several ksub
-      * settings from ONE sample collect + ONE coarse training.
+    /** Nearest centroid by squared Euclidean distance (lowest index on
+      * ties — deterministic).
       */
-    private[similarity] def trainResidualBooks(sample: Array[Array[Double]],
-                                               ctrs: Array[Array[Double]],
-                                               m: Int, ksub: Int)
+    private[similarity] def nearest(x: Array[Double], ctrs: Array[Array[Double]]): Int = {
+      var best = 0; var bestD = Double.MaxValue; var c = 0
+      while (c < ctrs.length) {
+        val ctr = ctrs(c)
+        var d = 0.0; var i = 0
+        while (i < x.length && i < ctr.length) {
+          val diff = x(i) - ctr(i); d += diff * diff; i += 1
+        }
+        if (d < bestD) { bestD = d; best = c }
+        c += 1
+      }
+      best
+    }
+
+    /** Plain Lloyd on the driver over the bounded training sample.
+      * Coarse quantization doesn't need converged centroids — `iters`
+      * rounds from a seeded random init give the same recall as a full
+      * MLlib fit, and because the sample is bounded (≤ maxTrain ×
+      * dim floats) by construction, training it ON THE DRIVER costs
+      * zero cluster jobs — versus one distributed pass per Lloyd round,
+      * which at any scale is scheduler overhead on a kilobyte-scale
+      * problem. Empty cells keep their previous centroid.
+      */
+    private[similarity] def lloyd(points: Array[Array[Double]], nCells: Int,
+                                  iters: Int, seed: Long): Array[Array[Double]] = {
+      val rng = new scala.util.Random(seed)
+      val k = math.min(nCells, points.length)
+      var ctrs = rng.shuffle(points.indices.toList).take(k)
+        .map(points(_).clone()).toArray
+      for (_ <- 1 to iters) {
+        val sums = Array.fill(k)(new Array[Double](points.head.length))
+        val counts = new Array[Long](k)
+        points.foreach { p =>
+          val c = nearest(p, ctrs)
+          counts(c) += 1
+          var i = 0
+          while (i < p.length) { sums(c)(i) += p(i); i += 1 }
+        }
+        ctrs = Array.tabulate(k) { c =>
+          if (counts(c) == 0) ctrs(c)
+          else sums(c).map(_ / counts(c))
+        }
+      }
+      ctrs
+    }
+
+    /** The build: one validation aggregate, one value-selected bounded
+      * sample collect, driver Lloyd, one assignment pass. Returns the
+      * trained [[Cells]]; reused by [[graft.operators.dedup.SemanticDedup]].
+      */
+    private[graft] def assignCells(corpus: DataFrame, nCells: Int,
+                                   vecCol: String, idCol: String,
+                                   maxTrain: Long): Cells = {
+      val spark = corpus.sparkSession
+      import spark.implicits._
+      // accept any numeric array (array<double> from upstream UDFs or
+      // parquet written by another engine): an explicit cast to
+      // array<float> — the typed encoder alone rejects double arrays
+      val cDf = corpus.select(col(idCol).as("corpus_id"),
+        col(vecCol).cast("array<float>").as("corpus_v"))
+      // training sample selected by VALUE (hash of the id), never by
+      // partition layout: limit()/sample() change contents when file
+      // splits shift, which would silently change trained centroids —
+      // and thus recall — between cluster runs over the same data.
+      // The count pass doubles as the dim/null validation (advice-r14:
+      // the encode/nearest loops carry min-length guards, so a
+      // dimension-drifted or null vector would otherwise be silently
+      // truncated/NPE'd) — one aggregate, zero extra corpus scans.
+      // Total corpus reads = stats-agg + sample-collect + assignment,
+      // versus one pass PER LLOYD ROUND for distributed training
+      val (n, _) = requireUniformVectors(cDf, "corpus_v", vecCol, "IVF train")
+      val train =
+        if (n <= maxTrain) cDf
+        else cDf.where(pmod(xxhash64(col("corpus_id")),
+          lit((n + maxTrain - 1) / maxTrain)) === 0)
+      // sorted by id after collect → centroids are independent of the
+      // cluster's partition/split arrangement
+      val sample = train.as[(Long, Array[Float])].collect().sortBy(_._1)
+        .map(t => normalized(t._2))
+      cellsFrom(cDf, sample, nCells)
+    }
+
+    /** Coarse training from an already-collected sample plus the
+      * assignment of `vectors` `(corpus_id, corpus_v)` — how a report
+      * builds a second cell count (the one-cell PQ setting) from the
+      * sample and vectors it already holds, without a corpus scan.
+      */
+    private[similarity] def cellsFrom(vectors: DataFrame, sample: Array[Array[Double]],
+                                      nCells: Int): Cells = {
+      val ctrs = lloyd(sample, nCells, iters = 8, seed = Seed)
+      Cells(assign(vectors, ctrs), ctrs, sample)
+    }
+
+    /** The assignment kernel: one map-side pass giving each `(corpus_id,
+      * corpus_v)` row its nearest centroid's cell — JIT'd, no shuffle;
+      * the centroid array (nCells × dim doubles) rides the task closure.
+      */
+    private[similarity] def assign(vectors: DataFrame, ctrs: Array[Array[Double]]): DataFrame = {
+      val spark = vectors.sparkSession
+      import spark.implicits._
+      vectors.as[(Long, Array[Float])].mapPartitions { it =>
+        it.map { case (id, v) => (id, v, nearest(normalized(v), ctrs)) }
+      }.toDF("corpus_id", "corpus_v", "cell")
+    }
+
+    /** Subspace slice boundaries: m near-equal spans of `dim`. */
+    private def bounds(dim: Int, m: Int): Array[(Int, Int)] = {
+      val mm = math.min(m, dim)
+      Array.tabulate(mm) { j =>
+        (j * dim / mm, (j + 1) * dim / mm)
+      }
+    }
+
+    /** Residual codebooks: per subspace, Lloyd over the normalized
+      * id-sorted sample's residuals against their nearest centroid.
+      * Returns `books(j)(code)` = centroid of subspace j, plus the slice
+      * bounds.
+      */
+    private[similarity] def trainBooks(sample: Array[Array[Double]],
+                                       ctrs: Array[Array[Double]],
+                                       m: Int, ksub: Int)
         : (Array[Array[Array[Double]]], Array[(Int, Int)]) = {
+      // codes are stored as bytes and read back with `& 0xff` — a ksub
+      // above 256 would silently alias distinct centroids onto the same
+      // code (garbage ADC ranking the exact re-rank then hides)
       require(m >= 1 && ksub >= 2 && ksub <= 256,
         s"IVF-PQ needs 1 <= m and 2 <= ksub <= 256 (byte codes), got m=$m ksub=$ksub")
+      require(sample.nonEmpty, "IVF-PQ training needs a non-empty corpus")
       val residuals = sample.map { x =>
-        val ctr = ctrs(IvfAnn.nearest(x, ctrs))
+        val ctr = ctrs(nearest(x, ctrs))
         Array.tabulate(x.length)(i => x(i) - (if (i < ctr.length) ctr(i) else 0.0))
       }
-      require(residuals.nonEmpty, "IVF-PQ training needs a non-empty corpus")
-      val dim = residuals.head.length
-      val bs = PqAnn.bounds(dim, m)
+      val bs = bounds(residuals.head.length, m)
       val books = bs.zipWithIndex.map { case ((from, until), j) =>
         val sub = residuals.map(r => java.util.Arrays.copyOfRange(r, from, until))
-        IvfAnn.lloyd(sub, ksub, iters = 8, seed = PqAnn.Seed + 1000 + j)
+        lloyd(sub, ksub, iters = 8, seed = BookSeed + j)
       }
       (books, bs)
     }
 
-    /** Encode an assigned `(id, vec, cell)` frame against EXISTING
+    /** Encode an assigned `(id, vec, cell)` frame against the given
       * centroids/codebooks — one map-side pass, residual against the
       * row's own cell centroid, nearest codebook entry per subspace.
-      * Factored out so a persisted index ([[IvfPqIndex]]) can append
-      * new vectors without retraining.
+      * A persisted index ([[IvfPqIndex]]) appends new vectors through
+      * it without retraining.
       */
-    private[similarity] def encodeWith(assigned: DataFrame,
-                                       ctrs: Array[Array[Double]],
-                                       books: Array[Array[Array[Double]]],
-                                       bs: Array[(Int, Int)]): DataFrame = {
+    private[similarity] def encode(assigned: DataFrame,
+                                   ctrs: Array[Array[Double]],
+                                   books: Array[Array[Array[Double]]],
+                                   bs: Array[(Int, Int)]): DataFrame = {
       val spark = assigned.sparkSession
       import spark.implicits._
       assigned.as[(Long, Array[Float], Int)].mapPartitions { it =>
         it.map { case (id, v, cell) =>
-          val x = PqAnn.normalize01(v)
+          val x = normalized(v)
           val ctr = ctrs(cell)
           val codes = new Array[Byte](bs.length)
           var j = 0
@@ -804,20 +554,42 @@ object Similarity {
       }.toDF("vec_id", "cell", "codes")
     }
 
-    /** Per query, driver-side (bounded): the `nProbe` nearest cells by
-      * cosine (desc, cell-asc tie-break — IvfAnn's probe ordering) in
-      * PROBE ORDER with their raw dot scalars, and the residual LUT.
-      * The probe list for any p <= nProbe is exactly this list's first
-      * p entries (`take` over one deterministic sort), which is what
-      * lets the sweep scan once at the max probe setting and derive
-      * every smaller setting — AnnShareSpec pins the equivalence.
+    /** Build with the PQ stage: [[assignCells]], residual codebooks from
+      * its sample, and the encode pass. Returns (`(vec_id, cell,
+      * codes)`, centroids, codebooks, bounds).
       */
-    private[similarity] def probeData(qArr: Array[(Long, Array[Double])],
-                                      ctrs: Array[Array[Double]],
-                                      books: Array[Array[Array[Double]]],
-                                      bs: Array[(Int, Int)], nProbe: Int)
-        : Array[(Long, Array[(Int, Double)], Array[Array[Double]])] =
-      qArr.map { case (qid, q) =>
+    private[graft] def trainAndEncode(corpus: DataFrame, nCells: Int, m: Int,
+                                      ksub: Int, vecCol: String, idCol: String,
+                                      maxTrain: Long)
+        : (DataFrame, Array[Array[Double]], Array[Array[Array[Double]]], Array[(Int, Int)]) = {
+      val cells = assignCells(corpus, nCells, vecCol, idCol, maxTrain)
+      val (books, bs) = trainBooks(cells.sample, cells.ctrs, m, ksub)
+      (encode(cells.assigned, cells.ctrs, books, bs), cells.ctrs, books, bs)
+    }
+
+    /** Driver-collected id-sorted query vectors. Bounded by the
+      * query-side contract.
+      */
+    private[similarity] def collectQueries(queries: DataFrame, vecCol: String,
+                                           idCol: String): Array[(Long, Array[Float])] = {
+      val spark = queries.sparkSession
+      import spark.implicits._
+      queries.select(col(idCol), col(vecCol).cast("array<float>"))
+        .as[(Long, Array[Float])].collect().sortBy(_._1)
+    }
+
+    /** Per query, driver-side (bounded): the `nProbe` nearest cells by
+      * cosine (desc, cell-asc tie-break) in PROBE ORDER with their raw
+      * dot scalars. The probe list for any p <= nProbe is exactly this
+      * list's first p entries (`take` over one deterministic sort),
+      * which is what lets the sweep scan once at the max probe setting
+      * and derive every smaller setting — AnnShareSpec pins the
+      * equivalence.
+      */
+    private[similarity] def probeData(qs: Array[(Long, Array[Float])],
+                                      ctrs: Array[Array[Double]], nProbe: Int): Array[Probe] =
+      qs.map { case (qid, v) =>
+        val q = normalized(v)
         val cos = ctrs.indices.map { cIdx =>
           val ctr = ctrs(cIdx)
           var dot = 0.0; var nc = 0.0; var nq = 0.0; var i = 0
@@ -826,40 +598,53 @@ object Similarity {
           }
           (cIdx, dot, dot / math.sqrt(nc * nq)) // (cell, rawDot, cosine)
         }
-        val probed = cos.filterNot(_._3.isNaN)
-          .sortBy { case (cIdx, _, cs) => (-cs, cIdx) }.take(nProbe)
-          .map { case (cIdx, dot, _) => (cIdx, dot) }.toArray
-        val lut = Array.ofDim[Double](bs.length, books(0).length)
-        var j = 0
-        while (j < bs.length) {
-          val (from, until) = bs(j)
-          var cIdx = 0
-          while (cIdx < books(j).length) {
-            var dot = 0.0; var i = from
-            val bk = books(j)(cIdx)
-            while (i < until && i < q.length) { dot += q(i) * bk(i - from); i += 1 }
-            lut(j)(cIdx) = dot
-            cIdx += 1
-          }
-          j += 1
-        }
-        (qid, probed, lut)
+        // a zero-norm centroid (or query) has a NaN cosine: it sorts
+        // after every real cell instead of being dropped — the one-cell
+        // setting over a zero-mean corpus must still probe its only cell
+        val probed = cos.sortBy { case (cIdx, _, cs) => (cs.isNaN, -cs, cIdx) }
+          .take(nProbe).map { case (cIdx, dot, _) => (cIdx, dot) }.toArray
+        Probe(qid, v, q, probed)
       }
 
-    /** The ADC pass with each row's probed-cell RANK attached
-      * (`cell_rank` = 1-based position of the row's cell in the query's
-      * probe order): filtering `cell_rank <= p` reproduces a direct
-      * nProbe=p ADC scan exactly, because the ADC value (cell dot +
-      * LUT sum) is independent of how many cells are probed. Built for
-      * the sweep's shared-scan path (round 17).
+    /** One normalized query's m × ksub ADC table: its subspace dots
+      * against every codebook entry.
       */
-    private[similarity] def adcScoresWithRank(coded: DataFrame,
-                                              probes: Array[(Long, Array[(Int, Double)], Array[Array[Double]])])
-        : DataFrame = {
+    private def lut(q: Array[Double], books: Array[Array[Array[Double]]],
+                    bs: Array[(Int, Int)]): Array[Array[Double]] = {
+      val t = Array.ofDim[Double](bs.length, books(0).length)
+      var j = 0
+      while (j < bs.length) {
+        val (from, until) = bs(j)
+        var cIdx = 0
+        while (cIdx < books(j).length) {
+          var dot = 0.0; var i = from
+          val bk = books(j)(cIdx)
+          while (i < until && i < q.length) { dot += q(i) * bk(i - from); i += 1 }
+          t(j)(cIdx) = dot
+          cIdx += 1
+        }
+        j += 1
+      }
+      t
+    }
+
+    /** The ADC kernel: one map-side scan of `(vec_id, cell, codes)`;
+      * each row in a query's probed cells scores cell dot + m LUT
+      * lookups (the inner loop never touches a raw vector), with the
+      * row's probed-cell RANK attached (`cell_rank` = 1-based position
+      * of its cell in the query's probe order). Filtering `cell_rank <=
+      * p` reproduces a direct nProbe = p scan exactly, because the ADC
+      * value is independent of how many cells are probed. Rows outside
+      * a query's probed cells cost one hash lookup.
+      */
+    private[similarity] def adcScores(coded: DataFrame, probes: Array[Probe],
+                                      books: Array[Array[Array[Double]]],
+                                      bs: Array[(Int, Int)]): DataFrame = {
       val spark = coded.sparkSession
       import spark.implicits._
-      val indexed = probes.map { case (qid, probed, lut) =>
-        (qid, probed.zipWithIndex.map { case ((c, d), i) => c -> (d, i + 1) }.toMap, lut)
+      val indexed = probes.map { p =>
+        (p.id, p.cells.zipWithIndex.map { case ((c, d), i) => c -> ((d, i + 1)) }.toMap,
+          lut(p.q, books, bs))
       }
       coded.as[(Long, Int, Array[Byte])].mapPartitions { it =>
         it.flatMap { case (id, cell, codes) =>
@@ -877,6 +662,60 @@ object Similarity {
       }.toDF("query_id", "vec_id", "adc", "cell_rank")
     }
 
+    /** The no-PQ scorer: every member of each query's probed cells with
+      * its exact cosine and its cell's probe position (`cell_rank`), so
+      * filtering `cell_rank <= p` for any p <= nProbe yields exactly the
+      * candidates a direct nProbe = p run scores.
+      *
+      * Every corpus vector lives in exactly one cell, so (query, vec)
+      * candidates are already unique — no dedup shuffle. The probed
+      * `(query_id, query_v, cell, cell_rank)` frame (nQueries × nProbe
+      * rows) is broadcast explicitly and the assigned corpus streams
+      * with its own vectors: `assigned` flows through a typed kernel,
+      * whose copied stats price the embedding array at defaultSize, so
+      * leaving the choice to the planner risks broadcasting the
+      * O(corpus) side — the 8 GiB-cap failure mode the minhash pipeline
+      * hit at 1000×.
+      */
+    private[similarity] def scoredCandidates(assigned: DataFrame,
+                                             probes: Array[Probe]): DataFrame = {
+      val spark = assigned.sparkSession
+      import spark.implicits._
+      val probed = probes.toSeq.flatMap { p =>
+        p.cells.indices.map(i => (p.id, p.v, p.cells(i)._1, i + 1))
+      }.toDF("query_id", "query_v", "cell", "cell_rank")
+      broadcast(probed).join(assigned, Seq("cell"))
+        .where(col("query_id") =!= col("corpus_id"))
+        .withColumn("cos_raw", EmbeddingDedup.cosine(col("query_v"), col("corpus_v")))
+        .withColumnRenamed("corpus_id", "vec_id")
+    }
+
+    /** Exact re-rank scoring of a bounded `(query_id, vec_id, …)`
+      * candidate set: the candidates broadcast against the corpus
+      * (explicit — the planner sees defaultSize-priced arrays on the
+      * corpus leg), the queries broadcast against that. Extra columns
+      * on `cands` (the sweep's ADC rank) are carried through.
+      */
+    private[similarity] def rerankScored(cands: DataFrame, corpus: DataFrame,
+                                         queries: DataFrame,
+                                         vecCol: String, idCol: String): DataFrame = {
+      val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("query_v"))
+      broadcast(cands).join(
+          corpus.select(col(idCol).as("vec_id"), col(vecCol).as("corpus_v")),
+          Seq("vec_id"))
+        .join(broadcast(q), Seq("query_id"))
+        .withColumn("cos_raw", EmbeddingDedup.cosine(col("query_v"), col("corpus_v")))
+    }
+
+    /** The no-PQ query ([[IvfAnn]]) over trained cells: probe, score
+      * every probed member exactly, top-k.
+      */
+    private[similarity] def queryAssigned(cells: Cells, queries: DataFrame, k: Int,
+                                          nProbe: Int, vecCol: String,
+                                          idCol: String): DataFrame =
+      CosineTopK.rankTopK(scoredCandidates(cells.assigned,
+        probeData(collectQueries(queries, vecCol, idCol), cells.ctrs, nProbe)), k)
+
     def topK(corpus: DataFrame, queries: DataFrame, k: Int,
              nCells: Int = DefaultCells, nProbe: Int = DefaultProbe,
              m: Int = DefaultM, ksub: Int = DefaultKsub,
@@ -885,15 +724,13 @@ object Similarity {
              maxTrain: Long = MaxTrainRows,
              maxQueryBatch: Long = DefaultMaxQueryBatch,
              cellRefine: Map[Int, Int] = Map.empty): DataFrame = {
-      val spark = corpus.sparkSession
-      import spark.implicits._
       val (coded, ctrs, books, bs) =
         trainAndEncode(corpus, nCells, m, ksub, vecCol, idCol, maxTrain)
       queryCoded(coded, ctrs, books, bs, corpus, queries, k, nProbe, refine,
         vecCol, idCol, maxQueryBatch, cellRefine)
     }
 
-    /** The query half: ADC over an already-encoded `(vec_id, cell,
+    /** The PQ-stage query: ADC over an already-encoded `(vec_id, cell,
       * codes)` frame + exact re-rank against `corpus`. Shared by
       * [[topK]] and the persisted-index path ([[IvfPqIndex.topK]]).
       *
@@ -919,30 +756,8 @@ object Similarity {
                                        maxQueryBatch: Long = DefaultMaxQueryBatch,
                                        cellRefine: Map[Int, Int] = Map.empty): DataFrame = {
       requireBoundedQueries(queries, maxQueryBatch, "IvfPqAnn.queryCoded")
-      val qArr = PqAnn.collectQueries(queries, vecCol, idCol)
-      val probes = probeData(qArr, ctrs, books, bs, nProbe)
-        .map { case (qid, probed, lut) =>
-          (qid, probed.map { case (cIdx, dot) => cIdx -> dot }.toMap, lut)
-        }
-
-      // ADC pass: one map-side scan of (cell, codes); rows outside a
-      // query's probed cells cost one hash lookup
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      val adc = coded.as[(Long, Int, Array[Byte])].mapPartitions { it =>
-        it.flatMap { case (id, cell, codes) =>
-          probes.iterator.flatMap { case (qid, cellDot, lut) =>
-            if (qid == id) Iterator.empty
-            else cellDot.get(cell) match {
-              case Some(cd) =>
-                var s = cd; var j = 0
-                while (j < codes.length) { s += lut(j)(codes(j) & 0xff); j += 1 }
-                Iterator.single((qid, id, s))
-              case None => Iterator.empty
-            }
-          }
-        }
-      }.toDF("query_id", "vec_id", "adc")
+      val probes = probeData(collectQueries(queries, vecCol, idCol), ctrs, nProbe)
+      val adc = adcScores(coded, probes, books, bs).drop("cell_rank")
 
       val wAdc = Window.partitionBy("query_id").orderBy(col("adc").desc, col("vec_id"))
       val ranked = adc.withColumn("r", rank().over(wAdc))
@@ -955,10 +770,12 @@ object Similarity {
           // stays a literal so the rank filter still compiles to a
           // WindowGroupLimit partial top-k, and the per-query cap is a
           // broadcast of ≤ |queries| rows behind it
-          val effCap = probes.map { case (qid, cellDot, _) =>
-            val r = cellDot.keys.foldLeft(refine)((acc, c) =>
-              math.max(acc, cellRefine.getOrElse(c, refine)))
-            (qid, r * k)
+          val spark = corpus.sparkSession
+          import spark.implicits._
+          val effCap = probes.map { p =>
+            val r = p.cells.foldLeft(refine)((acc, c) =>
+              math.max(acc, cellRefine.getOrElse(c._1, refine)))
+            (p.id, r * k)
           }.toSeq
           val maxCap = if (effCap.isEmpty) refine * k else effCap.map(_._2).max
           val capDf = effCap.toDF("query_id", "cand_cap")
@@ -967,14 +784,7 @@ object Similarity {
             .where(col("r") <= col("cand_cap"))
             .select("query_id", "vec_id")
         }
-
-      val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("query_v"))
-      val scored = broadcast(cands).join(
-          corpus.select(col(idCol).as("vec_id"), col(vecCol).as("corpus_v")),
-          Seq("vec_id"))
-        .join(broadcast(q), Seq("query_id"))
-        .withColumn("cos_raw", EmbeddingDedup.cosine(col("query_v"), col("corpus_v")))
-      CosineTopK.rankTopK(scored, k)
+      CosineTopK.rankTopK(rerankScored(cands, corpus, queries, vecCol, idCol), k)
     }
   }
 
@@ -991,25 +801,27 @@ object Similarity {
     */
   object RecallReport {
     /** Shared build context for [[run]] and [[sweep]] (round 17, guide
-      * §1.2/§2.4 — remove redundant passes): the four indexes previously
-      * each re-scanned and re-derived the corpus for their own stats
-      * pass, training-sample collect and coarse training, even though
-      * the seeded value-hash discipline makes those IDENTICAL across
-      * methods (ivf and ivfpq share the same Lloyd centroids; pq and
-      * ivfpq train from the same normalized sample). One localCheckpoint
-      * of the assigned frame `(corpus_id, corpus_v, cell)` now feeds
-      * every leg — truth, lsh bucketing, pq/ivfpq encode, ivf scoring —
-      * so the corpus lineage (a parquet scan, or deriveClustered's
+      * §1.2/§2.4 — remove redundant passes): every setting of the index
+      * trains from the SAME seeded value-hash sample, and ivf and ivfpq
+      * share the same coarse cells. One localCheckpoint of the assigned
+      * frame `(corpus_id, corpus_v, cell)` feeds every leg — truth, lsh
+      * bucketing, the one-cell pq model, ivfpq encode, ivf scoring — so
+      * the corpus lineage (a parquet scan, or deriveClustered's
       * broadcast join + zip_with for the gauss gate rows) is computed
       * once instead of 10+ times, and the queries frame likewise.
       * Results are bit-identical by construction; AnnShareSpec asserts
       * run()/sweep() row-equality against the naive per-point topK
       * assembly on a seeded fixture.
       */
-    private[similarity] final case class Shared(qCp: DataFrame, assignedCp: DataFrame,
-                                    corpusCp: DataFrame,
-                                    ctrs: Array[Array[Double]],
-                                    sample: Array[Array[Double]])
+    private[similarity] final case class Shared(qCp: DataFrame, cells: IvfPqAnn.Cells,
+                                                corpusCp: DataFrame) {
+      /** The pq setting's one-cell model: coarse training from the same
+        * sample, assignment over the checkpointed vectors — no corpus
+        * scan.
+        */
+      def oneCell: IvfPqAnn.Cells =
+        IvfPqAnn.cellsFrom(cells.assigned.select("corpus_id", "corpus_v"), cells.sample, 1)
+    }
 
     /** Tracks every shared-build localCheckpoint so its block-manager
       * blocks can be released the moment the few-row report is
@@ -1058,15 +870,58 @@ object Similarity {
                             t: CpTracker): Shared = {
       val qCp = t(queries.select(col(idCol), col(vecCol)))
       requireBoundedQueries(qCp, DefaultMaxQueryBatch, "RecallReport")
-      val (assigned, ctrs, sample) =
-        IvfAnn.assignCellsSampled(corpus, nCells, vecCol, idCol, IvfAnn.MaxTrainRows)
-      val assignedCp = t(assigned)
+      val built = IvfPqAnn.assignCells(corpus, nCells, vecCol, idCol, IvfAnn.MaxTrainRows)
+      val cells = built.copy(assigned = t(built.assigned))
       // the assigned frame carries the full vectors, so every consumer
       // that only needs (id, vector) projects them back out of the one
       // materialized copy
-      val corpusCp = assignedCp.select(col("corpus_id").as(idCol),
+      val corpusCp = cells.assigned.select(col("corpus_id").as(idCol),
         col("corpus_v").as(vecCol))
-      Shared(qCp, assignedCp, corpusCp, ctrs, sample)
+      Shared(qCp, cells, corpusCp)
+    }
+
+    /** The exact top-k truth of a shared build, checkpointed (it feeds
+      * the count AND every hit-join), and its row count — which must be
+      * positive: an empty truth set means the report could only emit
+      * null/0÷0 recall, so a misconfigured run (empty corpus or query
+      * set) fails loudly instead of surfacing as a quiet null row.
+      */
+    private[similarity] def truthOf(sh: Shared, k: Int, vecCol: String, idCol: String,
+                                    t: CpTracker, op: String): (DataFrame, Long) = {
+      val truth = t(CosineTopK.run(sh.corpusCp, sh.qCp, k, vecCol, idCol)
+        .select("query_id", "vec_id"))
+      val nTrue = truth.count()
+      require(nTrue > 0,
+        s"$op needs a non-empty ground truth: corpus/queries produced 0 true top-$k pairs")
+      (truth, nTrue)
+    }
+
+    /** Hits per label over a union of labelled `(query_id, vec_id)`
+      * answers, anchored on the STATIC label list with a left join, NOT
+      * an inner join + groupBy: a setting whose recall collapses to
+      * zero — or whose index returns no rows at all — must still report
+      * its row with recall 0.0. A vanished row is exactly the wrong way
+      * to surface the regression these reports exist to catch.
+      */
+    private[similarity] def recallRows(answers: Seq[(Seq[Any], DataFrame)], keys: Seq[String],
+                                       truth: DataFrame, k: Int, nTrue: Long): DataFrame = {
+      val spark = truth.sparkSession
+      val approx = answers.map { case (label, df) =>
+        df.select(label.zip(keys).map { case (v, key) => lit(v).as(key) } ++
+          Seq(col("query_id"), col("vec_id")): _*)
+      }.reduce(_ unionAll _)
+      val anchor = spark.createDataFrame(
+        java.util.Arrays.asList(answers.map(a => org.apache.spark.sql.Row(a._1: _*)): _*),
+        approx.select(keys.map(col): _*).schema)
+      val hitCounts = approx
+        .join(truth.withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left")
+        .groupBy(keys.map(col): _*)
+        .agg(sum(coalesce(col("hit"), lit(0))).as("n_hit"))
+      anchor.join(hitCounts, keys, "left")
+        .select(keys.map(col) ++ Seq(lit(k).as("k"), lit(nTrue).as("n_true"),
+          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
+          round(coalesce(col("n_hit"), lit(0L)) / nTrue, 4).as("recall")): _*)
+        .orderBy(keys.map(col): _*)
     }
 
     def run(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
@@ -1074,173 +929,69 @@ object Similarity {
             vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
       val t = tracker(corpus.sparkSession)
       val sh = sharedBuild(corpus, queries, nCells, vecCol, idCol, t)
-      // ground truth feeds the count AND two hit-joins: checkpoint so
-      // the brute-force scoring runs once
-      val truth = t(CosineTopK.run(sh.corpusCp, sh.qCp, k, vecCol, idCol)
-        .select("query_id", "vec_id"))
-      val nTrue = truth.count()
-      // an empty truth set means the report could only emit null/0÷0
-      // recall — a misconfigured run (empty corpus or query set) must
-      // fail loudly, not surface as a quiet null row
-      require(nTrue > 0,
-        s"recall report needs a non-empty ground truth: corpus/queries produced 0 true top-$k pairs")
-      // pq and ivfpq books train from the SAME collected sample; ivf and
-      // ivfpq share the SAME coarse centroids and assignment
-      val (pqBooks, pqBs) = PqAnn.trainBooks(sh.sample, PqAnn.DefaultM, PqAnn.DefaultKsub)
-      val pqCoded = PqAnn.encode(sh.corpusCp, pqBooks, pqBs, vecCol, idCol)
-      val (rBooks, rBs) = IvfPqAnn.trainResidualBooks(sh.sample, sh.ctrs,
-        IvfPqAnn.DefaultM, IvfPqAnn.DefaultKsub)
-      val ivfpqCoded = IvfPqAnn.encodeWith(sh.assignedCp, sh.ctrs, rBooks, rBs)
-      val approx =
-        LshAnn.topK(sh.corpusCp, sh.qCp, k, dim, vecCol = vecCol, idCol = idCol)
-          .select(lit("lsh").as("method"), col("query_id"), col("vec_id"))
-        .unionAll(
-          IvfAnn.queryAssigned(sh.assignedCp, sh.ctrs, sh.qCp, k, nProbe,
-              vecCol, idCol)
-            .select(lit("ivf").as("method"), col("query_id"), col("vec_id")))
-        .unionAll(
-          PqAnn.queryCoded(pqCoded, pqBooks, pqBs, sh.corpusCp, sh.qCp, k,
-              PqAnn.DefaultRefine, vecCol, idCol)
-            .select(lit("pq").as("method"), col("query_id"), col("vec_id")))
-        .unionAll(
-          IvfPqAnn.queryCoded(ivfpqCoded, sh.ctrs, rBooks, rBs, sh.corpusCp,
-              sh.qCp, k, nProbe, IvfPqAnn.DefaultRefine, vecCol, idCol)
-            .select(lit("ivfpq").as("method"), col("query_id"), col("vec_id")))
-      // anchored on a STATIC method list with left joins, NOT an inner
-      // join + groupBy: a method whose recall collapses to zero — or
-      // whose index returns no rows at all — must still report its row
-      // with recall 0.0. A vanished row is exactly the wrong way to
-      // surface the regression this report exists to catch.
-      val hitCounts = approx
-        .join(truth.withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left")
-        .groupBy("method")
-        .agg(sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      t.finish(Seq("ivf", "ivfpq", "lsh", "pq").toDF("method")
-        .join(hitCounts, Seq("method"), "left")
-        .select(col("method"), lit(k).as("k"), lit(nTrue).as("n_true"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          round(coalesce(col("n_hit"), lit(0L)) / nTrue, 4).as("recall"))
-        .orderBy("method"))
+      val (truth, nTrue) = truthOf(sh, k, vecCol, idCol, t, "recall report")
+      // settings of one index: ivf (no PQ stage) and ivfpq on the shared
+      // cells, pq on the one-cell model from the same sample
+      def coded(cells: IvfPqAnn.Cells, probe: Int): DataFrame = {
+        val (books, bs) = IvfPqAnn.trainBooks(cells.sample, cells.ctrs,
+          IvfPqAnn.DefaultM, IvfPqAnn.DefaultKsub)
+        IvfPqAnn.queryCoded(IvfPqAnn.encode(cells.assigned, cells.ctrs, books, bs),
+          cells.ctrs, books, bs, sh.corpusCp, sh.qCp, k, probe,
+          IvfPqAnn.DefaultRefine, vecCol, idCol)
+      }
+      t.finish(recallRows(Seq(
+        Seq("lsh") -> LshAnn.topK(sh.corpusCp, sh.qCp, k, dim, vecCol = vecCol, idCol = idCol),
+        Seq("ivf") -> IvfPqAnn.queryAssigned(sh.cells, sh.qCp, k, nProbe, vecCol, idCol),
+        Seq("pq") -> coded(sh.oneCell, 1),
+        Seq("ivfpq") -> coded(sh.cells, nProbe)), Seq("method"), truth, k, nTrue))
     }
 
-    /** Recall CURVES (round-14, verdict-r13 #2): recall@k as a function
-      * of each index's accuracy knob — IVF nProbe, LSH table count, PQ
-      * codebook size — against ONE shared brute-force ground truth.
-      * On a duplication-degenerate corpus (the zipf mode's exact-tie
-      * masses) every point sits at 1.0 and the curve proves little; on
-      * a genuinely spread distribution (ScaleUp's `gauss` mode —
-      * clustered anisotropic Gaussians, no exact duplication) the
-      * low-knob points degrade and the curve shows the recall/cost
-      * trade-off an operator would actually tune. Output: one row per
-      * (method, param, value) — bounded by the static sweep grid.
-      */
-    /** The sweep grid — static, shared by the plan and the vanished-row
-      * anchor. Kept identical to the pre-round-17 per-point grid.
-      */
     private val SweepProbes = Seq(1, 2, 4, 8)
     private val SweepTables = Seq(1, 2, 4, 8)
     private val SweepPqKsub = Seq(4, 8, 16)
     private val SweepRefine = Seq(16, 64, 256)
     private val SweepIvfPqKsub = Seq(16, 64, 256)
 
-    /** ONE window (one exchange + one sort) serves every prefix-nested
-      * grid point of a family (round 18, verdict-r17 #5): over the
-      * shared total order (cos_raw desc, vec_id — vec_id is unique per
-      * query in every candidate frame, so rank() has no tie groups and
-      * equals a running row count), the rank of a row within point p's
-      * candidate subset is the running count of subset rows. n
-      * conditional running sums over one WindowSpec collapse into one
-      * Window node, replacing n full Window + WindowGroupLimit passes
-      * over the same checkpointed frame.
-      *
-      * Trade, stated plainly: the per-point plans pre-pruned each
-      * exchange to top-k rows via WindowGroupLimit; the shared window's
-      * single exchange carries the whole candidate frame once. That
-      * frame is bounded by the report harness's query cap
-      * (requireBoundedQueries) times the probed-candidate count, and
-      * one full-frame exchange measures faster than n pruned
-      * sort+exchange passes at both gate scales (isolated A/B in
-      * OPTIMIZATION_r18.md); row equality with the per-point assembly
-      * stays pinned by AnnShareSpec.
-      *
-      * The ranked frame is checkpointed (tracked by `t`): a DataFrame
-      * reused across union branches is RE-PLANNED per branch, so
-      * without the checkpoint each grid point would re-execute the
-      * shared window (24 sorts again, just differently shaped — the
-      * first cut of this change measured exactly that). The per-point
-      * branches then filter the one materialized copy. `scored` callers
-      * therefore no longer checkpoint their input: the ranked frame's
-      * materialization is its only consumer, one pass either way.
+    /** One PQ-stage grid point: its report label and the index setting
+      * it measures.
       */
-    private def sharedTopK[P](scored: DataFrame, k: Int, points: Seq[P],
-                              cond: P => Column, t: CpTracker): Seq[(P, DataFrame)] = {
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("cos_raw").desc, col("vec_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val base = scored.where(!isnan(col("cos_raw")))
-      val ranked = t(points.zipWithIndex.foldLeft(base) { case (df, (p, i)) =>
-        df.withColumn(s"__r$i", sum(cond(p).cast("long")).over(w))
-      })
-      points.zipWithIndex.map { case (p, i) =>
-        p -> ranked.where(cond(p) && col(s"__r$i") <= k)
-          .select(col("query_id"), col("vec_id"),
-            round(col("cos_raw"), 4).as("cosine"),
-            col(s"__r$i").cast("int").as("rank"))
-          .orderBy("query_id", "rank")
-      }
-    }
+    private final case class PqPoint(method: String, param: String, value: Int,
+                                      ksub: Int, probe: Int, refine: Int)
 
-    /** The same shared-sort trick for the ADC candidate-pool stage of
-      * the ivfpq probe grid: one window over the (adc desc, vec_id)
-      * total order computes each probe setting's within-subset ADC rank
-      * (`cell_rank <= probe` is prefix-nested by construction), so the
-      * probe grid shares one sort of the ADC frame instead of ranking
-      * it once per probe point. Returns the per-point re-rank pools
-      * `(query_id, vec_id, r)` with r capped at that point's refine
-      * pool size.
+    /** Recall CURVES (round-14, verdict-r13 #2): recall@k as a function
+      * of each setting's accuracy knob — IVF nProbe, LSH table count, PQ
+      * codebook size and candidate pool — against ONE shared brute-force
+      * ground truth. On a duplication-degenerate corpus (the zipf mode's
+      * exact-tie masses) every point sits at 1.0 and the curve proves
+      * little; on a genuinely spread distribution (ScaleUp's `gauss`
+      * mode — clustered anisotropic Gaussians, no exact duplication) the
+      * low-knob points degrade and the curve shows the recall/cost
+      * trade-off an operator would actually tune. Output: one row per
+      * (method, param, value) — bounded by the static sweep grid.
       */
-    private def sharedAdcPools(adc: DataFrame, pts: Seq[(Int, Int)],
-                               t: CpTracker): Seq[DataFrame] = {
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("adc").desc, col("vec_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val ranked = t(pts.zipWithIndex.foldLeft(adc) { case (df, ((p, _), i)) =>
-        df.withColumn(s"__r$i", sum((col("cell_rank") <= p).cast("long")).over(w))
-      })
-      pts.zipWithIndex.map { case ((p, maxPool), i) =>
-        ranked.where(col("cell_rank") <= p && col(s"__r$i") <= maxPool)
-          .select(col("query_id"), col("vec_id"),
-            col(s"__r$i").cast("int").as("r"))
-      }
-    }
-
     def sweep(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
               vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-      // Shared-scan restructure (round 17, guide §1.2 step 1 / §2.4):
-      // the 24 grid points previously ran 24 FULL index builds — 24
-      // stats passes, 24 sample collects, 24 train+encode/bucket passes,
-      // 24 candidate scans — although the knobs under sweep change only
-      // the QUERY-side selectivity, never the trained artifacts within
-      // a build family:
-      //   - ivf nProbe and ivfpq nProbe/refine grids share one build;
-      //     probe lists are prefix-stable (one deterministic sort per
-      //     query), so one candidate scan at the MAX probe setting with
-      //     the probed-cell rank attached reproduces every smaller
+      // Shared-scan assembly (round 17, guide §1.2 step 1 / §2.4): the
+      // knobs under sweep change only the QUERY-side selectivity, never
+      // the trained artifacts of one (cells, ksub) build, so:
+      //   - ivf nProbe and the ivfpq nProbe/refine grids share one
+      //     build; probe lists are prefix-stable (one deterministic sort
+      //     per query), so one candidate scan at the MAX probe setting
+      //     with the probed-cell rank attached reproduces every smaller
       //     setting by a filter;
-      //   - pq/ivfpq refine grids share one ADC ranking at the MAX
-      //     refine (rank values don't change when the tail is dropped),
-      //     re-ranked exactly ONCE over the max pool;
+      //   - refine grids share one ADC ranking at the MAX refine (rank
+      //     values don't change when the tail is dropped), re-ranked
+      //     exactly ONCE over the max pool;
       //   - lsh table counts are prefix-stable in the seeded hyperplane
       //     stream, so one bucket pass + one candidate scoring at
       //     tables=8 with min-colliding-table attached reproduces every
-      //     smaller table count by a filter;
-      //   - remaining distinct builds: pq ksub 4/8 and ivfpq ksub
-      //     64/256 (different codebooks), each still one encode + one
-      //     scan instead of a full rebuild chain.
-      // Row-for-row equivalence with the per-point assembly is pinned
-      // by AnnShareSpec on a seeded clustered fixture.
+      //     smaller table count by a filter.
+      // Each point then ranks its filter of a checkpointed scored frame
+      // with the same rankTopK as topK (one shared running-count window
+      // over all points measured no faster, at sf0.1 or on a 200k-vector
+      // gauss twin).
+      // Row-for-row equivalence with the per-point topK assembly is
+      // pinned by AnnShareSpec on a seeded clustered fixture.
       //
       // Footprint note (advice-r17): the checkpointed scored/ADC frames
       // are bounded by O(queries × corpus-in-probed-cells) rows on
@@ -1252,21 +1003,17 @@ object Similarity {
       // preemption should use reliable checkpointing instead.
       val t = tracker(corpus.sparkSession)
       val sh = sharedBuild(corpus, queries, IvfAnn.DefaultCells, vecCol, idCol, t)
-      val truth = t(CosineTopK.run(sh.corpusCp, sh.qCp, k, vecCol, idCol)
-        .select("query_id", "vec_id"))
-      val nTrue = truth.count()
-      require(nTrue > 0,
-        s"recall sweep needs a non-empty ground truth: corpus/queries produced 0 true top-$k pairs")
-      val qArr = PqAnn.collectQueries(sh.qCp, vecCol, idCol)
+      val (truth, nTrue) = truthOf(sh, k, vecCol, idCol, t, "recall sweep")
+      val qs = IvfPqAnn.collectQueries(sh.qCp, vecCol, idCol)
 
       // --- ivf nProbe grid: ONE scored candidate scan at max probe,
       // each point filters by the attached probed-cell rank ---
-      val ivfScored = IvfAnn.scoredCandidates(sh.assignedCp, sh.ctrs, sh.qCp,
-        SweepProbes.max, vecCol, idCol)
-        .select(col("query_id"), col("vec_id"), col("cos_raw"), col("cell_rank"))
-      val ivfRuns = sharedTopK(ivfScored, k, SweepProbes,
-          (p: Int) => col("cell_rank") <= p, t)
-        .map { case (p, df) => ("ivf", "nProbe", p, df) }
+      val ivfScored = t(IvfPqAnn.scoredCandidates(sh.cells.assigned,
+          IvfPqAnn.probeData(qs, sh.cells.ctrs, SweepProbes.max))
+        .select(col("query_id"), col("vec_id"), col("cos_raw"), col("cell_rank")))
+      val ivfRuns = SweepProbes.map { p =>
+        (Seq("ivf", "nProbe", p), CosineTopK.rankTopK(ivfScored.where(col("cell_rank") <= p), k))
+      }
 
       // --- lsh tables grid: ONE bucket pass + ONE scored candidate set
       // at tables=8 with the minimum colliding table attached; the
@@ -1286,139 +1033,59 @@ object Similarity {
         .agg(min(qB("tbl")).as("min_tbl"),
           first(col("query_v")).as("query_v"),
           first(col("corpus_v")).as("corpus_v"))
-      val lshScored = lshPairs
+      val lshScored = t(lshPairs
         .withColumn("cos_raw", EmbeddingDedup.cosine(col("query_v"), col("corpus_v")))
         .withColumnRenamed("corpus_id", "vec_id")
-        .select(col("query_id"), col("vec_id"), col("cos_raw"), col("min_tbl"))
-      val lshRuns = sharedTopK(lshScored, k, SweepTables,
-          (tb: Int) => col("min_tbl") < tb, t)
-        .map { case (tb, df) => ("lsh", "tables", tb, df) }
+        .select(col("query_id"), col("vec_id"), col("cos_raw"), col("min_tbl")))
+      val lshRuns = SweepTables.map { tb =>
+        (Seq("lsh", "tables", tb), CosineTopK.rankTopK(lshScored.where(col("min_tbl") < tb), k))
+      }
 
-      // --- pq: one build per ksub; the DEFAULT-ksub build serves its
-      // ksub point AND the whole refine grid off one ADC ranking ---
-      def pqPoints(ksub: Int, refines: Seq[Int]): Seq[(String, String, Int, DataFrame)] = {
-        val (books, bs) = PqAnn.trainBooks(sh.sample, PqAnn.DefaultM, ksub)
-        val coded = PqAnn.encode(sh.corpusCp, books, bs, vecCol, idCol)
-        val adc = PqAnn.adcScores(coded, books, bs, qArr)
-        val wAdc = Window.partitionBy("query_id").orderBy(col("adc").desc, col("vec_id"))
-        val maxPool = refines.max * k
-        val cands = adc.withColumn("r", rank().over(wAdc))
-          .where(col("r") <= maxPool).select("query_id", "vec_id", "r")
-        val scored = PqAnn.rerankScored(cands, sh.corpusCp, sh.qCp, vecCol, idCol)
-          .select(col("query_id"), col("vec_id"), col("cos_raw"), col("r"))
-        // labels from explicit membership (advice-r17): if DefaultRefine
-        // is ever moved INTO SweepRefine, the overlapping point must
-        // emit BOTH its ksub row and its refine row, not silently drop
-        // one — same rule the ivfpq grid below already applies
-        sharedTopK(scored, k, refines, (rf: Int) => col("r") <= rf * k, t)
-          .flatMap { case (rf, df) =>
-            (if (rf == PqAnn.DefaultRefine) Seq(("pq", "ksub", ksub, df)) else Nil) ++
-              (if (SweepRefine.contains(rf)) Seq(("pq", "refine", rf, df)) else Nil)
+      // --- the PQ-stage points: pq is the one-cell model, ivfpq the
+      // shared cells. refine is the decisive knob on clustered corpora:
+      // a tight cluster collapses to a handful of codes, so the ADC
+      // candidate pool is tie-degenerate and refine·k candidates must
+      // exceed the tie mass before the exact re-rank can see a true
+      // neighbor; ksub sets code resolution against cluster radius
+      // (measured at sf100-gauss, BENCH_SF100.md round 14) ---
+      val pqPoints =
+        SweepPqKsub.map(ks => PqPoint("pq", "ksub", ks, ks, 1, PqAnn.DefaultRefine)) ++
+        SweepRefine.map(rf => PqPoint("pq", "refine", rf, PqAnn.DefaultKsub, 1, rf)) ++
+        SweepIvfPqKsub.map(ks =>
+          PqPoint("ivfpq", "ksub", ks, ks, IvfPqAnn.DefaultProbe, 16)) ++
+        SweepRefine.map(rf =>
+          PqPoint("ivfpq", "refine", rf, IvfPqAnn.DefaultKsub, IvfPqAnn.DefaultProbe, rf)) ++
+        SweepProbes.map(p =>
+          PqPoint("ivfpq", "nProbe", p, IvfPqAnn.DefaultKsub, p, IvfPqAnn.DefaultRefine))
+      val models = Map("pq" -> sh.oneCell, "ivfpq" -> sh.cells)
+      val wAdc = Window.partitionBy("query_id").orderBy(col("adc").desc, col("vec_id"))
+      // one encode + ONE ADC scan per (model, ksub) at its max probe;
+      // per probe setting one ADC ranking at its max pool and ONE exact
+      // re-rank of that pool; each point filters the re-ranked pool
+      val pqRuns = pqPoints.groupBy(pt => (pt.method, pt.ksub)).toSeq.flatMap {
+        case ((method, ksub), pts) =>
+          val cells = models(method)
+          val (books, bs) = IvfPqAnn.trainBooks(cells.sample, cells.ctrs,
+            IvfPqAnn.DefaultM, ksub)
+          val byProbe = pts.groupBy(_.probe).toSeq
+          val scan = IvfPqAnn.adcScores(IvfPqAnn.encode(cells.assigned, cells.ctrs, books, bs),
+            IvfPqAnn.probeData(qs, cells.ctrs, byProbe.map(_._1).max), books, bs)
+          // checkpoint only a scan several probe settings read
+          val adc = if (byProbe.size > 1) t(scan) else scan
+          byProbe.flatMap { case (p, ptsP) =>
+            val cands = adc.where(col("cell_rank") <= p)
+              .withColumn("r", rank().over(wAdc))
+              .where(col("r") <= ptsP.map(_.refine).max * k)
+              .select("query_id", "vec_id", "r")
+            val scored = t(IvfPqAnn.rerankScored(cands, sh.corpusCp, sh.qCp, vecCol, idCol)
+              .select(col("query_id"), col("vec_id"), col("cos_raw"), col("r")))
+            ptsP.map(pt => (Seq(pt.method, pt.param, pt.value),
+              CosineTopK.rankTopK(scored.where(col("r") <= pt.refine * k), k)))
           }
       }
-      // refine is PQ's second knob, and on clustered corpora the
-      // decisive one: a tight cluster collapses to a handful of PQ
-      // codes, so the ADC candidate pool is tie-degenerate and
-      // refine*k candidates must exceed the tie mass before the
-      // exact re-rank can see a true neighbor (measured at
-      // sf100-gauss: ksub alone reads 0.0 everywhere, refine
-      // recovers — BENCH_SF100.md round 14)
-      val pqRuns =
-        SweepPqKsub.filterNot(_ == PqAnn.DefaultKsub)
-          .flatMap(ks => pqPoints(ks, Seq(PqAnn.DefaultRefine))) ++
-        pqPoints(PqAnn.DefaultKsub, (PqAnn.DefaultRefine +: SweepRefine).distinct)
 
-      // --- ivfpq: the DEFAULT-ksub build (shared coarse centroids from
-      // sharedBuild) serves the whole nProbe grid AND refine grid off
-      // ONE ADC scan at max probe; ksub 64/256 are their own builds.
-      // IVF-PQ, same refine grid as plain PQ so the curves compare
-      // directly. Measured honesty note (sf100-gauss, BENCH_SF100.md
-      // round 14): residual coding fixes the CROSS-cluster code
-      // collapse (the small-corpus regime where clusters per cell
-      // exceed code resolution — AnnSweepSpec's isolated test), but
-      // when a cluster's member count dwarfs refine·k and its radius
-      // is below codebook resolution, same-cluster members still
-      // share codes and BOTH quantizers are tie-starved — the
-      // decisive knobs are refine (candidate pool vs tie mass) and
-      // ksub (code resolution vs cluster radius), swept here ---
-      def ivfpqScored(ksub: Int, nProbe: Int): DataFrame = {
-        val (books, bs) = IvfPqAnn.trainResidualBooks(sh.sample, sh.ctrs,
-          IvfPqAnn.DefaultM, ksub)
-        val coded = IvfPqAnn.encodeWith(sh.assignedCp, sh.ctrs, books, bs)
-        val probes = IvfPqAnn.probeData(qArr, sh.ctrs, books, bs, nProbe)
-        // no checkpoint here: the sole consumer is sharedAdcPools,
-        // whose ranked frame is the materialization point
-        IvfPqAnn.adcScoresWithRank(coded, probes)
-      }
-      // per re-rank pool: exact-score the pool once, then every refine
-      // point filters the shared scored frame (one shared-sort window
-      // serves the whole refine grid)
-      def ivfpqFromPool(pool: DataFrame, refines: Seq[Int])
-          : Seq[(Int, DataFrame)] = {
-        val scored = PqAnn.rerankScored(pool, sh.corpusCp, sh.qCp, vecCol, idCol)
-          .select(col("query_id"), col("vec_id"), col("cos_raw"), col("r"))
-        sharedTopK(scored, k, refines, (rf: Int) => col("r") <= rf * k, t)
-      }
-      val adcDefaultKsub = ivfpqScored(IvfPqAnn.DefaultKsub, SweepProbes.max)
-      // the WHOLE probe grid (non-default points + the default point
-      // with its refine grid) shares ONE ADC-rank sort of the default-
-      // ksub frame: probe subsets are prefix-nested in cell_rank
-      val defRefines = (IvfPqAnn.DefaultRefine +: 16 +: SweepRefine).distinct
-      val probeGrid: Seq[(Int, Seq[Int])] =
-        SweepProbes.filterNot(_ == IvfPqAnn.DefaultProbe)
-          .map(p => p -> Seq(IvfPqAnn.DefaultRefine)) :+
-          (IvfPqAnn.DefaultProbe -> defRefines)
-      val probePools = sharedAdcPools(adcDefaultKsub,
-        probeGrid.map { case (p, rfs) => (p, rfs.max * k) }, t)
-      val ivfpqProbeRuns = probeGrid.zip(probePools).init.map {
-        case ((p, rfs), pool) =>
-          val Seq((_, df)) = ivfpqFromPool(pool, rfs)
-          ("ivfpq", "nProbe", p, df)
-      }
-      // default probe: one re-ranked pool serves the nProbe=default
-      // point, the refine grid, and the ksub=default point
-      val defProbePoints = ivfpqFromPool(probePools.last, defRefines)
-      val ivfpqDefRuns = defProbePoints.flatMap { case (rf, df) =>
-        Seq.newBuilder[(String, String, Int, DataFrame)]
-          .++= (if (rf == IvfPqAnn.DefaultRefine)
-            Seq(("ivfpq", "nProbe", IvfPqAnn.DefaultProbe, df)) else Nil)
-          .++= (if (SweepRefine.contains(rf)) Seq(("ivfpq", "refine", rf, df)) else Nil)
-          .++= (if (rf == 16 && SweepIvfPqKsub.contains(IvfPqAnn.DefaultKsub))
-            Seq(("ivfpq", "ksub", IvfPqAnn.DefaultKsub, df)) else Nil)
-          .result()
-      }
-      val ivfpqKsubRuns = SweepIvfPqKsub.filterNot(_ == IvfPqAnn.DefaultKsub)
-        .map { ks =>
-          val adc = ivfpqScored(ks, IvfPqAnn.DefaultProbe)
-          val Seq(pool) = sharedAdcPools(adc, Seq((IvfPqAnn.DefaultProbe, 16 * k)), t)
-          val Seq((_, df)) = ivfpqFromPool(pool, Seq(16))
-          ("ivfpq", "ksub", ks, df)
-        }
-
-      val runs: Seq[(String, String, Int, DataFrame)] =
-        ivfRuns ++ lshRuns ++ pqRuns ++
-          ivfpqDefRuns.filter(_._2 == "refine") ++
-          ivfpqDefRuns.filter(_._2 == "ksub") ++ ivfpqKsubRuns ++
-          ivfpqProbeRuns ++ ivfpqDefRuns.filter(_._2 == "nProbe")
-      val approx = runs.map { case (m, p, v, df) =>
-        df.select(lit(m).as("method"), lit(p).as("param"),
-          lit(v).as("value"), col("query_id"), col("vec_id"))
-      }.reduce(_ unionAll _)
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      // static grid anchor + left join, same vanished-row rule as run()
-      val grid = runs.map { case (m, p, v, _) => (m, p, v) }
-        .toDF("method", "param", "value")
-      val hitCounts = approx
-        .join(truth.withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left")
-        .groupBy("method", "param", "value")
-        .agg(sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-      t.finish(grid.join(hitCounts, Seq("method", "param", "value"), "left")
-        .select(col("method"), col("param"), col("value"),
-          lit(k).as("k"), lit(nTrue).as("n_true"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          round(coalesce(col("n_hit"), lit(0L)) / nTrue, 4).as("recall"))
-        .orderBy("method", "param", "value"))
+      t.finish(recallRows(ivfRuns ++ lshRuns ++ pqRuns, Seq("method", "param", "value"),
+        truth, k, nTrue))
     }
   }
 
@@ -1571,36 +1238,21 @@ object Similarity {
       // bit-identical rows (seeded training over the same sample).
       val t = RecallReport.tracker(corpus.sparkSession)
       val sh = RecallReport.sharedBuild(corpus, queries, nCells, vecCol, idCol, t)
-      val (books, bs) = IvfPqAnn.trainResidualBooks(sh.sample, sh.ctrs, m, ksub)
-      val codedCp = t(IvfPqAnn.encodeWith(sh.assignedCp, sh.ctrs, books, bs))
+      val cells = sh.cells
+      val (books, bs) = IvfPqAnn.trainBooks(cells.sample, cells.ctrs, m, ksub)
+      val codedCp = t(IvfPqAnn.encode(cells.assigned, cells.ctrs, books, bs))
       val overrides = refineOverrides(fromCoded(codedCp, k))
-      val truth = t(CosineTopK.run(sh.corpusCp, sh.qCp, k, vecCol, idCol)
-        .select("query_id", "vec_id"))
-      val nTrue = truth.count()
-      require(nTrue > 0,
-        s"advised-recall needs a non-empty ground truth: corpus/queries produced 0 true top-$k pairs")
-      def leg(name: String, cellRefine: Map[Int, Int]): DataFrame =
-        IvfPqAnn.queryCoded(codedCp, sh.ctrs, books, bs, sh.corpusCp, sh.qCp, k,
-            IvfPqAnn.DefaultProbe, IvfPqAnn.DefaultRefine, vecCol, idCol,
-            DefaultMaxQueryBatch, cellRefine)
-          .select(lit(name).as("variant"), col("query_id"), col("vec_id"))
-      val approx = leg("default", Map.empty).unionAll(leg("advised", overrides))
-      // static variant anchor + left join, like RecallReport: a leg
-      // that returns no rows must report recall 0.0, not vanish
-      val hitCounts = approx
-        .join(truth.withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left")
-        .groupBy("variant")
-        .agg(sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      t.finish(Seq("advised", "default").toDF("variant")
-        .join(hitCounts, Seq("variant"), "left")
-        .select(col("variant"), lit(k).as("k"),
+      val (truth, nTrue) = RecallReport.truthOf(sh, k, vecCol, idCol, t, "advised-recall")
+      def leg(cellRefine: Map[Int, Int]): DataFrame =
+        IvfPqAnn.queryCoded(codedCp, cells.ctrs, books, bs, sh.corpusCp, sh.qCp, k,
+          IvfPqAnn.DefaultProbe, IvfPqAnn.DefaultRefine, vecCol, idCol,
+          DefaultMaxQueryBatch, cellRefine)
+      t.finish(RecallReport.recallRows(
+          Seq(Seq("default") -> leg(Map.empty), Seq("advised") -> leg(overrides)),
+          Seq("variant"), truth, k, nTrue)
+        .select(col("variant"), col("k"),
           lit(overrides.size).as("n_overridden_cells"),
-          lit(nTrue).as("n_true"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          round(coalesce(col("n_hit"), lit(0L)) / nTrue, 4).as("recall"))
-        .orderBy("variant"))
+          col("n_true"), col("n_hit"), col("recall")))
     }
   }
 }

@@ -52,18 +52,52 @@ class AnnShareSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("ivf: shared scored-candidate scan filtered by cell_rank equals direct topK per probe setting") {
-    val (assigned, ctrs) = Similarity.IvfAnn.assignCells(
+    val cells = Similarity.IvfPqAnn.assignCells(
       corpus, Similarity.IvfAnn.DefaultCells, "embedding", "vec_id",
       Similarity.IvfAnn.MaxTrainRows)
-    val aCp = assigned.localCheckpoint(true)
-    val scored = Similarity.IvfAnn.scoredCandidates(aCp, ctrs, queries, 8,
-      "embedding", "vec_id").localCheckpoint(true)
+    val aCp = cells.assigned.localCheckpoint(true)
+    val scored = Similarity.IvfPqAnn.scoredCandidates(aCp, Similarity.IvfPqAnn.probeData(
+      Similarity.IvfPqAnn.collectQueries(queries, "embedding", "vec_id"), cells.ctrs, 8))
+      .localCheckpoint(true)
     for (p <- Seq(1, 2, 4, 8)) {
       val shared = rows(Similarity.CosineTopK.rankTopK(
         scored.where(col("cell_rank") <= p), k))
       val direct = rows(Similarity.IvfAnn.topK(corpus, queries, k, nProbe = p))
       assert(shared == direct, s"ivf nProbe=$p shared != direct")
       assert(shared.nonEmpty)
+    }
+  }
+
+  test("ivf: rows equal a plain-Scala reference (top-p cells by cosine, exact top-k of their members)") {
+    // IVF's definition, stated independently of the index code: the
+    // build's centroids and cell assignment are its only inputs
+    val cells = Similarity.IvfPqAnn.assignCells(
+      corpus, Similarity.IvfAnn.DefaultCells, "embedding", "vec_id",
+      Similarity.IvfAnn.MaxTrainRows)
+    val cellOf = cells.assigned.select("corpus_id", "cell").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val vecs = corpus.select("vec_id", "embedding").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray).toMap
+    // the same arithmetic as the cosine_similarity expression
+    def cos(a: Array[Double], b: Array[Double]): Double = {
+      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+      while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
+      dot / (math.sqrt(na) * math.sqrt(nb))
+    }
+    val qIds = queries.select("vec_id").collect().map(_.getLong(0))
+    for (p <- Seq(1, 2, 4, 8)) {
+      val expected = qIds.flatMap { q =>
+        val probed = cells.ctrs.indices
+          .sortBy(c => (-cos(vecs(q), cells.ctrs(c)), c)).take(p).toSet
+        vecs.keys.toSeq.filter(v => v != q && probed(cellOf(v)))
+          .map(v => v -> cos(vecs(q), vecs(v))).filterNot(_._2.isNaN)
+          .sortBy { case (v, c) => (-c, v) }.take(k).zipWithIndex
+          .map { case ((v, c), i) => (q, v,
+            BigDecimal(c).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble, i + 1) }
+      }.toSet
+      val got = rows(Similarity.IvfAnn.topK(corpus, queries, k, nProbe = p))
+      assert(got == expected, s"ivf nProbe=$p: ${got -- expected} vs ${expected -- got}")
+      assert(got.size == qIds.length * k)
     }
   }
 

@@ -108,11 +108,14 @@ class AnnSweepSpec extends AnyFunSuite {
   test("residual coding beats absolute-position coding at equal candidate budget") {
     // isolate the CODING difference from the probe effect: probe ALL
     // cells (nProbe = nCells), shrink the candidate budget to refine=1
-    // so ADC ranking quality is what decides recall. Plain PQ codes
-    // absolute positions (a tight cluster collapses to few codes —
-    // ADC ties starve the re-rank); IVF-PQ codes residuals, which stay
-    // spread inside each cell. On this corpus (k=10 spans clusters)
-    // the difference must show at the tight budget.
+    // so ADC ranking quality is what decides recall. PQ is the index's
+    // one-cell setting: it codes residuals against one global
+    // reference, the corpus sample mean (a tight cluster collapses to
+    // few codes — ADC ties starve the re-rank); 32-cell IVF-PQ codes
+    // residuals against each vector's own cell, which stay spread. On
+    // this corpus (k=10 spans clusters) the difference must show at the
+    // tight budget: measured pq 0.710 vs ivfpq 0.720 (2 of 200 true
+    // pairs), where the retired absolute-position PQ read 0.675.
     val truth = Similarity.CosineTopK.run(corpus, queries, 10)
       .select("query_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -172,10 +175,11 @@ class AnnSweepSpec extends AnyFunSuite {
   test("gauss recall floors at the bench scale (sf0.1, 2000 vectors): measured − 0.05") {
     import graft.sources.Tables
     // the more probative leg: at 2000 vectors the PQ family's measured
-    // steady-state is 0.86 (tie-regime, documented in the IvfPqAnn
-    // scaladoc), ivf/lsh 1.00 — floors pinned at measured − 0.05 so a
-    // ≥0.05 regression trips here even when the 500-vector fixture
-    // stays saturated
+    // steady-state is ivfpq 0.86 and pq 0.82 (tie-regime, documented in
+    // the IvfPqAnn scaladoc; pq read 0.86 before it became the one-cell
+    // setting of IVF-PQ, and its floor was kept), ivf/lsh 1.00 — floors
+    // pinned at measured − 0.05 so a ≥0.05 regression trips here even
+    // when the 500-vector fixture stays saturated
     val nc = Similarity.DefaultClusterCenters
     val g = Similarity.deriveClustered(
       Tables(spark, "/root/testdata/sf0.1", "embeddings")).localCheckpoint(true)

@@ -119,19 +119,41 @@ class SimilaritySpec extends AnyFunSuite {
     assert(recall >= 0.8, s"PQ recall $recall below floor")
 
     // codes really are the compressed index: m bytes per vector
-    val (books, bs) = Similarity.PqAnn.train(clustered, 8, 16, "embedding",
-      "vec_id", 100000L)
-    val coded = Similarity.PqAnn.encode(clustered, books, bs, "embedding", "vec_id")
-      .collect()
+    // (PQ is the index's one-cell setting: `(vec_id, cell, codes)` rows)
+    val (coded0, _, _, _) = Similarity.IvfPqAnn.trainAndEncode(clustered, 1, 8, 16,
+      "embedding", "vec_id", 100000L)
+    val coded = coded0.collect()
     assert(coded.length === 480)
-    coded.foreach(r => assert(r.getAs[Array[Byte]](1).length === 8))
+    coded.foreach(r => assert(r.getAs[Array[Byte]](2).length === 8))
     // layout-independence: training is value-sampled and id-sorted, so a
     // different partitioning yields identical codebooks and codes
-    val coded7 = Similarity.PqAnn.encode(clustered.repartition(7),
-      Similarity.PqAnn.train(clustered.repartition(7), 8, 16, "embedding",
-        "vec_id", 100000L)._1, bs, "embedding", "vec_id").collect()
-    assert(coded7.map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap ===
-      coded.map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap)
+    val coded7 = Similarity.IvfPqAnn.trainAndEncode(clustered.repartition(7), 1, 8, 16,
+      "embedding", "vec_id", 100000L)._1.collect()
+    assert(coded7.map(r => r.getLong(0) -> r.getAs[Array[Byte]](2).toSeq).toMap ===
+      coded.map(r => r.getLong(0) -> r.getAs[Array[Byte]](2).toSeq).toMap)
+  }
+
+  test("PQ ANN: a zero-mean corpus ({v, -v} pairs) still answers k exact rows per query") {
+    // PQ codes residuals against the corpus sample mean, which is
+    // exactly zero here: its one centroid has no direction (NaN cosine
+    // to every query), and the probe must still visit that only cell
+    import spark.implicits._
+    val rng = new scala.util.Random(37)
+    val dim = 16
+    val pairs = (0 until 20).flatMap { i =>
+      val v = Array.fill(dim)(rng.nextGaussian().toFloat)
+      Seq((2L * i, v), (2L * i + 1, v.map(x => -x)))
+    }.toDF("vec_id", "embedding")
+    val queries = pairs.where(col("vec_id") < 6)
+    val exact = asMap(Similarity.CosineTopK.run(pairs, queries, 39).collect())
+    val pq = Similarity.PqAnn.topK(pairs, queries, 5).collect()
+    val byQuery = pq.groupBy(_.getLong(0))
+    assert(byQuery.keySet == (0L until 6L).toSet)
+    byQuery.values.foreach(rows => assert(rows.length == 5))
+    pq.foreach { r =>
+      val key = (r.getLong(0), r.getLong(1))
+      assert(r.getDouble(2) == exact(key)._1, s"score mismatch on $key")
+    }
   }
 
   test("recall report: one row per method, hits consistent, floors hold on clustered data") {
