@@ -8,9 +8,9 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Confs this library recommends beyond Spark defaults. All are
-    * safe-by-construction (gated on runtime statistics), not workload
-    * guesses:
+  /** Confs this library recommends beyond Spark defaults. All but the
+    * codegen cache size are safe-by-construction (gated on runtime
+    * statistics), not workload guesses:
     *
     *  - AQE SMJ→shuffled-hash-join conversion (default OFF upstream,
     *    threshold 0): when a post-shuffle build side measures under the
@@ -29,6 +29,35 @@ object GraftSession {
     *    normal cluster state). At 100 TB the term is inert:
     *    bytesPerCore dominates the max() and splits revert to
     *    `maxPartitionBytes`.
+    *
+    *  - Generated-class cache 100 → 5000 entries
+    *    (`spark.sql.codegen.cache.maxEntries`). The entry bounds how
+    *    many Janino-compiled classes (whole-stage code, projections,
+    *    orderings) Spark keeps for reuse; a miss recompiles. graft's
+    *    plan mix cycles through more than 100 distinct classes, so the
+    *    LRU evicted each one before its next use and every pass
+    *    recompiled almost everything. Measured working sets (classes
+    *    one cycle compiles with an unbounded cache): the 90-query
+    *    roster (`graft.Bench` at sf0.01) 1,919 in its first pass plus
+    *    118 new in its second, about 2,040; over a whole perfbench
+    *    run, llm_curate 172, dq_fact 146 and dq_wide 187 (dq_wide's
+    *    nullcheck_all adds about 22 new ones every pass). 5000 is the
+    *    smallest round value of at least twice the largest.
+    *    Unlike the entries above it is not gated on runtime
+    *    statistics, but it is safe for the same reason it helps: it
+    *    only decides how long a class lives, and its memory is bounded
+    *    by the entry count. Generated classes measured 1.8–3.7 KB
+    *    mean, 16.5 KB p99 and 21 KB max, so 5000 entries bound the
+    *    cached bytecode at about 5000 × 21 KB ≈ 105 MB (at the
+    *    measured mean of 2.3 classes × 3.1 KB per entry, about 36 MB);
+    *    the roster's full cache (2,018 entries) left metaspace at
+    *    191 MB against 179 MB with 100 entries. The roster's second
+    *    pass went from about 3,100 compiles (46–54 s compiling) to 91
+    *    (3.7 s), and its pass wall from 80–93 s to 56 s (4-vCPU VM).
+    *    A static conf: Spark builds the cache once per JVM, on the
+    *    first code generation, from the active session's conf, so it
+    *    must be set at session build, which [[builder]] and [[tune]]
+    *    are.
     */
   val recommended: Map[String, String] = Map(
     // 128 MB originally; lowered to 64 MB by the round-10 skewed-sf100
@@ -48,6 +77,7 @@ object GraftSession {
     // it via SPARK_GRAFT_CONF.
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> (64L * 1024 * 1024).toString,
     "spark.sql.files.openCostInBytes" -> (1L * 1024 * 1024).toString,
+    "spark.sql.codegen.cache.maxEntries" -> "5000",
     // AQE skew-join split thresholds, 256 MB/5× → 32 MB/2×: the
     // upstream defaults only fire on catastrophic skew, but a hot
     // join partition far below 256 MB is already a straggler when its

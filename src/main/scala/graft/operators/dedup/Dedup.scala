@@ -442,8 +442,10 @@ object Dedup {
       // docs emit C(c,2) candidates that downstream verification must
       // reject one by one: the exact quadratic blowup this path bounds.
       // Group stats ride one window over the fingerprint (single
-      // shuffle); the lazy checkpoint materializes with the first
-      // consuming job and is shared by the three frames built on it.
+      // shuffle); the checkpoint is shared by the three frames built
+      // on it. Under AQE, `localCheckpoint(false)` over a plan with an
+      // exchange runs that exchange's map stage at the call; only the
+      // post-shuffle window stage waits for the first consuming job.
       val w = Window.partitionBy("fp1", "fp2")
       val keyed = sigDf.select(col("gid"), col("sig"),
           xxhash64(col("sig")).as("fp1"),
@@ -563,12 +565,17 @@ object Dedup {
       // persist(MEMORY_AND_DISK) there is no session-long cache leak:
       // checkpoint blocks are reference-tracked and freed by the
       // ContextCleaner once the plan is unreachable. LAZY (eager=false)
-      // on both frames: materialization happens inside the first
-      // consuming job instead of as its own blocking job — eager
-      // checkpoints here added two scheduling barriers per call, which
-      // benched as a 2.7× regression on sub-second corpora while
-      // buying nothing at scale (the work is identical, only the
-      // barrier moves).
+      // on both frames (sigs here, `members` in membersAndVerified)
+      // instead of eager: eager checkpoints added two scheduling
+      // barriers per call, which benched as a 2.7× regression on
+      // sub-second corpora while buying nothing at scale (the work is
+      // identical, only the barrier moves). Lazy is not action-free:
+      // under AQE, `localCheckpoint(false)` over a plan with an
+      // exchange runs that exchange's map stage at the call. `members`
+      // is such a plan (its content window shuffles), so its call runs
+      // one stage before this method returns — the signature kernel
+      // (which fills the sigs checkpoint) plus the window's shuffle
+      // write. Only the post-shuffle stages wait for a consuming job.
       fromSignatures(
         signatures(df, textCol, idCol, shingler).localCheckpoint(false),
         threshold, maxBucket)
@@ -1063,9 +1070,11 @@ object Dedup {
                      textCol: String = "text", idCol: String = "doc_id",
                      maxBucket: Int = MinHashDedup.DefaultMaxBucket): DataFrame = {
       // group stats ride ONE window over the signature (vs groupBy +
-      // join-back = two shuffles of the same rows); lazy checkpoint —
-      // materialized inside the first consuming job, shared by the
-      // banding, the expansion joins, and the within-group pairs
+      // join-back = two shuffles of the same rows); the checkpoint is
+      // shared by the banding, the expansion joins, and the
+      // within-group pairs. Under AQE, `localCheckpoint(false)` runs
+      // the window's shuffle map stage (the signature kernel) at the
+      // call; only the post-shuffle stage waits for a consuming job.
       val wg = Window.partitionBy("simhash")
       val members = signatures(df, textCol, idCol)
         .select(col("gid"), col("simhash"),
@@ -1179,9 +1188,11 @@ object Dedup {
       // Residual buckets over `maxBucket` DISTINCT vectors are skipped
       // (recall loss only, the audit signal for degenerate corpora).
       // group stats ride ONE window over the vector value (vs groupBy +
-      // join-back = two shuffles); lazy checkpoint — materialized
-      // inside the first consuming job, shared by the bucketing, the
-      // expansion joins, and the within-group pairs
+      // join-back = two shuffles); the checkpoint is shared by the
+      // bucketing, the expansion joins, and the within-group pairs.
+      // Under AQE, `localCheckpoint(false)` runs the window's shuffle
+      // map stage at the call; only the post-shuffle stage waits for a
+      // consuming job.
       val wg = Window.partitionBy("v")
       val members = df.select(col(idCol).as("vid"), col(vecCol).as("v"))
         .select(col("vid"), col("v"),

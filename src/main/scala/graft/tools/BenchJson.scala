@@ -40,11 +40,16 @@ package graft.tools
   * speedup ratios never divide by zero.
   *
   * Field priority: the driver-contract fields (metric/value/unit/
-  * queries/sf) are mandatory. Dynamic diagnostics (`failed`, nonempty
-  * `errors` / `pass_asymmetric`) outrank precision digits; static
-  * fields (`harness`, `skipped` — both documented in the repo) are
-  * re-added greedily afterward. Whatever is dropped from the line is
-  * printed to stderr by Bench so a human still sees it in the raw log.
+  * queries/sf) are mandatory. `failed`, nonempty `errors`, the harness
+  * id `h` and nonempty `pass_asymmetric`, in that order, outrank
+  * precision digits; `skipped` (documented in the repo) is re-added
+  * greedily afterward. Whatever is dropped from the line is printed to
+  * stderr by Bench so a human still sees it in the raw log.
+  *
+  * The harness id rides under the one-letter key `h` with a short
+  * token ([[Harness]]): a full-suite line of 88 queries leaves about
+  * ten characters at tier 3, so `"harness":"materializeCount-2pass-min-v2"`
+  * (42 characters) was dropped from every full-suite line.
   */
 object BenchJson {
 
@@ -52,6 +57,13 @@ object BenchJson {
     * trailing newline and any final stray byte.
     */
   val MaxLen = 1985
+
+  /** [[graft.Bench]]'s harness id, version 2 of its timed action:
+    * `Materialize.materializeCount`, two passes, per-query min (v1 was
+    * the stacked `.count()` of rounds 1–13). Bump it whenever the timed
+    * action or pass structure changes.
+    */
+  val Harness = "v2"
 
   private[graft] def fmtSec(v: Double, tier: Int): String = {
     val s = tier match {
@@ -92,13 +104,12 @@ object BenchJson {
     *         the shortest honest line is returned rather than lying).
     *
     * Selection is two-phase. Phase 1 picks the precision tier together
-    * with the DYNAMIC diagnostic fields (failed / errors /
-    * pass_asymmetric — they carry per-run signal that exists nowhere
-    * else in the driver's record), preferring to keep a dynamic field
-    * over a digit of precision. Phase 2 greedily re-adds the STATIC
-    * fields (harness, then skipped — both documented in the repo, so
-    * losing them from the line loses nothing unrecoverable) when they
-    * still fit.
+    * with the ranked fields (failed / errors / h / pass_asymmetric:
+    * per-run signal, and the id a cross-run comparison must match,
+    * that exist nowhere else in the driver's record), preferring to
+    * keep a ranked field over a digit of precision. Phase 2 re-adds
+    * `skipped` (documented in the repo, so losing it from the line
+    * loses nothing unrecoverable) when it still fits.
     */
   def render(
       results: Map[String, (Double, Option[String])],
@@ -114,7 +125,7 @@ object BenchJson {
       .mkString("{", ",", "}")
 
     def line(tier: Int, withFailed: Boolean, withErr: Boolean,
-             withAsym: Boolean, withHarness: Boolean, withSkip: Boolean): String = {
+             withHarness: Boolean, withAsym: Boolean, withSkip: Boolean): String = {
       val qs = results.toSeq
         .map { case (k, (v, _)) => "\"" + k + "\":" + fmtSec(v, tier) }
         .mkString("{", ",", "}")
@@ -123,7 +134,7 @@ object BenchJson {
       // (8 chars at sf100 scale — never the budget's problem)
       sb ++= "{\"metric\":\"total\",\"value\":" + fmtSec(total, 0)
       sb ++= ",\"unit\":\"sec\""
-      if (withHarness) sb ++= ",\"harness\":\"" + harness + "\""
+      if (withHarness) sb ++= ",\"h\":\"" + esc(harness) + "\""
       sb ++= ",\"queries\":" + qs
       if (withFailed) sb ++= ",\"failed\":" + nFailed
       if (withErr && errors.nonEmpty) sb ++= ",\"errors\":" + obj(errors.toSeq.sortBy(_._1))
@@ -133,33 +144,29 @@ object BenchJson {
       sb.result()
     }
 
-    // Phase 1: most dynamic fields at the best precision that fits.
-    val dynamicSets = Seq(
-      (true, true, true),
-      (true, true, false),
-      (true, false, false),
-      (false, false, false))
-    val phase1 = (for {
-      (f, e, a) <- dynamicSets.iterator
+    // Phase 1: most ranked fields at the best precision that fits.
+    val rankedSets = Seq(
+      (true, true, true, true),
+      (true, true, true, false),
+      (true, false, true, false),
+      (true, false, false, false),
+      (false, false, false, false))
+    val (tier, f, e, h, a) = (for {
+      (f, e, h, a) <- rankedSets.iterator
       tier <- (0 to 4).iterator
-      l = line(tier, f, e, a, withHarness = false, withSkip = false)
-      if l.length <= MaxLen
-    } yield (tier, f, e, a)).nextOption()
-      .getOrElse((4, false, false, false))
-    val (tier, f, e, a) = phase1
+      if line(tier, f, e, h, a, withSkip = false).length <= MaxLen
+    } yield (tier, f, e, h, a)).nextOption()
+      .getOrElse((4, false, false, false, false))
 
-    // Phase 2: static fields, greedy, harness before skipped.
-    val withH = line(tier, f, e, a, withHarness = true, withSkip = false)
-    val h = withH.length <= MaxLen
-    val withSk = line(tier, f, e, a, withHarness = h, withSkip = true)
-    val sk = withSk.length <= MaxLen
+    // Phase 2: skipped, if it still fits.
+    val sk = line(tier, f, e, h, a, withSkip = true).length <= MaxLen
 
-    val chosen = line(tier, f, e, a, h, sk)
+    val chosen = line(tier, f, e, h, a, sk)
     val dropped = Seq(
       if (!f) Some("failed") else None,
       if (!e && errors.nonEmpty) Some("errors") else None,
+      if (!h) Some("h") else None,
       if (!a && asymmetric.nonEmpty) Some("pass_asymmetric") else None,
-      if (!h) Some("harness") else None,
       if (!sk && skipped.nonEmpty) Some("skipped") else None).flatten
     (chosen, dropped)
   }

@@ -4,8 +4,10 @@ import java.nio.file.{Files, Paths}
 
 import graft.{GraftSession, SparkEntry}
 import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -30,13 +32,32 @@ import scala.collection.mutable
   * Probe plans   <sfDir> [<out.md>] regenerate PLANS.md
   * }}}
   *
+  * `time`, `explain` and `profile` also print how many classes Janino
+  * compiled during the measured pass and the milliseconds it took, so
+  * a receipt shows when a timing paid for code generation.
+  *
   * The session is [[GraftSession.local]]: `SPARK_GRAFT_CPUS` cores,
   * default every core of the machine.
   */
 object Probe {
 
-  /** One build+materialize: the frame whose plan ran, its rows, its wall. */
-  final case class Run(df: DataFrame, rows: Long, secs: Double)
+  /** One build+materialize: the frame whose plan ran, its rows, its
+    * wall, and the classes compiled (and compile ms) inside it.
+    */
+  final case class Run(df: DataFrame, rows: Long, secs: Double,
+                       classes: Long, compileMs: Double) {
+    def codegen: String = f"compiled $classes classes in $compileMs%.0f ms"
+  }
+
+  /** Generated classes this JVM has compiled so far and their summed
+    * compile nanoseconds. The count is
+    * `CodegenMetrics.METRIC_COMPILATION_TIME`'s; the time is
+    * `CodeGenerator.compileTime`, the running sum of the same
+    * per-compile timer (the histogram keeps a decaying 1028-value
+    * sample, so the sum of its snapshot is not a running total).
+    */
+  def compiled(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 
   final case class StageRow(id: Int, attempt: Int, name: String, wallMs: Long,
                             runMs: Long, cpuMs: Long, tasks: Int, inputBytes: Long,
@@ -61,9 +82,14 @@ object Probe {
     "ann_advisor")
 
   /** A query that throws fails the probe loudly. */
-  def run(build: => DataFrame): Run = Materialize.timed(build) match {
-    case (Right((df, n)), secs) => Run(df, n, secs)
-    case (Left(e), _) => throw e
+  def run(build: => DataFrame): Run = {
+    val (c0, ns0) = compiled()
+    val r = Materialize.timed(build)
+    val (c1, ns1) = compiled()
+    r match {
+      case (Right((df, n)), secs) => Run(df, n, secs, c1 - c0, (ns1 - ns0) / 1e6)
+      case (Left(e), _) => throw e
+    }
   }
 
   /** Two passes, min — Bench's steady-state rule (pass 1 also pays page
@@ -191,12 +217,12 @@ object Probe {
       mode match {
         case "time" => names.foreach { name =>
           val r = time(query(name)(spark, sfDir))
-          println(f"[probe] $name: ${r.rows} rows in ${r.secs}%.2f s")
+          println(f"[probe] $name: ${r.rows} rows in ${r.secs}%.2f s; ${r.codegen}")
         }
         case "explain" => names.foreach { name =>
           val (r, report) = explain(query(name)(spark, sfDir))
           println(s"==== $name ====")
-          println(f"$name: ${r.rows} rows in ${r.secs}%.2f s")
+          println(f"$name: ${r.rows} rows in ${r.secs}%.2f s; ${r.codegen}")
           print(report)
         }
         case "profile" =>
@@ -207,7 +233,7 @@ object Probe {
             case _ => sfDir
           }
           val (r, stages) = profile(spark, query(name)(spark, dir))
-          println(f"query=$name rows=${r.rows} steady-state wall=${r.secs}%.3f s")
+          println(f"query=$name rows=${r.rows} steady-state wall=${r.secs}%.3f s; ${r.codegen}")
           println(f"${"stage"}%-5s ${"wall_ms"}%8s ${"run_ms"}%8s ${"cpu_ms"}%8s " +
             f"${"tasks"}%5s ${"input_mb"}%9s ${"in_rows"}%12s ${"shuf_r_mb"}%9s ${"shuf_w_mb"}%9s  name")
           stages.foreach { s =>

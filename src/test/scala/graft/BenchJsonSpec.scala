@@ -36,7 +36,7 @@ class BenchJsonSpec extends AnyFunSuite {
   test("full-suite line fits the driver window and parses as JSON") {
     val (line, dropped) = BenchJson.render(
       fakeResults(benchedNames), Map.empty, skip,
-      "/root/testdata/sf0.1", "materializeCount-2pass-min-v2")
+      "/root/testdata/sf0.1", BenchJson.Harness)
     assert(line.length <= BenchJson.MaxLen,
       s"line is ${line.length} chars > ${BenchJson.MaxLen}")
     val parsed = JsonMethods.parse(line)
@@ -45,9 +45,11 @@ class BenchJsonSpec extends AnyFunSuite {
     assert((parsed \ "sf") === JString("/root/testdata/sf0.1"))
     assert((parsed \ "failed") === JInt(0),
       "the dynamic failure count must survive the full-suite budget")
-    // harness/skipped are static; if the budget dropped them the
-    // renderer must say so (Bench echoes dropped fields to stderr)
-    if ((parsed \ "harness") == JNothing) assert(dropped.contains("harness"))
+    // the harness id must survive the full-suite budget; skipped is
+    // static, so if the budget dropped it the renderer must say so
+    // (Bench echoes dropped fields to stderr)
+    assert((parsed \ "h") === JString(BenchJson.Harness),
+      s"the harness id must survive the full-suite budget (${line.length} chars)")
     if ((parsed \ "skipped") == JNothing) assert(dropped.contains("skipped"))
     val qs = (parsed \ "queries").asInstanceOf[JObject].obj.toMap
     assert(qs.keySet === benchedNames.toSet,
@@ -72,7 +74,7 @@ class BenchJsonSpec extends AnyFunSuite {
       "ann_recall" -> ((1.620556674, Option.empty[String])))
     val (line, dropped) = BenchJson.render(
       res, Map("q1_pricing" -> ((31.0, 0.4))), skip,
-      "/root/testdata/sf0.1", "materializeCount-2pass-min-v2")
+      "/root/testdata/sf0.1", BenchJson.Harness)
     assert(dropped.isEmpty)
     val parsed = JsonMethods.parse(line)
     assert((parsed \ "queries" \ "q1_pricing") === JDouble(0.323))
@@ -116,7 +118,7 @@ class BenchJsonSpec extends AnyFunSuite {
       n -> ((v, Option.empty[String]))
     }.toMap
     val (line, _) = BenchJson.render(
-      res, Map.empty, skip, "/root/testdata/sf0.1", "materializeCount-2pass-min-v2")
+      res, Map.empty, skip, "/root/testdata/sf0.1", BenchJson.Harness)
     assert(line.length <= BenchJson.MaxLen,
       s"line is ${line.length} chars > ${BenchJson.MaxLen}")
     val qs = (JsonMethods.parse(line) \ "queries").asInstanceOf[JObject].obj.toMap
@@ -134,7 +136,7 @@ class BenchJsonSpec extends AnyFunSuite {
       n -> ((7.0 + (i % 23) * 21.7, Option.empty[String]))
     }.toMap
     val (line, _) = BenchJson.render(
-      res, Map.empty, skip, "/tmp/graft_sf100", "materializeCount-2pass-min-v2")
+      res, Map.empty, skip, "/tmp/graft_sf100", BenchJson.Harness)
     assert(line.length <= BenchJson.MaxLen, s"line is ${line.length} chars")
   }
 

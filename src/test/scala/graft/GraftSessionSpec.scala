@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.tools.Probe
+
 /** Contract lock on the measured session defaults — every value here
   * was adopted (or lowered) by an isolated A/B or a survival run, so
   * a change must come with a new measurement, not a drive-by edit.
@@ -36,5 +38,28 @@ class GraftSessionSpec extends AnyFunSuite {
     // surprising side effect; the flag lives in `recommended` now and
     // Tables' schema probe rebuilds proper micros from the raw longs.
     assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+  }
+
+  test("the codegen class cache keeps a pass's classes: a second round compiles none") {
+    // Spark's default of 100 entries is below every perfbench
+    // workload's per-pass working set (110-190 classes), so its LRU
+    // evicted each class before the next pass used it again. The cache
+    // is built once per JVM from the session conf, so the check is
+    // behavioural: ~150 distinct generated classes (one per literal),
+    // then the same queries again, which must all hit the cache. Test
+    // suites run one after another in one JVM, so the global compile
+    // counter's delta belongs to this test.
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") == "5000")
+    val spark = TestSpark.spark
+    def round(): Long = {
+      val (before, _) = Probe.compiled()
+      // toRdd plans the query and compiles its whole-stage class on the
+      // driver, without running a job
+      (1 to 150).foreach(i => spark.range(4).selectExpr(s"id * $i + $i").queryExecution.toRdd)
+      Probe.compiled()._1 - before
+    }
+    val first = round()
+    assert(first >= 150, s"expected >= 150 distinct classes in the first round, compiled $first")
+    assert(round() == 0)
   }
 }
