@@ -19,50 +19,30 @@ import scala.collection.parallel.CollectionConverters._
   *    in the candidate ordering (keyfinder.py:93-108).
   *
   * Spark-first: the reference issues 2 sequential SQL queries per
-  * combination. Here each combination is ONE aggregation job — a
-  * hash aggregate with map-side partial combine whose scan is pruned to
-  * exactly the combination's columns — and all combinations of a size are
-  * submitted CONCURRENTLY to the scheduler, so the cluster overlaps their
-  * scans. A fused single-scan variant (multi-distinct aggregate) was
-  * measured 10× slower at sf0.1 because Catalyst plans n distinct groups
-  * as an Expand (row count × n) followed by a giant shuffle; per-combo
-  * jobs shuffle only each combo's partial-agg output instead. Fusing
-  * the 8-byte hash-witness jobs below the same way was no better at
-  * sf100 (900.2 s fused vs 599.6 s per-combo, BENCH_SF100.md round 15).
+  * combination. [[candidateReport]] profiles every combination of a
+  * size with ONE plan ([[ColumnProfile.exact]]): no cache, no job per
+  * combination, no driver-side report. A dq_fact benchmark pass (6
+  * candidates over 60k orders) went from 42 Spark jobs to 20.
   *
-  * Also measured and REJECTED (round 6, 60 M rows, 4 candidates,
-  * maxKeySize 4): a single-scan `approx_count_distinct(struct(...))`
-  * prefilter to skip exact jobs for combos far from unique. It has no
-  * Expand problem, but it was ~20% SLOWER end-to-end (isolated min
-  * 48.5 → 58.5 s): the concurrent exact jobs already overlap their
-  * scans over the cached projection, so the fused HLL pass only adds a
-  * serialized CPU-heavy multi-struct-hash scan whose savings don't
-  * cover its cost at realistic combo counts.
+  * [[findMinimalKeys]] needs only a verdict per combination and prunes
+  * as it goes: each surviving combination is ONE aggregation job over a
+  * cached projection, and all combinations of a size are submitted
+  * CONCURRENTLY so their scans overlap. Fusing them into Catalyst's
+  * multi-distinct aggregate was 10× slower at sf0.1 (an Expand of row
+  * count × n, then a giant shuffle), and fusing the 8-byte hash-witness
+  * jobs was no better at sf100 (900.2 s fused vs 599.6 s per-combo,
+  * BENCH_SF100.md round 15).
   *
-  * Re-measured at 600 M rows (round 9), rejection CONFIRMED with a
-  * sharper reason: the sketch cannot prune near-keys. On the scaled
-  * data every size-2+ combo is ≥99.9% unique (exact 599.94 M of
-  * 600 M), while HLL at rsd 0.01 estimated 592–604 M — the 1% sketch
-  * error is 100× larger than the non-uniqueness it would need to
-  * resolve, so every combo stays inside any sound verification margin
-  * and the exact jobs run anyway (the ~169 s of HLL passes would be
-  * pure overhead on the ~723 s exact lattice). An HLL prefilter only
-  * pays off when candidate combos are far from unique, which is
-  * exactly when the profiler-style [[candidateReport]] is the right
-  * tool instead.
+  * An `approx_count_distinct` prefilter was REJECTED in rounds 6 and 9
+  * (60 M and 600 M rows): near-keys dominated, and a 1% sketch error is
+  * far larger than the non-uniqueness it would have to resolve, so the
+  * exact jobs ran anyway. The prefilter adopted in round 14
+  * ([[PrefilterThreshold]]) only prunes overwhelmingly duplicate-heavy
+  * combinations.
   *
   * What DOES work (round 12, [[isKeyByHash]]): [[findMinimalKeys]] only
-  * needs a key/non-key VERDICT, never the distinct count — and
-  * `countDistinct(xxhash64(combo))` is a one-sided PROOF, not a sketch:
-  * if the 64-bit hashes are all distinct the tuples must be, so
-  * `hashDistinct == total` certifies a key exactly; a deficit larger
-  * than [[HashDeficitBand]] certifies duplicates (collisions can only
-  * LOWER the hash count, and >40 of them has probability < 10⁻³¹ at
-  * 10¹⁰ rows); only the tiny ambiguous band re-runs the exact
-  * tuple-distinct job. Measured at sf100 (BENCH_SF100.md round-12
-  * section): local wall is flat — the value is the halved shuffle
-  * WIRE bytes at cluster scale, and the exactness framing (witness,
-  * not sketch) that the HLL path above lacks. [[candidateReport]]
+  * needs a VERDICT, and `countDistinct(xxhash64(combo)) == count(*)`
+  * is a one-sided PROOF of a key, not a sketch; [[candidateReport]]
   * keeps the exact count: its contract IS the number.
   */
 object KeyFinder {
@@ -112,37 +92,6 @@ object KeyFinder {
       s"$total combinations is very high; reduce candidates/max-size or pass force=true")
   }
 
-  /** Stats for one combination. `nDistinct` counts distinct tuples with
-    * all members non-null (SQL COUNT DISTINCT semantics) — identical to
-    * the reference's GROUP-BY count whenever the combo has zero NULLs,
-    * which is the only case where a combo can be a key.
-    */
-  final case class ComboStats(
-      keyColumns: Seq[String], nDistinct: Long, nNulls: Long, totalRows: Long) {
-    def isKey: Boolean = nNulls == 0 && nDistinct == totalRows
-  }
-
-  /** One aggregation job: scan pruned to `cb`'s columns, map-side partial
-    * aggregate, tiny shuffle.
-    */
-  def comboStats(df: DataFrame, cb: Seq[String]): ComboStats = {
-    val row = df
-      .select(cb.map(col): _*)
-      .agg(
-        countDistinct(cb.head, cb.tail: _*).as("n_distinct"),
-        sum(when(cb.map(col(_).isNull).reduce(_ || _), 1L).otherwise(0L)).as("n_nulls"),
-        count(lit(1)).as("total_rows"))
-      .collect()(0)
-    ComboStats(cb,
-      row.getLong(0),
-      if (row.isNullAt(1)) 0L else row.getLong(1),
-      row.getLong(2))
-  }
-
-  private def statsForSize(
-      df: DataFrame, candidates: Seq[String], size: Int): Seq[ComboStats] =
-    parMap(df, prioritizeIdColumns(candidates).combinations(size).toSeq)(comboStats(df, _))
-
   /** The Spark local properties that scope a job: group, description,
     * cancel policy, tags and scheduler pool.
     */
@@ -170,11 +119,10 @@ object KeyFinder {
   }
 
   /** Run `f` against the candidate-column projection persisted in
-    * memory: every combo job then aggregates from the cached columnar
-    * batches instead of re-decoding parquet once per combination.
-    * (At 100 TB the same pattern holds with MEMORY_AND_DISK /
-    * executor-local spill; the projection is narrow — only the
-    * candidate columns — so it is far smaller than the table.)
+    * memory: [[findMinimalKeys]]' jobs then aggregate from the cached
+    * columnar batches instead of re-decoding parquet once per job. (At
+    * 100 TB the same pattern holds with MEMORY_AND_DISK; the projection
+    * is narrow, so it is far smaller than the table.)
     */
   private def withCachedProjection[T](df: DataFrame, candidates: Seq[String])(
       f: DataFrame => T): T = {
@@ -184,25 +132,22 @@ object KeyFinder {
     finally proj.unpersist(blocking = false)
   }
 
-  private val reportSchema = StructType(Seq(
-    StructField("key_columns", StringType, nullable = false),
-    StructField("key_size", IntegerType, nullable = false),
-    StructField("n_distinct", LongType, nullable = false),
-    StructField("n_nulls", LongType, nullable = false),
-    StructField("total_rows", LongType, nullable = false),
-    StructField("is_key", BooleanType, nullable = false)))
-
-  /** Full stats for every combination of `size` candidate columns, all
-    * jobs submitted concurrently. Output: (key_columns, key_size,
-    * n_distinct, n_nulls, total_rows, is_key), sorted by key_columns.
+  /** Full stats for every combination of `size` candidate columns from
+    * one plan. Output: (key_columns, key_size, n_distinct, n_nulls,
+    * total_rows, is_key), sorted by key_columns. `n_distinct` counts
+    * tuples with no NULL member (SQL COUNT DISTINCT), which equals the
+    * reference's GROUP-BY count whenever a combo can be a key.
     */
-  def candidateReport(spark: SparkSession, df: DataFrame, candidates: Seq[String], size: Int): DataFrame = {
-    val rows = withCachedProjection(df, candidates) { proj =>
-      statsForSize(proj, candidates, size)
-    }.map(s => Row(s.keyColumns.mkString(","), size, s.nDistinct, s.nNulls, s.totalRows, s.isKey))
-      .sortBy(_.getString(0))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), reportSchema)
-  }
+  def candidateReport(spark: SparkSession, df: DataFrame, candidates: Seq[String], size: Int): DataFrame =
+    ColumnProfile.exact(df, prioritizeIdColumns(candidates).combinations(size).toSeq)
+      .select(
+        col("name").as("key_columns"),
+        lit(size).as("key_size"),
+        col("distinct_count").as("n_distinct"),
+        coalesce(col("null_count"), lit(0L)).as("n_nulls"),
+        col("total_rows"))
+      .withColumn("is_key", col("n_nulls") === 0 && col("n_distinct") === col("total_rows"))
+      .orderBy("key_columns")
 
   /** Ambiguity band for the hash-witness path in [[findMinimalKeys]].
     * `countDistinct(xxhash64(combo)) == count(*)` PROVES a key outright
@@ -234,9 +179,8 @@ object KeyFinder {
     * (704 s) — for a keyless countDistinct the map-side set build is
     * pipelined against the scan and the extra full-row exchange costs
     * more than the duplicated set build saves; q18's win does not
-    * transfer to this shape. NOT used by
-    * [[candidateReport]]/[[comboStats]], whose contract is the exact
-    * distinct COUNT, not a key verdict.
+    * transfer to this shape. NOT used by [[candidateReport]], whose
+    * contract is the exact distinct COUNT, not a key verdict.
     */
   private def isKeyByHash(proj: DataFrame, cb: Seq[String], total: Long): Boolean = {
     val hashed = proj.select(xxhash64(cb.map(col): _*).as("h"))
@@ -313,13 +257,11 @@ object KeyFinder {
       // containing any null-bearing column can never be a key
       // (keyfinder.py:30-76 checks nulls before distinct for the same
       // reason), so those combos skip their countDistinct job entirely.
-      val pre = proj.agg(
-        count(lit(1)).as("total"),
-        candidates.map(c => sum(col(c).isNull.cast("long")).as(s"n_$c")): _*
-      ).collect()(0)
-      val total = pre.getLong(0)
+      val counts = ColumnProfile.nullCounts(candidates)
+      val pre = proj.agg(counts.head, counts.tail: _*).collect()(0)
+      val total = pre.getLong(candidates.size)
       val nullCols = candidates.zipWithIndex
-        .collect { case (c, i) if pre.getLong(i + 1) > 0 => c }.toSet
+        .collect { case (c, i) if pre.getLong(i) > 0 => c }.toSet
       (1 to upper).iterator.map { size =>
         val combos = ordered.combinations(size)
           .filter(_.forall(!nullCols.contains(_))).toSeq

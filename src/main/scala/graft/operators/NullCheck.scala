@@ -11,13 +11,13 @@ import org.apache.spark.sql.functions._
   * nullcheck.py:83-97 classifies `distinct==0` as a NULL column and
   * `0 < distinct <= 5` as low-distinct.
   *
-  * Spark-first: all columns of a table are profiled in ONE aggregation
-  * job. Catalyst plans multi-distinct aggregates with a single Expand +
-  * partial aggregation, so the table is scanned exactly once regardless
-  * of column count. At 100 TB, exact multi-column countDistinct expands
-  * rows #cols×; [[approxProfile]] swaps in HLL sketches
-  * ([[graft.functions.Hll.approxDistinct]]) which need no Expand and one
-  * pass — use it for very wide tables where exact counts aren't required.
+  * Spark-first: all columns of a table are profiled by ONE plan
+  * ([[ColumnProfile.exact]]) in a column order graft fixes, so a
+  * re-read table reuses its generated classes. Its fan-out still
+  * multiplies rows by the column count; at 100 TB [[approxProfile]]
+  * swaps in HLL sketches ([[graft.functions.Hll.approxDistinct]]), one
+  * pass with no fan-out, for wide tables where exact counts aren't
+  * required.
   */
 object NullCheck {
 
@@ -33,17 +33,17 @@ object NullCheck {
     * the reference's status classification.
     */
   def profile(tableName: String, df: DataFrame): DataFrame =
-    longProfile(tableName, df)(c => countDistinct(col(c)))
+    classify(tableName, ColumnProfile.exact(df, df.columns.toSeq.map(Seq(_))))
 
-  /** Profile several tables into one result (still one job per table, all
-    * scheduled concurrently by the union).
+  /** Profile several tables into one result: one plan, a union of the
+    * tables' profiles, whose scans and aggregates run concurrently.
     */
   def profileAll(tables: Seq[(String, DataFrame)]): DataFrame =
     tables.map { case (n, df) => profile(n, df) }
       .reduce(_ unionAll _)
       .orderBy("table_name", "column_name")
 
-  /** Sketch variant for wide tables at scale: no Expand, single pass,
+  /** Sketch variant for wide tables at scale: no fan-out, single pass,
     * relative standard error ≤ `rsd` on the distinct counts. NULL-column
     * detection stays exact (null_count == total_rows is computed
     * exactly), as do null_count and total_rows.
@@ -58,42 +58,28 @@ object NullCheck {
     * one binary field per column, and the same profile takes about
     * 0.45 s.
     */
-  def approxProfile(tableName: String, df: DataFrame, rsd: Double = 0.02): DataFrame =
-    longProfile(tableName, df)(c => Hll.approxDistinct(rsd, Hll.hashable(c, df.schema(c).dataType)))
-
-  /** One aggregation job over every column of `df` — `distinct(column)`,
-    * an exact null count and the row count — exploded into one row per
-    * column. A column whose null_count is total_rows reports distinct 0
-    * whatever `distinct` estimates, so the NULL status is always exact.
-    */
-  private def longProfile(tableName: String, df: DataFrame)(
-      distinct: String => Column): DataFrame = {
+  def approxProfile(tableName: String, df: DataFrame, rsd: Double = 0.02): DataFrame = {
     val cols = df.columns.toSeq
-    val aggs = cols.flatMap { c =>
-      Seq(
-        distinct(c).as(s"d__$c"),
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"n__$c"))
-    } :+ count(lit(1)).as("total__")
-    val wide = df.agg(aggs.head, aggs.tail: _*)
-    val entries = array(cols.map { c =>
-      struct(
-        lit(c).as("column_name"),
-        col(s"d__$c").as("distinct_count"),
-        col(s"n__$c").as("null_count"),
-        col("total__").as("total_rows"))
-    }: _*)
-    wide
-      .select(explode(entries).as("e"))
-      .select(
+    val aggs = cols.zipWithIndex.map { case (c, i) =>
+      Hll.approxDistinct(rsd, Hll.hashable(c, df.schema(c).dataType)).as(s"d$i")
+    } ++ ColumnProfile.nullCounts(cols)
+    classify(tableName, ColumnProfile.longForm(df.agg(aggs.head, aggs.tail: _*), cols))
+  }
+
+  /** The report's columns from a [[ColumnProfile]] long form. A column
+    * whose null_count is total_rows reports distinct 0 whatever the
+    * profile estimates, so the NULL status is always exact.
+    */
+  private def classify(tableName: String, long: DataFrame): DataFrame =
+    long.select(
         lit(tableName).as("table_name"),
-        col("e.column_name"),
-        when(col("e.null_count") === col("e.total_rows"), 0L)
-          .otherwise(col("e.distinct_count")).as("distinct_count"),
-        col("e.null_count"),
-        col("e.total_rows"))
+        col("name").as("column_name"),
+        when(col("null_count") === col("total_rows"), 0L)
+          .otherwise(col("distinct_count")).as("distinct_count"),
+        col("null_count"),
+        col("total_rows"))
       .withColumn("status", statusCol(col("distinct_count")))
       .orderBy("column_name")
-  }
 
   /** Static oracle-SQL generator mirroring [[profile]] for DuckDB. */
   def oracleSql(tableName: String, columns: Seq[String]): String = {

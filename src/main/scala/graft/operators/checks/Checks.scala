@@ -1,5 +1,6 @@
 package graft.operators.checks
 
+import graft.operators.ColumnProfile
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -22,20 +23,18 @@ object Checks {
   object Completeness {
     def run(tableName: String, df: DataFrame, columns: Seq[String] = Nil): DataFrame = {
       val cols = if (columns.nonEmpty) columns else df.columns.toSeq
-      val aggs = cols.map(c =>
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"n__$c")) :+
-        count(lit(1)).as("total__")
+      val aggs = ColumnProfile.nullCounts(cols)
       val wide = df.agg(aggs.head, aggs.tail: _*)
-      val entries = array(cols.map { c =>
-        struct(lit(c).as("column_name"), col(s"n__$c").as("null_count"))
+      val entries = array(cols.zipWithIndex.map { case (c, i) =>
+        struct(lit(c).as("column_name"), col(s"n$i").as("null_count"))
       }: _*)
-      wide.select(col("total__"), explode(entries).as("e"))
+      wide.select(col("total"), explode(entries).as("e"))
         .select(
           lit(tableName).as("table_name"),
           col("e.column_name"),
           col("e.null_count"),
-          col("total__").as("total_rows"),
-          round(col("e.null_count") * 100.0 / col("total__"), 2).as("null_pct"))
+          col("total").as("total_rows"),
+          round(col("e.null_count") * 100.0 / col("total"), 2).as("null_pct"))
         .withColumn("status",
           when(col("null_count") === 0, "COMPLETE")
             .when(col("null_count") === col("total_rows"), "ALL_NULL")

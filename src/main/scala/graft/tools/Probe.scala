@@ -1,11 +1,12 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
 import graft.{GraftSession, SparkEntry}
 import org.apache.spark.graft.ListenerDrain
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -34,7 +35,8 @@ import scala.collection.mutable
   *
   * `time`, `explain` and `profile` also print how many classes Janino
   * compiled during the measured pass and the milliseconds it took, so
-  * a receipt shows when a timing paid for code generation.
+  * a receipt shows when a timing paid for code generation, and how
+  * many Spark jobs and stages the pass ran.
   *
   * The session is [[GraftSession.local]]: `SPARK_GRAFT_CPUS` cores,
   * default every core of the machine.
@@ -42,11 +44,12 @@ import scala.collection.mutable
 object Probe {
 
   /** One build+materialize: the frame whose plan ran, its rows, its
-    * wall, and the classes compiled (and compile ms) inside it.
+    * wall, the classes compiled (and compile ms) and the Spark jobs and
+    * stages inside it.
     */
   final case class Run(df: DataFrame, rows: Long, secs: Double,
-                       classes: Long, compileMs: Double) {
-    def codegen: String = f"compiled $classes classes in $compileMs%.0f ms"
+                       classes: Long, compileMs: Double, jobs: Int, stages: Int) {
+    def counts: String = f"compiled $classes classes in $compileMs%.0f ms; $jobs jobs, $stages stages"
   }
 
   /** Generated classes this JVM has compiled so far and their summed
@@ -81,13 +84,27 @@ object Probe {
     "text_bm25", "text_span_dedup_hashed", "ann_ivfpq", "text_vectorize",
     "ann_advisor")
 
-  /** A query that throws fails the probe loudly. */
+  /** A query that throws fails the probe loudly. Jobs and stages are
+    * counted on the active session, whose listener bus is drained
+    * around the run so only its own are counted.
+    */
   def run(build: => DataFrame): Run = {
+    val sc = SparkSession.active.sparkContext
+    val (jobs, stages) = (new AtomicInteger, new AtomicInteger)
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = stages.incrementAndGet()
+    }
+    ListenerDrain.drain(sc)
+    sc.addSparkListener(counter)
     val (c0, ns0) = compiled()
-    val r = Materialize.timed(build)
+    val r = try Materialize.timed(build) finally {
+      ListenerDrain.drain(sc)
+      sc.removeSparkListener(counter)
+    }
     val (c1, ns1) = compiled()
     r match {
-      case (Right((df, n)), secs) => Run(df, n, secs, c1 - c0, (ns1 - ns0) / 1e6)
+      case (Right((df, n)), secs) => Run(df, n, secs, c1 - c0, (ns1 - ns0) / 1e6, jobs.get, stages.get)
       case (Left(e), _) => throw e
     }
   }
@@ -217,12 +234,12 @@ object Probe {
       mode match {
         case "time" => names.foreach { name =>
           val r = time(query(name)(spark, sfDir))
-          println(f"[probe] $name: ${r.rows} rows in ${r.secs}%.2f s; ${r.codegen}")
+          println(f"[probe] $name: ${r.rows} rows in ${r.secs}%.2f s; ${r.counts}")
         }
         case "explain" => names.foreach { name =>
           val (r, report) = explain(query(name)(spark, sfDir))
           println(s"==== $name ====")
-          println(f"$name: ${r.rows} rows in ${r.secs}%.2f s; ${r.codegen}")
+          println(f"$name: ${r.rows} rows in ${r.secs}%.2f s; ${r.counts}")
           print(report)
         }
         case "profile" =>
@@ -233,7 +250,7 @@ object Probe {
             case _ => sfDir
           }
           val (r, stages) = profile(spark, query(name)(spark, dir))
-          println(f"query=$name rows=${r.rows} steady-state wall=${r.secs}%.3f s; ${r.codegen}")
+          println(f"query=$name rows=${r.rows} steady-state wall=${r.secs}%.3f s; ${r.counts}")
           println(f"${"stage"}%-5s ${"wall_ms"}%8s ${"run_ms"}%8s ${"cpu_ms"}%8s " +
             f"${"tasks"}%5s ${"input_mb"}%9s ${"in_rows"}%12s ${"shuf_r_mb"}%9s ${"shuf_w_mb"}%9s  name")
           stages.foreach { s =>

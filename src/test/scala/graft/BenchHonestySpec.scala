@@ -67,6 +67,7 @@ class BenchHonestySpec extends AnyFunSuite {
     val (r, stages) = Probe.profile(spark, enrichment())
     assert(r.rows === 1000L)
     assert(stages.nonEmpty)
+    assert(r.jobs >= 1 && r.stages == stages.size, r.counts)
     assertRanWithMarker("profile", r.df)
   }
 

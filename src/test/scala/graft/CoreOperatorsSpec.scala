@@ -213,12 +213,18 @@ class CoreOperatorsSpec extends AnyFunSuite {
   }
 
   test("keyfinder: parallel combo jobs carry the caller's job group") {
-    val df = Tables(spark, sf0001, "orders")
-    val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
+    import spark.implicits._
+    // 64 rows, 8 values per column: no single column is a key and the
+    // sketch prefilter prunes every size-1 combination, while five of the
+    // six pairs are keys, so size 2 runs one hash-witness job per pair
+    // on the `.par` workers
+    val df = (0 until 64).map(n => (n / 8, n % 8, (n / 8 + n) % 8, (n / 8 + 2 * n) % 8))
+      .toDF("x", "y", "z", "w")
     val sc = spark.sparkContext
     def underGroup(g: String) = jobGroupsOf {
       sc.setJobGroup(g, g)
-      try KeyFinder.candidateReport(spark, df, cols, 2).collect() finally sc.clearJobGroup()
+      try KeyFinder.findMinimalKeys(spark, df, df.columns.toSeq, 2).collect()
+      finally sc.clearJobGroup()
     }
     underGroup("a")
     val groups = underGroup("b")

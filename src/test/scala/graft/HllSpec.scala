@@ -5,11 +5,10 @@ import java.nio.file.{Files, Paths}
 import graft.functions.Hll
 import graft.operators.NullCheck
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
@@ -42,27 +41,8 @@ class HllSpec extends AnyFunSuite {
   }
 
   test("approxProfile: every column type, exact nulls, distincts within 5 rsd of profile") {
-    val schema = StructType(Seq(
-      StructField("l", LongType), StructField("i", IntegerType),
-      StructField("s", StringType), StructField("d", DoubleType),
-      StructField("dec", DecimalType(12, 2)), StructField("dt", DateType),
-      StructField("ts", TimestampType), StructField("b", BooleanType),
-      StructField("bin", BinaryType), StructField("arr", ArrayType(IntegerType)),
-      StructField("st", StructType(Seq(StructField("x", IntegerType), StructField("y", StringType)))),
-      StructField("m", MapType(StringType, IntegerType)),
-      StructField("allnull", StringType)))
-    val day0 = java.time.LocalDate.of(2020, 1, 1)
-    val rows = (0 until 3000).map { n =>
-      def orNull[T](v: T): Any = if (n % 11 == 0) null else v
-      Row(orNull(n.toLong * 7919), orNull(n % 1000), orNull(s"s${n % 2500}"),
-        orNull(n / 3 * 0.5), orNull(BigDecimal(n % 700) / 4),
-        orNull(java.sql.Date.valueOf(day0.plusDays(n % 400))),
-        orNull(java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(1600000000L + n * 37L))),
-        orNull(n % 2 == 0), orNull(Array[Byte]((n % 120).toByte, (n % 7).toByte)),
-        orNull(Seq(n % 50, n % 3)), orNull(Row(n % 60, s"y${n % 4}")),
-        orNull(Map(s"k${n % 30}" -> n % 5)), null)
-    }
-    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    val df = allTypes
+    val schema = df.schema
     val rsd = 0.02
     def byColumn(p: DataFrame) = p.collect().map(r =>
       r.getString(1) -> (r.getLong(2), r.getLong(3), r.getLong(4), r.getString(5))).toMap
