@@ -257,11 +257,14 @@ object KeyFinder {
       // containing any null-bearing column can never be a key
       // (keyfinder.py:30-76 checks nulls before distinct for the same
       // reason), so those combos skip their countDistinct job entirely.
+      // A SUM over no rows is NULL: an empty frame has no NULLs, and
+      // every size-1 candidate is then a key (0 distinct == 0 rows,
+      // keyfinder.py:30-76).
       val counts = ColumnProfile.nullCounts(candidates)
       val pre = proj.agg(counts.head, counts.tail: _*).collect()(0)
       val total = pre.getLong(candidates.size)
       val nullCols = candidates.zipWithIndex
-        .collect { case (c, i) if pre.getLong(i) > 0 => c }.toSet
+        .collect { case (c, i) if !pre.isNullAt(i) && pre.getLong(i) > 0 => c }.toSet
       (1 to upper).iterator.map { size =>
         val combos = ordered.combinations(size)
           .filter(_.forall(!nullCols.contains(_))).toSeq

@@ -1,7 +1,26 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.FileNotFoundException
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import graft.sources.Tables
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.InputFile
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.FileSourceOptions
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Row-count statistics and source/target reconciliation.
   *
@@ -9,81 +28,184 @@ import org.apache.spark.sql.functions._
   * (one COUNT(*) per table via a thread pool) and dbstats.py:181-214
   * (difference + percentage_difference columns).
   *
-  * Spark-first: all tables are counted in ONE job — each count is a
-  * partial aggregate (map-side) followed by a 1-row exchange, and the
-  * union of counts schedules every table's scan concurrently across the
-  * cluster. At 100 TB this reads only parquet footers' row-group
-  * metadata when possible (count(*) over parquet is rewritten by
-  * Catalyst to a metadata-only scan), so it is near-free.
+  * Every entry point counts through one footer path ([[footerCounts]]),
+  * as the reference's parquet backend does through pyarrow metadata
+  * (dbqt/connections.py parquet `count_rows`). A frame qualifies when its
+  * analyzed plan is a plain parquet relation (`ParquetFileFormat` itself,
+  * not a subclass) with only `Project` or `SubqueryAlias` nodes above it.
+  * Its count is the sum of the footer record counts over the relation's
+  * own file listing, so Spark's listing filters apply. Spark's own
+  * `count(*)` is no shortcut here: for the V1 parquet source
+  * `OptimizeMetadataOnlyQuery` answers only partition columns, so a
+  * count is a scan stage and a final aggregate per table.
+  *
+  * The arm follows Spark's rule for listing files on the driver: when a
+  * call's data files number at most
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold`, the footers
+  * are read on the driver and the result is a local relation, so no
+  * Spark job runs before the caller's action. Above it, one executor job
+  * reads every footer of the call (one task per file, up to 256 tasks).
+  *
+  * Every other frame keeps its `count(*)` plan: a `Filter`, `Limit` or
+  * join above the scan, a non-parquet source (JDBC, JSON, CSV), a
+  * streaming relation, and any frame read with `ignoreCorruptFiles` or
+  * `ignoreMissingFiles` on (session conf or read option), whose scan may
+  * skip files a footer read would fail on. Output schemas, row order and
+  * the `difference` / `percentage_difference` expressions are the same
+  * on both paths. Each call logs its decision at INFO.
   */
 object RowCount {
 
-  /** (table_name, row_count) for each named table — single-config mode. */
-  def counts(spark: SparkSession, tables: Map[String, DataFrame]): DataFrame = {
-    val parts = tables.toSeq.sortBy(_._1).map { case (name, df) =>
-      df.groupBy().agg(count(lit(1)).as("row_count"))
-        .select(lit(name).as("table_name"), col("row_count"))
-    }
-    parts.reduce(_ unionAll _).orderBy("table_name")
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.operators.RowCount")
+
+  /** The data files whose footers give a table's row count, and the
+    * read options the scan would apply to its Hadoop conf.
+    */
+  private[graft] final case class Listing(files: Seq[FileStatus], options: Map[String, String])
+
+  /** One call's choice: the data files it reads footers of, Spark's
+    * driver-listing threshold, and the frames that keep `count(*)`
+    * with the reason.
+    */
+  private[graft] final case class Decision(call: String, files: Int, threshold: Int,
+                                           fallbacks: Seq[(String, String)]) {
+    def onDriver: Boolean = files <= threshold
+    override def toString: String =
+      s"rowcount $call: footers of $files files on the " +
+        s"${if (onDriver) "driver" else "executors"} (threshold $threshold); count(*) for " +
+        (if (fallbacks.isEmpty) "none" else fallbacks.map { case (n, why) => s"$n ($why)" }.mkString(", "))
   }
 
-  /** Metadata-only row counts: sums parquet footer row-group counts
-    * without touching data pages — the reference's parquet backend does
-    * the same through pyarrow metadata (dbqt/connections.py parquet
-    * `count_rows`). At 100 TB the tool reads kilobytes of footers
-    * instead of the table; footers are read ON EXECUTORS (one task per
-    * file via parallelize), so a million-file lake doesn't serialize
-    * through the driver.
-    *
-    * Prefer this for the rowcount tool on parquet; [[counts]] is the
-    * engine-agnostic path (count(*) over any DataFrame source).
+  /** The footer listing of `df`, or why its count keeps the count(*) plan. */
+  private[graft] def listing(spark: SparkSession, df: DataFrame): Either[String, Listing] = {
+    def relation(p: LogicalPlan): Either[String, LogicalRelation] = p match {
+      case Project(_, child) => relation(child)
+      case SubqueryAlias(_, child) => relation(child)
+      case r: LogicalRelation => Right(r)
+      case other => Left(s"${other.nodeName} above the scan")
+    }
+    relation(df.queryExecution.analyzed).flatMap { r =>
+      r.relation match {
+        case h: HadoopFsRelation if h.fileFormat.getClass == classOf[ParquetFileFormat] && !r.isStreaming =>
+          val opts = CaseInsensitiveMap(h.options)
+          val conf = spark.sessionState.conf
+          def on(key: String, session: Boolean) = opts.get(key).fold(session)(_.toBoolean)
+          if (on(FileSourceOptions.IGNORE_CORRUPT_FILES, conf.ignoreCorruptFiles) ||
+              on(FileSourceOptions.IGNORE_MISSING_FILES, conf.ignoreMissingFiles))
+            Left("ignoreCorruptFiles or ignoreMissingFiles is on")
+          else Right(Listing(h.location.listFiles(Nil, Nil).flatMap(_.files.map(_.fileStatus)), h.options))
+        case _ => Left("not a parquet file relation")
+      }
+    }
+  }
+
+  /** The row count of each listed source, read from parquet footers (on
+    * the driver or in one executor job, by [[Decision.onDriver]]); None
+    * for a source that keeps its count(*) plan. Logs the decision.
     */
-  def metaCounts(spark: SparkSession, dir: String,
-                 names: Seq[String] = graft.sources.Tables.all): DataFrame = {
-    import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
+  private[graft] def footerCounts(spark: SparkSession, call: String,
+                                  sources: Seq[(String, Either[String, Listing])]): (Seq[Option[Long]], Decision) = {
+    val listed = sources.collect { case (_, Right(l)) => l }
+    val decision = Decision(call, listed.map(_.files.size).sum,
+      spark.sessionState.conf.parallelPartitionDiscoveryThreshold,
+      sources.collect { case (n, Left(why)) => n -> why })
+    if (log.isInfoEnabled) log.info(decision.toString)
+    val counts = (if (decision.onDriver) onDriver(spark, listed) else onExecutors(spark, listed)).iterator
+    (sources.map(_._2.toOption.map(_ => counts.next())), decision)
+  }
+
+  private def footerRows(in: InputFile): Long =
+    ParquetFileReader.readFooter(in, NO_FILTER).getBlocks.asScala.iterator.map(_.getRowCount).sum
+
+  private def onDriver(spark: SparkSession, listed: Seq[Listing]): Seq[Long] = {
+    val confs = mutable.Map.empty[Map[String, String], Configuration]
+    listed.map { l =>
+      val conf = confs.getOrElseUpdate(l.options - "path" - "paths",
+        spark.sessionState.newHadoopConfWithOptions(l.options))
+      l.files.iterator.map(f => footerRows(HadoopInputFile.fromStatus(f, conf))).sum
+    }
+  }
+
+  private def onExecutors(spark: SparkSession, listed: Seq[Listing]): Seq[Long] = {
     // ship the session's hadoop conf to the tasks as plain pairs — a
     // fresh Configuration() there would drop spark.hadoop.* settings
     // (object-store credentials/endpoints) and fail on exactly the
-    // deployments this path exists for
-    val confPairs = {
-      import scala.jdk.CollectionConverters._
-      hconf.iterator().asScala.map(e => (e.getKey, e.getValue)).toArray
-    }
-    val files: Seq[(String, String)] = names.flatMap { t =>
-      val path = new org.apache.hadoop.fs.Path(graft.sources.Tables.path(dir, t))
-      val fs = path.getFileSystem(hconf)
-      // missing table = loud error, matching what counts() would do
-      require(fs.exists(path), s"table path does not exist: $path")
-      if (fs.getFileStatus(path).isDirectory) {
-        // recursive: partitioned layouts nest files under col=value dirs
-        val it = fs.listFiles(path, true)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-        while (it.hasNext) {
-          val s = it.next()
-          if (s.getPath.getName.endsWith(".parquet")) buf += ((t, s.getPath.toString))
-        }
-        buf
-      } else Seq((t, path.toString))
-    }
-    val counted = spark.sparkContext
-      .parallelize(files, math.max(1, math.min(files.size, 256)))
-      .map { case (t, f) =>
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        confPairs.foreach { case (k, v) => conf.set(k, v) }
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try (t, reader.getRecordCount) finally reader.close()
+    // deployments this arm exists for
+    val base = spark.sessionState.newHadoopConf().iterator().asScala.map(e => (e.getKey, e.getValue)).toArray
+    val options = listed.map(_.options - "path" - "paths").toArray
+    val files = listed.zipWithIndex.flatMap { case (l, i) => l.files.map(f => (i, f.getPath.toString)) }
+    val sums = spark.sparkContext.parallelize(files, math.max(1, math.min(files.size, 256)))
+      .mapPartitions { part =>
+        val confs = mutable.Map.empty[Int, Configuration]
+        def conf(i: Int) = confs.getOrElseUpdate(i, {
+          val c = new Configuration(false)
+          (base ++ options(i)).foreach { case (k, v) => c.set(k, v) }
+          c
+        })
+        part.map { case (i, f) => i -> footerRows(HadoopInputFile.fromPath(new Path(f), conf(i))) }
+          .toSeq.groupMapReduce(_._1)(_._2)(_ + _).iterator
       }
-      .toDF("table_name", "file_rows")
-      .groupBy("table_name").agg(sum("file_rows").as("row_count"))
-    // a table dir with zero data files is a legal empty table: report 0,
-    // don't silently omit the row
-    names.toDF("table_name").join(counted, Seq("table_name"), "left")
-      .select(col("table_name"),
-        coalesce(col("row_count"), lit(0L)).as("row_count"))
-      .orderBy("table_name")
+      .collect().groupMapReduce(_._1)(_._2)(_ + _)
+    listed.indices.map(sums.getOrElse(_, 0L))
+  }
+
+  /** `rows` as a local relation, sorted by their first column as
+    * `orderBy` sorts strings, unioned with `parts` (the count(*) plans),
+    * then `project`ed. Only a result with such parts is ordered by Spark:
+    * a local relation needs no job to build, and `orderBy` over it would
+    * add a range shuffle.
+    */
+  private def assemble(spark: SparkSession, schema: StructType, rows: Seq[Row],
+                       parts: Seq[DataFrame])(project: DataFrame => DataFrame): DataFrame = {
+    val local = spark.createDataFrame(rows.sortBy(r => UTF8String.fromString(r.getString(0))).asJava, schema)
+    val all = project(parts.foldLeft(local)(_ unionAll _))
+    if (parts.isEmpty) all else all.orderBy(schema.head.name)
+  }
+
+  private def countOf(df: DataFrame, as: String): DataFrame = df.groupBy().agg(count(lit(1)).as(as))
+
+  /** One side's count as a one-row frame: its footer count, else its count(*) plan. */
+  private def side(spark: SparkSession, df: DataFrame, footer: Option[Long], as: String): DataFrame =
+    footer.fold(countOf(df, as))(n => spark.range(1).select(lit(n).as(as)))
+
+  /** (table_name, row_count) for each named table — single-config mode. */
+  def counts(spark: SparkSession, tables: Map[String, DataFrame]): DataFrame = {
+    val named = tables.toSeq.sortBy(_._1)
+    val (footer, _) = footerCounts(spark, "counts", named.map { case (n, df) => n -> listing(spark, df) })
+    val (rows, parts) = named.zip(footer).partitionMap {
+      case ((n, _), Some(c)) => Left(Row(n, c))
+      case ((n, df), None) =>
+        Right(countOf(df, "row_count").select(lit(n).as("table_name"), col("row_count")))
+    }
+    assemble(spark, StructType(Seq(StructField("table_name", StringType, nullable = false),
+      StructField("row_count", LongType, nullable = false))), rows, parts)(identity)
+  }
+
+  /** Footer row counts of the `<name>.parquet` tables under `dir`,
+    * without a DataFrame per table: the reference's parquet backend
+    * (dbqt/connections.py parquet `count_rows`). The listing follows
+    * Spark's file index (hidden and summary files and zero-length
+    * files are not data); a table directory with no data file is a
+    * legal empty table and counts 0. A missing table is a loud error.
+    *
+    * [[counts]] takes frames of any source; this takes a directory.
+    */
+  def metaCounts(spark: SparkSession, dir: String,
+                 names: Seq[String] = Tables.all): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val sources = names.map { t =>
+      val path = new Path(Tables.path(dir, t))
+      val fs = path.getFileSystem(conf)
+      val root = try fs.getFileStatus(path) catch {
+        case _: FileNotFoundException =>
+          throw new IllegalArgumentException(s"table path does not exist: $path")
+      }
+      t -> Right(Listing(Tables.dataFiles(fs, root), Map.empty))
+    }
+    val (footer, _) = footerCounts(spark, "metaCounts", sources)
+    assemble(spark, StructType(Seq(StructField("table_name", StringType, nullable = true),
+        StructField("row_count", LongType, nullable = false))),
+      names.zip(footer).map { case (t, n) => Row(t, n.get) }, Nil)(identity)
   }
 
   /** Source/target reconciliation: difference and percentage_difference,
@@ -93,17 +215,22 @@ object RowCount {
     * caller's job).
     */
   def compare(spark: SparkSession, pairs: Seq[(String, DataFrame, DataFrame)]): DataFrame = {
-    val parts = pairs.map { case (name, src, tgt) =>
-      val s = src.groupBy().agg(count(lit(1)).as("source_row_count"))
-      val t = tgt.groupBy().agg(count(lit(1)).as("target_row_count"))
-      s.crossJoin(t).select(lit(name).as("pair_name"),
-        col("source_row_count"), col("target_row_count"))
+    val (footer, _) = footerCounts(spark, "compare", pairs.flatMap { case (n, s, t) =>
+      Seq(s"$n.source" -> listing(spark, s), s"$n.target" -> listing(spark, t))
+    })
+    val (rows, parts) = pairs.zip(footer.grouped(2)).partitionMap {
+      case ((n, _, _), Seq(Some(s), Some(t))) => Left(Row(n, s, t))
+      case ((n, src, tgt), Seq(s, t)) =>
+        Right(side(spark, src, s, "source_row_count").crossJoin(side(spark, tgt, t, "target_row_count"))
+          .select(lit(n).as("pair_name"), col("source_row_count"), col("target_row_count")))
     }
-    parts.reduce(_ unionAll _)
+    val schema = StructType(Seq(StructField("pair_name", StringType, nullable = false),
+      StructField("source_row_count", LongType, nullable = false),
+      StructField("target_row_count", LongType, nullable = false)))
+    assemble(spark, schema, rows, parts)(_
       .withColumn("difference", col("target_row_count") - col("source_row_count"))
       .withColumn("percentage_difference",
-        round(col("difference") * 100.0 / col("source_row_count"), 2))
-      .orderBy("pair_name")
+        round(col("difference") * 100.0 / col("source_row_count"), 2)))
   }
 
   /** Catalog-level reconciliation: same-name tables from two
@@ -111,37 +238,38 @@ object RowCount {
     * one-sided tables get a discovery note and NO count — mirroring
     * dbstats.py's source/target mode ("Only in source, row count
     * skipped", dbstats.py:181-199) where counting skips undiscovered
-    * tables. Counting both sides of every common table still runs as
-    * one unioned job.
+    * tables. Both sides of every common table are counted in one
+    * [[footerCounts]] call; the ones that fall back run as one unioned
+    * plan.
     */
   def compareCatalogs(spark: SparkSession,
                       source: Map[String, DataFrame],
                       target: Map[String, DataFrame]): DataFrame = {
     val all = (source.keySet ++ target.keySet).toSeq.sorted
-    val parts = all.map { name =>
-      (source.get(name), target.get(name)) match {
-        case (Some(s), Some(t)) =>
-          s.groupBy().agg(count(lit(1)).as("source_row_count"))
-            .crossJoin(t.groupBy().agg(count(lit(1)).as("target_row_count")))
-            .select(lit(name).as("table_name"),
-              col("source_row_count"), col("target_row_count"),
-              (col("target_row_count") - col("source_row_count")).as("difference"),
-              lit("BOTH").as("status"))
-        case (Some(s), None) =>
-          spark.range(1).select(lit(name).as("table_name"),
-            lit(null).cast("long").as("source_row_count"),
-            lit(null).cast("long").as("target_row_count"),
-            lit(null).cast("long").as("difference"),
-            lit("ONLY_IN_SOURCE").as("status"))
-        case (None, Some(t)) =>
-          spark.range(1).select(lit(name).as("table_name"),
-            lit(null).cast("long").as("source_row_count"),
-            lit(null).cast("long").as("target_row_count"),
-            lit(null).cast("long").as("difference"),
-            lit("ONLY_IN_TARGET").as("status"))
-        case (None, None) => throw new IllegalStateException("unreachable")
+    val both = all.filter(n => source.contains(n) && target.contains(n))
+    val (footer, _) = footerCounts(spark, "compareCatalogs", both.flatMap { n =>
+      Seq(s"source.$n" -> listing(spark, source(n)), s"target.$n" -> listing(spark, target(n)))
+    })
+    val counted = both.zip(footer.grouped(2)).toMap
+    val (rows, parts) = all.partitionMap { n =>
+      counted.get(n) match {
+        case Some(Seq(Some(s), Some(t))) => Left(Row(n, s, t, "BOTH"))
+        case Some(Seq(s, t)) =>
+          Right(side(spark, source(n), s, "source_row_count")
+            .crossJoin(side(spark, target(n), t, "target_row_count"))
+            .select(lit(n).as("table_name"), col("source_row_count"),
+              col("target_row_count"), lit("BOTH").as("status")))
+        case None =>
+          Left(Row(n, null, null, if (source.contains(n)) "ONLY_IN_SOURCE" else "ONLY_IN_TARGET"))
       }
     }
-    parts.reduce(_ unionAll _).orderBy("table_name")
+    // counts are nullable exactly when some table is one-sided
+    val oneSided = both.size < all.size
+    val schema = StructType(Seq(StructField("table_name", StringType, nullable = false),
+      StructField("source_row_count", LongType, oneSided), StructField("target_row_count", LongType, oneSided),
+      StructField("status", StringType, nullable = false)))
+    assemble(spark, schema, rows, parts)(_.select(col("table_name"), col("source_row_count"),
+      col("target_row_count"),
+      (col("target_row_count") - col("source_row_count")).as("difference"), col("status")))
   }
 }

@@ -144,6 +144,12 @@ object Tables {
       SummaryFiles(n) || !((n.startsWith("_") && !n.contains("=")) || n.startsWith("."))
     }.flatMap(leafFiles(fs, _))
 
+  /** The files under `st` that Spark's file index hands to a scan: the
+    * listed files less the summary files and zero-length files.
+    */
+  private[graft] def dataFiles(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
+    leafFiles(fs, st).filter(f => f.getLen > 0 && !SummaryFiles(f.getPath.getName))
+
   /** Load every known table lazily (plans only; nothing is read until an
     * action runs).
     */
@@ -160,10 +166,10 @@ object Tables {
     * list_tables discovery (dbqt/connections.py:139-146).
     */
   def discover(spark: SparkSession, dir: String, ext: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
+    val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
+    val listed = try fs.listStatus(p) catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    listed.toSeq.map(_.getPath.getName)
       .filter(_.endsWith(s".$ext")).map(_.stripSuffix(s".$ext")).sorted
   }
 

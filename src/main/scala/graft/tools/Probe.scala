@@ -8,6 +8,7 @@ import org.apache.spark.graft.ListenerDrain
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker.{ANALYSIS, OPTIMIZATION, PLANNING}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
@@ -35,8 +36,11 @@ import scala.collection.mutable
   *
   * `time`, `explain` and `profile` also print how many classes Janino
   * compiled during the measured pass and the milliseconds it took, so
-  * a receipt shows when a timing paid for code generation, and how
-  * many Spark jobs and stages the pass ran.
+  * a receipt shows when a timing paid for code generation, how many
+  * Spark jobs and stages the pass ran, and the measured frame's own
+  * analysis, optimization and planning milliseconds (its
+  * `queryExecution.tracker`; plans an operator ran eagerly while
+  * building the frame are not in them).
   *
   * The session is [[GraftSession.local]]: `SPARK_GRAFT_CPUS` cores,
   * default every core of the machine.
@@ -45,11 +49,14 @@ object Probe {
 
   /** One build+materialize: the frame whose plan ran, its rows, its
     * wall, the classes compiled (and compile ms) and the Spark jobs and
-    * stages inside it.
+    * stages inside it. [[counts]] also reads the frame's planning phases.
     */
   final case class Run(df: DataFrame, rows: Long, secs: Double,
                        classes: Long, compileMs: Double, jobs: Int, stages: Int) {
-    def counts: String = f"compiled $classes classes in $compileMs%.0f ms; $jobs jobs, $stages stages"
+    def counts: String = f"compiled $classes classes in $compileMs%.0f ms; $jobs jobs, $stages stages; " +
+      Seq(ANALYSIS, OPTIMIZATION, PLANNING).map { p =>
+        s"$p ${df.queryExecution.tracker.phases.get(p).fold(0L)(_.durationMs)} ms"
+      }.mkString(", ")
   }
 
   /** Generated classes this JVM has compiled so far and their summed

@@ -107,6 +107,15 @@ class CoreOperatorsSpec extends AnyFunSuite {
     assert(keys.toSeq == Seq(("a,b", 2)))
   }
 
+  test("keyfinder: an empty frame makes every single candidate a key") {
+    import spark.implicits._
+    // no rows: no NULLs, and 0 distinct == 0 rows for every column
+    // (the key rule of keyfinder.py:30-76), so the search stops at size 1
+    val keys = KeyFinder.findMinimalKeys(spark, Seq((1, 2)).toDF("a", "b").limit(0), Seq("a", "b"), 2)
+      .collect().map(r => (r.getString(0), r.getInt(1)))
+    assert(keys.toSeq == Seq(("a", 1), ("b", 1)))
+  }
+
   test("keyfinder: near-key with a single duplicate is rejected (hash-witness fallback)") {
     import spark.implicits._
     // 100 rows, exactly one duplicated (a, s) pair: the hash-witness
@@ -266,8 +275,7 @@ class CoreOperatorsSpec extends AnyFunSuite {
   test("metadata rowcount agrees with the scan-based counts") {
     val meta = RowCount.metaCounts(spark, TestSpark.sf0001)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val full = RowCount.counts(spark, Tables.load(spark, TestSpark.sf0001))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val full = Tables.all.map(t => t -> Tables(spark, TestSpark.sf0001, t).count()).toMap
     assert(meta == full)
     assert(meta.size == Tables.all.size)
   }
