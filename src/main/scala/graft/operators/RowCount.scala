@@ -39,18 +39,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * `OptimizeMetadataOnlyQuery` answers only partition columns, so a
   * count is a scan stage and a final aggregate per table.
   *
-  * The arm follows Spark's rule for listing files on the driver: when a
-  * call's data files number at most
-  * `spark.sql.sources.parallelPartitionDiscovery.threshold`, the footers
-  * are read on the driver and the result is a local relation, so no
-  * Spark job runs before the caller's action. Above it, one executor job
-  * reads every footer of the call (one task per file, up to 256 tasks).
+  * When a call reads at most [[DriverMaxFiles]] footer files, they are
+  * read on the driver and the result is a local relation, so no Spark
+  * job runs before the caller's action. Above it, one executor job reads
+  * every footer of the call, one task per core.
   *
   * Every other frame keeps its `count(*)` plan: a `Filter`, `Limit` or
   * join above the scan, a non-parquet source (JDBC, JSON, CSV), a
   * streaming relation, and any frame read with `ignoreCorruptFiles` or
   * `ignoreMissingFiles` on (session conf or read option), whose scan may
-  * skip files a footer read would fail on. Output schemas, row order and
+  * skip files a footer read would fail on. A `compare` pair with such a
+  * side counts both sides with `count(*)`. Output schemas, row order and
   * the `difference` / `percentage_difference` expressions are the same
   * on both paths. Each call logs its decision at INFO.
   */
@@ -58,23 +57,36 @@ object RowCount {
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.operators.RowCount")
 
+  /** The most footer files one call reads on the driver; above it one
+    * executor job reads them. The crossover measured on a 4-core local
+    * session over local disk: the driver arm costs about 0.1 ms per
+    * footer, the executor job about 14 ms plus 0.03 ms per footer, so
+    * the driver won at every size up to 160 files, the two tied at 192
+    * and the job won from 224. Storage with a higher per-read latency
+    * (an object store) moves the crossover down; that was not measured.
+    */
+  private[graft] val DriverMaxFiles = 192
+
   /** The data files whose footers give a table's row count, and the
     * read options the scan would apply to its Hadoop conf.
     */
   private[graft] final case class Listing(files: Seq[FileStatus], options: Map[String, String])
 
-  /** One call's choice: the data files it reads footers of, Spark's
-    * driver-listing threshold, and the frames that keep `count(*)`
-    * with the reason.
+  /** One call's choice: the data files it reads footers of, and the
+    * frames that keep `count(*)` with the reason.
     */
-  private[graft] final case class Decision(call: String, files: Int, threshold: Int,
-                                           fallbacks: Seq[(String, String)]) {
-    def onDriver: Boolean = files <= threshold
+  private[graft] final case class Decision(call: String, files: Int, fallbacks: Seq[(String, String)]) {
+    def onDriver: Boolean = files <= DriverMaxFiles
     override def toString: String =
       s"rowcount $call: footers of $files files on the " +
-        s"${if (onDriver) "driver" else "executors"} (threshold $threshold); count(*) for " +
+        s"${if (onDriver) "driver" else "executors"} (driver up to $DriverMaxFiles); count(*) for " +
         (if (fallbacks.isEmpty) "none" else fallbacks.map { case (n, why) => s"$n ($why)" }.mkString(", "))
   }
+
+  /** Which arm counts `sources`, and which of them keep count(*). */
+  private[graft] def decide(call: String, sources: Seq[(String, Either[String, Listing])]): Decision =
+    Decision(call, sources.collect { case (_, Right(l)) => l.files.size }.sum,
+      sources.collect { case (n, Left(why)) => n -> why })
 
   /** The footer listing of `df`, or why its count keeps the count(*) plan. */
   private[graft] def listing(spark: SparkSession, df: DataFrame): Either[String, Listing] = {
@@ -100,24 +112,22 @@ object RowCount {
   }
 
   /** The row count of each listed source, read from parquet footers (on
-    * the driver or in one executor job, by [[Decision.onDriver]]); None
-    * for a source that keeps its count(*) plan. Logs the decision.
+    * the driver or in one executor job, by [[decide]]); None for a
+    * source that keeps its count(*) plan. Logs the decision.
     */
   private[graft] def footerCounts(spark: SparkSession, call: String,
-                                  sources: Seq[(String, Either[String, Listing])]): (Seq[Option[Long]], Decision) = {
-    val listed = sources.collect { case (_, Right(l)) => l }
-    val decision = Decision(call, listed.map(_.files.size).sum,
-      spark.sessionState.conf.parallelPartitionDiscoveryThreshold,
-      sources.collect { case (n, Left(why)) => n -> why })
+                                  sources: Seq[(String, Either[String, Listing])]): Seq[Option[Long]] = {
+    val decision = decide(call, sources)
     if (log.isInfoEnabled) log.info(decision.toString)
+    val listed = sources.collect { case (_, Right(l)) => l }
     val counts = (if (decision.onDriver) onDriver(spark, listed) else onExecutors(spark, listed)).iterator
-    (sources.map(_._2.toOption.map(_ => counts.next())), decision)
+    sources.map(_._2.toOption.map(_ => counts.next()))
   }
 
   private def footerRows(in: InputFile): Long =
     ParquetFileReader.readFooter(in, NO_FILTER).getBlocks.asScala.iterator.map(_.getRowCount).sum
 
-  private def onDriver(spark: SparkSession, listed: Seq[Listing]): Seq[Long] = {
+  private[graft] def onDriver(spark: SparkSession, listed: Seq[Listing]): Seq[Long] = {
     val confs = mutable.Map.empty[Map[String, String], Configuration]
     listed.map { l =>
       val conf = confs.getOrElseUpdate(l.options - "path" - "paths",
@@ -126,7 +136,7 @@ object RowCount {
     }
   }
 
-  private def onExecutors(spark: SparkSession, listed: Seq[Listing]): Seq[Long] = {
+  private[graft] def onExecutors(spark: SparkSession, listed: Seq[Listing]): Seq[Long] = {
     // ship the session's hadoop conf to the tasks as plain pairs — a
     // fresh Configuration() there would drop spark.hadoop.* settings
     // (object-store credentials/endpoints) and fail on exactly the
@@ -134,7 +144,8 @@ object RowCount {
     val base = spark.sessionState.newHadoopConf().iterator().asScala.map(e => (e.getKey, e.getValue)).toArray
     val options = listed.map(_.options - "path" - "paths").toArray
     val files = listed.zipWithIndex.flatMap { case (l, i) => l.files.map(f => (i, f.getPath.toString)) }
-    val sums = spark.sparkContext.parallelize(files, math.max(1, math.min(files.size, 256)))
+    val slices = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
+    val sums = spark.sparkContext.parallelize(files, slices)
       .mapPartitions { part =>
         val confs = mutable.Map.empty[Int, Configuration]
         def conf(i: Int) = confs.getOrElseUpdate(i, {
@@ -164,14 +175,10 @@ object RowCount {
 
   private def countOf(df: DataFrame, as: String): DataFrame = df.groupBy().agg(count(lit(1)).as(as))
 
-  /** One side's count as a one-row frame: its footer count, else its count(*) plan. */
-  private def side(spark: SparkSession, df: DataFrame, footer: Option[Long], as: String): DataFrame =
-    footer.fold(countOf(df, as))(n => spark.range(1).select(lit(n).as(as)))
-
   /** (table_name, row_count) for each named table — single-config mode. */
   def counts(spark: SparkSession, tables: Map[String, DataFrame]): DataFrame = {
     val named = tables.toSeq.sortBy(_._1)
-    val (footer, _) = footerCounts(spark, "counts", named.map { case (n, df) => n -> listing(spark, df) })
+    val footer = footerCounts(spark, "counts", named.map { case (n, df) => n -> listing(spark, df) })
     val (rows, parts) = named.zip(footer).partitionMap {
       case ((n, _), Some(c)) => Left(Row(n, c))
       case ((n, df), None) =>
@@ -202,7 +209,7 @@ object RowCount {
       }
       t -> Right(Listing(Tables.dataFiles(fs, root), Map.empty))
     }
-    val (footer, _) = footerCounts(spark, "metaCounts", sources)
+    val footer = footerCounts(spark, "metaCounts", sources)
     assemble(spark, StructType(Seq(StructField("table_name", StringType, nullable = true),
         StructField("row_count", LongType, nullable = false))),
       names.zip(footer).map { case (t, n) => Row(t, n.get) }, Nil)(identity)
@@ -215,13 +222,13 @@ object RowCount {
     * caller's job).
     */
   def compare(spark: SparkSession, pairs: Seq[(String, DataFrame, DataFrame)]): DataFrame = {
-    val (footer, _) = footerCounts(spark, "compare", pairs.flatMap { case (n, s, t) =>
+    val footer = footerCounts(spark, "compare", pairs.flatMap { case (n, s, t) =>
       Seq(s"$n.source" -> listing(spark, s), s"$n.target" -> listing(spark, t))
     })
     val (rows, parts) = pairs.zip(footer.grouped(2)).partitionMap {
       case ((n, _, _), Seq(Some(s), Some(t))) => Left(Row(n, s, t))
-      case ((n, src, tgt), Seq(s, t)) =>
-        Right(side(spark, src, s, "source_row_count").crossJoin(side(spark, tgt, t, "target_row_count"))
+      case ((n, src, tgt), _) =>
+        Right(countOf(src, "source_row_count").crossJoin(countOf(tgt, "target_row_count"))
           .select(lit(n).as("pair_name"), col("source_row_count"), col("target_row_count")))
     }
     val schema = StructType(Seq(StructField("pair_name", StringType, nullable = false),
@@ -247,16 +254,16 @@ object RowCount {
                       target: Map[String, DataFrame]): DataFrame = {
     val all = (source.keySet ++ target.keySet).toSeq.sorted
     val both = all.filter(n => source.contains(n) && target.contains(n))
-    val (footer, _) = footerCounts(spark, "compareCatalogs", both.flatMap { n =>
+    val footer = footerCounts(spark, "compareCatalogs", both.flatMap { n =>
       Seq(s"source.$n" -> listing(spark, source(n)), s"target.$n" -> listing(spark, target(n)))
     })
     val counted = both.zip(footer.grouped(2)).toMap
     val (rows, parts) = all.partitionMap { n =>
       counted.get(n) match {
         case Some(Seq(Some(s), Some(t))) => Left(Row(n, s, t, "BOTH"))
-        case Some(Seq(s, t)) =>
-          Right(side(spark, source(n), s, "source_row_count")
-            .crossJoin(side(spark, target(n), t, "target_row_count"))
+        case Some(_) =>
+          Right(countOf(source(n), "source_row_count")
+            .crossJoin(countOf(target(n), "target_row_count"))
             .select(lit(n).as("table_name"), col("source_row_count"),
               col("target_row_count"), lit("BOTH").as("status")))
         case None =>

@@ -133,22 +133,28 @@ object Tables {
 
   private val SummaryFiles = Set("_common_metadata", "_metadata")
 
-  /** Files under `st` that Spark's file index lists: names starting with
-    * `_` (unless a `k=v` partition directory) or `.` are skipped, except
-    * the two summary files.
+  /** Names starting with `_` (unless a `k=v` partition directory) or `.`. */
+  private def hidden(n: String): Boolean = (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+
+  /** Files under `st` that Spark's file index lists
+    * (`HadoopFSUtils.shouldFilterOutPathName`): hidden names and names
+    * ending in `._COPYING_` (a copy in progress) are skipped, except
+    * names starting with `_common_metadata` or `_metadata`.
     */
   private def leafFiles(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
     if (!st.isDirectory) Seq(st)
     else fs.listStatus(st.getPath).toSeq.filter { c =>
       val n = c.getPath.getName
-      SummaryFiles(n) || !((n.startsWith("_") && !n.contains("=")) || n.startsWith("."))
+      n.startsWith("_common_metadata") || n.startsWith("_metadata") ||
+        !(hidden(n) || n.endsWith("._COPYING_"))
     }.flatMap(leafFiles(fs, _))
 
   /** The files under `st` that Spark's file index hands to a scan: the
-    * listed files less the summary files and zero-length files.
+    * listed files less hidden (summary) and zero-length files
+    * (`PartitioningAwareFileIndex.isDataPath` and `isNonEmptyFile`).
     */
   private[graft] def dataFiles(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
-    leafFiles(fs, st).filter(f => f.getLen > 0 && !SummaryFiles(f.getPath.getName))
+    leafFiles(fs, st).filter(f => f.getLen > 0 && !hidden(f.getPath.getName))
 
   /** Load every known table lazily (plans only; nothing is read until an
     * action runs).

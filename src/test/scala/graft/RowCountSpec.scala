@@ -17,8 +17,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class RowCountSpec extends AnyFunSuite {
   import TestSpark._
 
-  private val Threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-
   private def withDir[T](body: String => T): T = {
     val base = Files.createTempDirectory("graft_rowcount").toString
     try body(base) finally FileUtils.deleteDirectory(new File(base))
@@ -35,18 +33,17 @@ class RowCountSpec extends AnyFunSuite {
 
   /** The footer arm's decision for `frames`, and their counts by name. */
   private def footer(frames: (String, DataFrame)*): (RowCount.Decision, Map[String, Option[Long]]) = {
-    val (counts, d) = RowCount.footerCounts(spark, "spec",
-      frames.map { case (n, df) => n -> RowCount.listing(spark, df) })
-    (d, frames.map(_._1).zip(counts).toMap)
+    val sources = frames.map { case (n, df) => n -> RowCount.listing(spark, df) }
+    (RowCount.decide("spec", sources), frames.map(_._1).zip(RowCount.footerCounts(spark, "spec", sources)).toMap)
   }
 
   /** `build`'s schema and rows equal those of the count(*) plan it gives
-    * with ignoreCorruptFiles on, and it starts no Spark job before its
-    * action. Returns the rows.
+    * with ignoreCorruptFiles on, and it starts `jobs` Spark jobs before
+    * its action (none on the driver arm). Returns the rows.
     */
-  private def sameAsCountPlan(build: => DataFrame): Seq[Row] = {
+  private def sameAsCountPlan(build: => DataFrame, jobs: Int = 0): Seq[Row] = {
     var df: DataFrame = null
-    assert(jobGroupsOf { df = build }.isEmpty, "the footer path ran a job before the action")
+    assert(jobGroupsOf { df = build }.size == jobs, "the footer path ran another number of jobs")
     val plan = withConf("spark.sql.files.ignoreCorruptFiles", "true")(build)
     assert(df.schema == plan.schema)
     val rows = df.collect().toSeq
@@ -54,9 +51,9 @@ class RowCountSpec extends AnyFunSuite {
     rows
   }
 
-  /** A three-file table with `_SUCCESS`, a `_metadata` summary file (a
-    * valid parquet file the scan must not count) and a zero-length
-    * `.parquet` file.
+  /** A three-file table with `_SUCCESS`, a `_metadata` summary file and
+    * a `._COPYING_` copy in progress (both valid parquet files the scan
+    * must not count) and a zero-length `.parquet` file.
     */
   private def multiFile(base: String): DataFrame = {
     import spark.implicits._
@@ -64,12 +61,13 @@ class RowCountSpec extends AnyFunSuite {
     (1 to 100).map(i => (i, s"r$i")).toDF("id", "s").repartition(3).write.parquet(dir)
     val part = new File(dir).listFiles().find(_.getName.startsWith("part-")).get
     Files.copy(part.toPath, new File(dir, "_metadata").toPath, StandardCopyOption.REPLACE_EXISTING)
+    Files.copy(part.toPath, new File(dir, "part-x.parquet._COPYING_").toPath)
     new File(dir, "part-zero-length.parquet").createNewFile()
     assert(new File(dir, "_SUCCESS").exists())
     spark.read.parquet(dir)
   }
 
-  test("multi-file directory: summary, marker and zero-length files count as the scan counts them") {
+  test("multi-file directory: summary, marker, in-copy and zero-length files count as the scan counts them") {
     withDir { base =>
       val df = multiFile(base)
       val n = df.count()
@@ -154,6 +152,12 @@ class RowCountSpec extends AnyFunSuite {
       assert(sameAsCountPlan(RowCount.compare(spark, Seq(("a3_vs_a5", t("a3"), t("a5")),
         ("a5_vs_a3", t("a5"), t("a3"))))) ==
         Seq(Row("a3_vs_a5", 3L, 5L, 2L, 66.67), Row("a5_vs_a3", 5L, 3L, -2L, -40.0)))
+      // a pair with one side that keeps count(*) counts both sides that way
+      val mixed = Seq(("a5_vs_a3", t("a5"), t("a3")), ("mixed", t("a3"), t("a5").where("x > 1")))
+      assert(sameAsCountPlan(RowCount.compare(spark, mixed)) ==
+        Seq(Row("a5_vs_a3", 5L, 3L, -2L, -40.0), Row("mixed", 3L, 4L, 1L, 33.33)))
+      assert(sameAsCountPlan(RowCount.compareCatalogs(spark, Map("m" -> t("a3")), Map("m" -> t("a5").limit(2)))) ==
+        Seq(Row("m", 3L, 2L, -1L, "BOTH")))
       // a zero source count divides by zero on both paths alike
       def failure(df: => DataFrame) = intercept[Exception](df.collect()).getClass
       val zero = Seq(("a0_vs_a3", t("a0"), t("a3")))
@@ -170,26 +174,47 @@ class RowCountSpec extends AnyFunSuite {
     }
   }
 
-  test("gate queries: both arms give the count(*) plan's rows") {
+  test("gate queries give the count(*) plan's rows; both arms count every gate table as Spark does") {
     val names = Seq("rowcount", "rowcount_compare", "rowcount_catalogs")
     def run(name: String) = {
       val df = SparkEntry.queries(name)(spark, sf0001)
       (df.schema, df.collect().toSeq)
     }
     val plan = withConf("spark.sql.files.ignoreCorruptFiles", "true")(names.map(run))
+    assert(names.map(run) == plan)
     // rowcount_meta takes a directory, not frames: Spark's count per table
     val scans = Tables.all.sorted.map(t => Row(t, Tables(spark, sf0001, t).count()))
-    def meta = SparkEntry.queries("rowcount_meta")(spark, sf0001).collect().toSeq
-    val tables = Tables.load(spark, sf0001)
-    assert(footer(tables.toSeq: _*)._1.onDriver)
-    assert(names.map(run) == plan)
-    assert(meta == scans)
-    withConf(Threshold, "1") {
-      assert(!footer(tables.toSeq: _*)._1.onDriver)
-      assert(names.map(run) == plan)
-      assert(meta == scans)
-      // the executor arm is one job for the whole call
-      assert(jobGroupsOf { RowCount.counts(spark, tables); () }.size == 1)
+    assert(SparkEntry.queries("rowcount_meta")(spark, sf0001).collect().toSeq == scans)
+    val tables = Tables.load(spark, sf0001).toSeq.sortBy(_._1)
+    assert(footer(tables: _*)._1.onDriver)
+    val listed = tables.map { case (_, df) => RowCount.listing(spark, df).toOption.get }
+    val scanned = tables.map(_._2.count())
+    assert(RowCount.onDriver(spark, listed) == scanned)
+    var executors: Seq[Long] = Nil
+    assert(jobGroupsOf { executors = RowCount.onExecutors(spark, listed) }.size == 1)
+    assert(executors == scanned)
+  }
+
+  test("above DriverMaxFiles one executor job counts the call as Spark does") {
+    import spark.implicits._
+    withDir { base =>
+      Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "s").coalesce(1).write.parquet(s"$base/one.parquet")
+      val part = new File(s"$base/one.parquet").listFiles().find(_.getName.startsWith("part-")).get
+      val many = new File(s"$base/many.parquet")
+      many.mkdir()
+      (0 to RowCount.DriverMaxFiles).foreach(i => Files.copy(part.toPath, new File(many, f"part-$i%05d.parquet").toPath))
+      val (one, all) = (Tables(spark, base, "one"), Tables(spark, base, "many"))
+      val n = all.count()
+      assert(n == 3L * (RowCount.DriverMaxFiles + 1))
+      val (d, counts) = footer("many" -> all)
+      assert(!d.onDriver && counts == Map("many" -> Some(n)))
+      assert(sameAsCountPlan(RowCount.counts(spark, Map("many" -> all, "one" -> one)), jobs = 1) ==
+        Seq(Row("many", n), Row("one", 3L)))
+      assert(countMap(RowCount.metaCounts(spark, base, Seq("many", "one"))) == Map("many" -> n, "one" -> 3L))
+      assert(sameAsCountPlan(RowCount.compare(spark, Seq(("p", one, all))), jobs = 1) ==
+        Seq(Row("p", 3L, n, n - 3, (n - 3) * 100.0 / 3)))
+      assert(sameAsCountPlan(RowCount.compareCatalogs(spark, Map("t" -> all), Map("t" -> one)), jobs = 1) ==
+        Seq(Row("t", n, 3L, 3 - n, "BOTH")))
     }
   }
 }
