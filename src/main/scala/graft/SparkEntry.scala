@@ -252,10 +252,14 @@ object SparkEntry {
     // explodes to one scalar row per (vec_id, idx) with the value
     // rounded to 4dp (verdict-r14 #1). Callers keep the array API
     // (TextVectors.run); the exploded form attests every component.
+    // posexplode_OUTER: an embedding is never null or empty, so the rows
+    // are posexplode's, but Catalyst infers no `size(embedding) > 0`
+    // filter, which it would push through TextVectors' projection and
+    // so run the vector kernel three times per row (PlanAuditSpec)
     "text_vectorize" -> ((s, d) =>
       TextVectors.run(Tables(s, d, "documents"))
         .select(col("vec_id"),
-          org.apache.spark.sql.functions.posexplode(col("embedding")))
+          org.apache.spark.sql.functions.posexplode_outer(col("embedding")))
         .select(col("vec_id"), col("pos").as("idx"),
           org.apache.spark.sql.functions.round(col("col").cast("double"), 4).as("value"))),
     // sliding-window passage chunking (SURVEY §2 #35l): window/stride

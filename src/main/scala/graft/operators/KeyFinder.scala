@@ -211,15 +211,12 @@ object KeyFinder {
     * shuffle), where the exact path runs one full countDistinct job
     * per combo. Each combo's sketch is one binary buffer field, so the
     * shared aggregate stays narrow; HyperLogLog++ carries 410 long
-    * fields per combo at this rsd. Toggle:
-    * SPARK_GRAFT_KEYFINDER_PREFILTER=off (the sf100 A/B lever; adopted
-    * after measuring — see BENCH_SF100.md).
+    * fields per combo at this rsd. Always on: it only deletes exact
+    * jobs, so answers do not depend on it (adopted after the sf100
+    * A/B — see BENCH_SF100.md).
     */
   val PrefilterRsd = 0.02
   val PrefilterThreshold = 0.8
-
-  private def prefilterEnabled: Boolean =
-    !sys.env.get("SPARK_GRAFT_KEYFINDER_PREFILTER").contains("off")
 
   /** ONE-pass approx-distinct for every combo of a size: returns the
     * combos whose estimate clears [[PrefilterThreshold]] — the only
@@ -270,9 +267,7 @@ object KeyFinder {
           .filter(_.forall(!nullCols.contains(_))).toSeq
         // one shared HLL pass deletes the exact jobs of overwhelmingly
         // duplicate-heavy combos; keys/near-keys always pass through
-        val survivors =
-          if (prefilterEnabled) plausibleByHll(proj, combos, total)
-          else combos
+        val survivors = plausibleByHll(proj, combos, total)
         val keyCombos = survivors.zip(parMap(proj, survivors)(isKeyByHash(proj, _, total)))
           .collect { case (cb, true) => cb }
         val keys = keyCombos.map(_.mkString(",")).sorted

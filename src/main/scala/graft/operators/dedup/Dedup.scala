@@ -1,6 +1,6 @@
 package graft.operators.dedup
 
-import graft.operators.text.TextOps
+import graft.operators.text.{TextOps, TextStatsKernel}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -216,30 +216,14 @@ object Dedup {
     val Bands = 16
     val Rows = NumHashes / Bands
 
-    /** Kernel-side twin of [[charNgrams]]' normalization
-      * (lower(trim(regexp_replace(text, WsClass + "+", " ")))), asserted by
-      * DedupSpec's minhash-vs-allPairs comparison. ICU root-locale lowercase via
-      * TextStatsKernel.catalystLower (Spark 4 lowers through ICU, whose
-      * Final_Sigma rule differs from String.toLowerCase — see that
-      * method's scaladoc) and a SPACE-ONLY trim (String.trim strips all
-      * control chars ≤ U+0020; Catalyst trim strips only ' ').
-      */
-    private[graft] def normalizeKernel(text: String): String = {
-      // Java \s == WsClass exactly, but the sweep spells it out so a
-      // grep for bare \s across the identity family comes up empty
-      val collapsed = text.replaceAll(TextOps.WsClass + "+", " ")
-      var from = 0
-      var to = collapsed.length
-      while (from < to && collapsed.charAt(from) == ' ') from += 1
-      while (to > from && collapsed.charAt(to - 1) == ' ') to -= 1
-      graft.operators.text.TextStatsKernel.catalystLower(collapsed.substring(from, to))
-    }
-
     /** doc_id ("gid"), the 128-long minhash signature, and the sorted
       * distinct gram-hash set used for exact verification.
       *
       * One typed mapPartitions kernel does everything per document:
-      * slide an O(len) window over the normalized text (the Catalyst
+      * slide an O(len) window over the normalized text
+      * ([[TextStatsKernel.normalize]], the kernel twin of
+      * [[charNgrams]]' normalization — DedupSpec's minhash-vs-allPairs
+      * comparison asserts the agreement; the Catalyst
       * charNgrams path is O(len²) — `substring(t, i, n)` re-scans the
       * UTF8String from the start for every i — and measured 25 s for
       * 5000 docs at sf0.1 vs <1 s here), hash each n-gram ONCE,
@@ -294,7 +278,7 @@ object Dedup {
           val as = Array.tabulate(n)(i => graft.functions.Hash64.mix(i.toLong) | 1L)
           val bs = Array.tabulate(n)(i => graft.functions.Hash64.mix(~i.toLong))
           it.map { case (gid, text) =>
-            val t = normalizeKernel(if (text == null) "" else text)
+            val t = TextStatsKernel.normalize(if (text == null) "" else text)
             val raw = shingler.shingleHashes(t)
             val nGrams = raw.length
             java.util.Arrays.sort(raw)

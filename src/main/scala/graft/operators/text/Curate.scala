@@ -1,6 +1,6 @@
 package graft.operators.text
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -37,33 +37,39 @@ object Curate {
   def run(df: DataFrame, minQuality: Double = 0.5, keepLang: String = "en",
           textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     TextOps.requireIntegralId(df, idCol, "Curate")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val signals = df.select(col(idCol).cast("long"), col(textCol))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          if (text == null)
-            // expression semantics on a null document: null
-            // fingerprint; quality = 0.7 (least() ignores the null
-            // ratios — see QualityScore.run's null branch); predicted
-            // = "und" (the null threshold comparison falls through to
-            // the otherwise arm) — so a null doc drops as wrong_lang
-            (id, Option.empty[String], Some(0.7), Some("und"))
-          else {
-            val norm = TextStatsKernel.normalize(text)
-            val (_, _, _, stopR, score) = TextStatsKernel.qualitySignals(norm)
-            val pred =
-              if (TextStatsKernel.round4(stopR) >= TextOps.LangId.EnThreshold) "en"
-              else "und"
-            (id, Some(TextStatsKernel.md5Hex(norm)),
-              Some(TextStatsKernel.round4(score)), Some(pred))
-          }
-        }
-      }
-      .toDF(idCol, "fingerprint", "quality_score", "predicted_lang")
-    decide(signals, minQuality, keepLang, idCol)
+    val signalRows = df
+      .select(col(idCol).cast("long").as(idCol), signals(col(textCol)).as("k"))
+      .select(col(idCol) +: TextOps.kernelFields(SignalFields: _*): _*)
+    decide(signalRows, minQuality, keepLang, idCol)
   }
+
+  /** The names of [[signals]]' fields, in order. */
+  val SignalFields = Seq("fingerprint", "quality_score", "predicted_lang")
+
+  /** The per-row signals of `text` as ONE kernel column (the
+    * `curate_signals` UDF; fields [[SignalFields]] via
+    * [[TextOps.kernelFields]]) — shared by [[run]] and the streaming
+    * twin, so both score every row, empty and null text included,
+    * identically.
+    */
+  def signals(text: Column): Column = Signals(text)
+
+  private val Signals = udf { (text: String) =>
+    if (text == null)
+      // expression semantics on a null document: null fingerprint;
+      // quality = 0.7 (least() ignores the null ratios — see
+      // QualityScore.run's null branch); predicted = "und" (the null
+      // threshold comparison falls through to the otherwise arm) — so
+      // a null doc drops as wrong_lang
+      (Option.empty[String], Some(0.7), Some("und"))
+    else {
+      val norm = TextStatsKernel.normalize(text)
+      val (_, _, _, stopR, score) = TextStatsKernel.qualitySignals(norm)
+      val pred =
+        if (TextStatsKernel.round4(stopR) >= TextOps.LangId.EnThreshold) "en" else "und"
+      (Some(TextStatsKernel.md5Hex(norm)), Some(TextStatsKernel.round4(score)), Some(pred))
+    }
+  }.withName("curate_signals")
 
   /** The shared window + keep/drop decision over per-row signals. */
   private def decide(signals: DataFrame, minQuality: Double,

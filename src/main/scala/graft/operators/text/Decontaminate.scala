@@ -1,6 +1,5 @@
 package graft.operators.text
 
-import graft.operators.dedup.Dedup.MinHashDedup.normalizeKernel
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -9,11 +8,11 @@ import org.apache.spark.sql.functions._
   * answers) — the GPT-3/Pile-style overlap check every serious
   * training corpus runs before release.
   *
-  * Spark shape: ZERO shuffle. The probe set rides the task closure as
-  * a prefix-hash table; each document makes one pass with a rolling
-  * hash (Rabin-Karp, window = shortest probe length), position-
-  * anchored exact verification on hash hits — collisions can't flag —
-  * and emits its hit count. Cost is O(text length + verified hits) per
+  * Spark shape: ZERO shuffle. The probe set rides the `probe_hits`
+  * kernel UDF's closure as a prefix-hash table; each document makes
+  * one pass with a rolling hash (Rabin-Karp, window = shortest probe
+  * length), position-anchored exact verification on hash hits —
+  * collisions can't flag — and emits its hit count. Cost is O(text length + verified hits) per
   * document regardless of probe count; probe memory is O(total probe
   * chars), broadcast once per executor. Contamination REMOVAL is then
   * a filter on the output joined back upstream.
@@ -33,9 +32,7 @@ object Decontaminate {
     */
   def flag(docs: DataFrame, probes: Seq[String],
            textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val norm = probes.map(p => normalizeKernel(if (p == null) "" else p))
+    val norm = probes.map(p => TextStatsKernel.normalize(if (p == null) "" else p))
       .filter(_.length >= MinProbeChars)
     require(norm.nonEmpty,
       s"no probe survives normalization at >= $MinProbeChars chars — " +
@@ -60,40 +57,37 @@ object Decontaminate {
     val powW = { var p = 1L; var i = 1; while (i < w) { p *= B; i += 1 }; p }
     val probesArr = norm.toArray
 
-    docs.select(col(idCol).cast("long").as("doc_id"), col(textCol))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text0) =>
-          val t = normalizeKernel(if (text0 == null) "" else text0)
-          var nHits = 0
-          if (t.length >= w) {
-            val hit = new java.util.BitSet(probesArr.length)
-            var h = hashAt(t, 0, w)
-            var pos = 0
-            val last = t.length - w
-            while (pos <= last) {
-              val slot = java.util.Arrays.binarySearch(prefixHashes, h)
-              if (slot >= 0) {
-                val cands = prefixProbes(slot)
-                var c = 0
-                while (c < cands.length) {
-                  val p = probesArr(cands(c))
-                  if (!hit.get(cands(c)) &&
-                      t.regionMatches(pos, p, 0, p.length))
-                    hit.set(cands(c))
-                  c += 1
-                }
-              }
-              if (pos < last)
-                h = (h - t.charAt(pos) * powW) * B + t.charAt(pos + w)
-              pos += 1
+    val hits = udf { (text0: String) =>
+      val t = TextStatsKernel.normalize(if (text0 == null) "" else text0)
+      var nHits = 0
+      if (t.length >= w) {
+        val hit = new java.util.BitSet(probesArr.length)
+        var h = hashAt(t, 0, w)
+        var pos = 0
+        val last = t.length - w
+        while (pos <= last) {
+          val slot = java.util.Arrays.binarySearch(prefixHashes, h)
+          if (slot >= 0) {
+            val cands = prefixProbes(slot)
+            var c = 0
+            while (c < cands.length) {
+              val p = probesArr(cands(c))
+              if (!hit.get(cands(c)) &&
+                  t.regionMatches(pos, p, 0, p.length))
+                hit.set(cands(c))
+              c += 1
             }
-            nHits = hit.cardinality()
           }
-          (id, nHits.toLong, nHits > 0)
+          if (pos < last)
+            h = (h - t.charAt(pos) * powW) * B + t.charAt(pos + w)
+          pos += 1
         }
+        nHits = hit.cardinality()
       }
-      .toDF("doc_id", "n_probes_hit", "contaminated")
+      (nHits.toLong, nHits > 0)
+    }.withName("probe_hits").asNonNullable() // so both fields stay NOT NULL
+    docs.select(col(idCol).cast("long").as("doc_id"), hits(col(textCol)).as("k"))
+      .select(col("doc_id") +: TextOps.kernelFields("n_probes_hit", "contaminated"): _*)
       .orderBy("doc_id")
   }
 

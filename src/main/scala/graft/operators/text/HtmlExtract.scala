@@ -44,9 +44,10 @@ import org.apache.spark.sql.functions._
   *      fewer than `minLineWords` words dropped (the C4 short-line
   *      rule; nav/footer lines die here)
   *
-  * Scale shape: pure per-row projection — no shuffle, no UDF, rides
-  * WholeStageCodegen next to the scan like the rest of
-  * [[TextOps]]. The output `orderBy` is presentation only.
+  * Scale shape: pure per-row projection — no shuffle; [[run]]'s
+  * `html_extract` kernel UDF rides WholeStageCodegen next to the scan
+  * like the rest of [[TextOps]]. The output `orderBy` is presentation
+  * only.
   *
   * Output: `(doc_id, text, n_lines, n_chars)` — extracted prose, lines
   * kept, and its length.
@@ -149,32 +150,16 @@ object HtmlExtract {
   def run(df: DataFrame, minLineWords: Int = 4,
           htmlCol: String = "html", idCol: String = "doc_id"): DataFrame = {
     TextOps.requireIntegralId(df, idCol, "HtmlExtract")
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(htmlCol)).as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, html) =>
-          if (html == null)
-            (id, Option.empty[String], Option.empty[Int], Option.empty[Int])
-          else {
-            val text = HtmlKernel.extract(html, minLineWords)
-            val nLines =
-              if (text.isEmpty) 0
-              else {
-                var c = 1
-                var i = 0
-                while (i < text.length) {
-                  if (text.charAt(i) == '\n') c += 1
-                  i += 1
-                }
-                c
-              }
-            (id, Some(text), Some(nLines),
-              Some(text.codePointCount(0, text.length)))
-          }
-        }
+    val extracted = udf { (html: String) =>
+      if (html == null) (Option.empty[String], Option.empty[Int], Option.empty[Int])
+      else {
+        val text = HtmlKernel.extract(html, minLineWords)
+        val nLines = if (text.isEmpty) 0 else text.count(_ == '\n') + 1
+        (Some(text), Some(nLines), Some(text.codePointCount(0, text.length)))
       }
-      .toDF(idCol, "text", "n_lines", "n_chars")
+    }.withName("html_extract")
+    df.select(col(idCol).cast("long").as(idCol), extracted(col(htmlCol)).as("k"))
+      .select(col(idCol) +: TextOps.kernelFields("text", "n_lines", "n_chars"): _*)
       .orderBy(idCol)
   }
 

@@ -30,16 +30,18 @@ import org.apache.spark.sql.functions._
   *     shuffles carry w-token window text (w× amplification) — right
   *     for audits, wrong at 100 TB.
   *   - [[runHashed]] — the scale path: document text NEVER shuffles.
-  *     Each row hashes its token-array slices row-locally
-  *     (`xxhash64` over the w-element slice — element boundaries are
-  *     part of the hash, no join-string aliasing), so the frequency
+  *     Each row hashes its token windows row-locally in the
+  *     `window_hashes` kernel UDF (a rolling polynomial over per-token
+  *     hashes — token boundaries are part of the hash, no join-string
+  *     aliasing), and `posexplode` turns them into rows, so the frequency
   *     count and the hot-set join move only (doc, start, hash) triples;
   *     the per-document removal set is an array of hot window starts
-  *     (sized by the duplicated fraction), and the rebuild is a
-  *     row-local index filter over the re-split text. Collision risk: a
-  *     false removal needs two distinct windows to share an xxhash64 —
-  *     P ≈ nWindows·nHot/2⁶⁴; SpanDedupSpec asserts exact agreement
-  *     with [[run]] and both paths share one DuckDB oracle.
+  *     (sized by the duplicated fraction), and the rebuild is the
+  *     row-local `span_rebuild` kernel UDF over `(text, rm)`. Collision
+  *     risk: a false removal needs two distinct windows to share a
+  *     64-bit window hash — P ≈ nWindows·nHot/2⁶⁴; SpanDedupSpec
+  *     asserts exact agreement with [[run]] and both paths share one
+  *     DuckDB oracle.
   *
   * Output (one row per input document, both paths):
   * `(doc_id, text_clean, n_tokens, n_removed)`.
@@ -112,59 +114,50 @@ object SpanDedup {
     */
   def runHashed(df: DataFrame, w: Int = 50, minCount: Int = 2,
                 textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    // loud up-front id check (the TextOps kernel-path rule): the typed
-    // kernel casts the id to long, and a non-integral id would
-    // otherwise null-collapse every removal group mid-job
+    // loud up-front id check (the TextOps kernel-path rule): the
+    // kernels work on long ids, and a non-integral id would otherwise
+    // null-collapse every removal group mid-job
     TextOps.requireIntegralId(df, idCol, "SpanDedup.runHashed")
-    val spark = df.sparkSession
-    import spark.implicits._
-    // the kernel works on long ids; cast the OUTPUT id back to the
-    // input column's type so both paths share one output schema
-    // (advice-r14: an int/short doc_id frame would otherwise come back
-    // LongType here but original-typed from run(), silently breaking
-    // the pinned hashed ≡ exact row equality)
+    // cast the OUTPUT id back to the input column's type so both paths
+    // share one output schema (advice-r14: an int/short doc_id frame
+    // would otherwise come back LongType here but original-typed from
+    // run(), silently breaking the pinned hashed ≡ exact row equality)
     val idType = df.schema(idCol).dataType
+    val windowHashes = udf { (text: String) =>
+      if (text == null) Array.emptyLongArray else SpanDedupKernel.windowHashes(text, w)
+    }.withName("window_hashes")
+    val rebuild = udf { (text: String, rm: Seq[Int]) =>
+      if (text == null) // match run() exactly: coalesced '' text, null counts
+        ("", Option.empty[Int], Option.empty[Int])
+      else {
+        val (clean, nTokens, nRemoved) =
+          SpanDedupKernel.rebuild(text, w, if (rm == null) Seq.empty else rm)
+        (clean, Some(nTokens), Some(nRemoved))
+      }
+    }.withName("span_rebuild")
     // (doc, start, hash) triples — window text is never materialized,
     // let alone shuffled; one token-hash pass + one rolling pass per doc
-    val winHashes = df.select(col(idCol).cast("long"), col(textCol))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, text) =>
-          if (text == null) Iterator.empty
-          else SpanDedupKernel.windowHashes(text, w).zipWithIndex.iterator
-            .map { case (h, start) => (id, start, h) }
-        }
-      }.toDF(idCol, "start", "wh")
+    val winHashes = df.select(col(idCol).cast("long").as(idCol),
+        posexplode(windowHashes(col(textCol))).as(Seq("start", "wh")))
     val hot = winHashes.groupBy("wh").count()
       .where(col("count") >= minCount).select("wh")
     // inner join: output is duplicated-window HITS only — downstream is
     // sized by the duplicated fraction, not the corpus.
-    // BOTH joins carry shuffle_hash hints: every leg exits the typed
-    // kernel, so the planner sees defaultSize-priced stats and would
-    // otherwise BROADCAST a corpus-sized side (measured: the unhinted
-    // rewrite broadcast `removed` — millions of rows with start
-    // arrays — at sf100 and regressed 140 s → 241 s; the hot set is
-    // O(distinct duplicated windows), also corpus-shaped at worst)
+    // BOTH joins carry shuffle_hash hints: the planner prices the
+    // exploded window leg at its input's size, not its fan-out, and
+    // would otherwise BROADCAST a corpus-sized side (measured: the
+    // unhinted rewrite broadcast `removed` — millions of rows with
+    // start arrays — at sf100 and regressed 140 s → 241 s; the hot set
+    // is O(distinct duplicated windows), also corpus-shaped at worst)
     val removed = winHashes.join(hot.hint("shuffle_hash"), Seq("wh"))
       .groupBy(idCol).agg(collect_set(col("start")).as("rm"))
     // rebuild: one kernel pass with a boolean cover mask — O(tokens),
     // not O(tokens × covered)
-    df.select(col(idCol).cast("long"), col(textCol))
+    df.select(col(idCol).cast("long").as(idCol), col(textCol))
       .join(removed.hint("shuffle_hash"), Seq(idCol), "left")
-      .select(col(idCol), col(textCol), col("rm"))
-      .as[(Long, String, Option[Seq[Int]])]
-      .mapPartitions { it =>
-        it.map { case (id, text, rm) =>
-          if (text == null) // match run() exactly: coalesced '' text, null counts
-            (id, Some(""), Option.empty[Int], Option.empty[Int])
-          else {
-            val (clean, nTokens, nRemoved) =
-              SpanDedupKernel.rebuild(text, w, rm.getOrElse(Seq.empty))
-            (id, Some(clean), Some(nTokens), Some(nRemoved))
-          }
-        }
-      }.toDF(idCol, "text_clean", "n_tokens", "n_removed")
-      .withColumn(idCol, col(idCol).cast(idType))
+      .select(col(idCol), rebuild(col(textCol), col("rm")).as("k"))
+      .select(col(idCol).cast(idType).as(idCol) +:
+        TextOps.kernelFields("text_clean", "n_tokens", "n_removed"): _*)
       .orderBy(idCol)
   }
 

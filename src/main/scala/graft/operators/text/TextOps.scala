@@ -8,12 +8,14 @@ import org.apache.spark.sql.functions._
   * fingerprinting.
   *
   * Scale design: every operator is a pure per-row projection — no
-  * shuffle, no UDF. All expressions are built from
+  * shuffle. The reference expressions are built from
   * `org.apache.spark.sql.functions` (split/filter/transform/aggregate
-  * are codegen'd higher-order functions), so the whole pipeline stays
-  * inside one WholeStageCodegen over the parquet scan and scales
-  * linearly with input splits. Only deliberately-written regex subsets
-  * are used so the DuckDB (RE2) oracles agree with Spark's Java regex.
+  * are codegen'd higher-order functions); where a hand-written kernel
+  * executes instead, it is a named UDF in the same projection
+  * ([[kernelFields]]), so the pipeline stays inside one
+  * WholeStageCodegen over the parquet scan and scales linearly with
+  * input splits. Only deliberately-written regex subsets are used so
+  * the DuckDB (RE2) oracles agree with Spark's Java regex.
   */
 object TextOps {
 
@@ -34,12 +36,12 @@ object TextOps {
   val PunctClass = s"[^A-Za-z0-9$WsChars]"
 
   /** Loud up-front id-type check for the kernelized run()/redact()
-    * paths (TokenCount, QualityScore, PiiScan, Curate, HtmlExtract):
-    * they select `col(idCol).cast("long")` to enter a typed
-    * mapPartitions, and under ANSI mode (the Spark 4 default) a
-    * non-numeric string id would otherwise throw a cast error deep
-    * inside a task instead of here — the same guard GraftApp applies
-    * to its id-hashing tools.
+    * paths (TokenCount, QualityScore, PiiScan, Curate, HtmlExtract,
+    * TextVectors, SpanDedup.runHashed): they select
+    * `col(idCol).cast("long")` beside their kernel UDF, and under ANSI
+    * mode (the Spark 4 default) a non-numeric string id would otherwise
+    * throw a cast error deep inside a task instead of here — the same
+    * guard GraftApp applies to its id-hashing tools.
     */
   private[text] def requireIntegralId(df: DataFrame, idCol: String,
                                       op: String): Unit = {
@@ -52,6 +54,19 @@ object TextOps {
     require(integral,
       s"$op: id column '$idCol' must be integral (long/int), got ${idType.simpleString}")
   }
+
+  /** THE row-local kernel shape of `operators/text`: a kernel is a
+    * named Spark `udf` (a `ScalaUDF`, `.withName("<kernel>")`) over a
+    * hand-written kernel function, returning a tuple. An operator
+    * selects `(col(idCol).cast("long"), kernel(text).as("k"))`, then
+    * `kernelFields(...)`. Every field reads the one `k` attribute, and
+    * CollapseProject inlines only cheap producers, so the kernel runs
+    * once per row in a Project over the scan — no object
+    * (de)serialization, and the plan names the kernel. PlanAuditSpec
+    * pins the shape on the gate queries.
+    */
+  private[graft] def kernelFields(names: String*): Seq[Column] =
+    names.zipWithIndex.map { case (n, i) => col(s"k._${i + 1}").as(n) }
 
   /** THE whitespace tokenizer — every token-consuming operator
     * ([[TokenCount]], [[Chunker]], [[graft.operators.text.Bpe]],
@@ -98,21 +113,16 @@ object TextOps {
       * extract_all being the bulk); [[exprRun]] is the retained
       * Catalyst reference the kernel is fuzz-pinned against.
       */
+    private val Counts = udf { (t: String) =>
+      if (t == null) (Option.empty[Int], Option.empty[Int], Option.empty[Int])
+      else (Some(TextStatsKernel.nChars(t)), Some(TextStatsKernel.wsTokenCount(t)),
+        Some(TextStatsKernel.bpeTokenCount(t)))
+    }.withName("token_counts")
+
     def run(df: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
       requireIntegralId(df, idCol, "TokenCount")
-      val spark = df.sparkSession
-      import spark.implicits._
-      df.select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (id, text) =>
-            if (text == null)
-              (id, Option.empty[Int], Option.empty[Int], Option.empty[Int])
-            else (id, Some(TextStatsKernel.nChars(text)),
-              Some(TextStatsKernel.wsTokenCount(text)),
-              Some(TextStatsKernel.bpeTokenCount(text)))
-          }
-        }
-        .toDF(idCol, "n_chars", "ws_tokens", "bpe_tokens")
+      df.select(col(idCol).cast("long").as(idCol), Counts(col(textCol)).as("k"))
+        .select(col(idCol) +: kernelFields("n_chars", "ws_tokens", "bpe_tokens"): _*)
         .orderBy(idCol)
     }
 
@@ -209,34 +219,29 @@ object TextOps {
       * DuckDB's 30 s at sf100); [[exprRun]] is the retained Catalyst
       * reference the kernel is fuzz-pinned against.
       */
+    private val Signals = udf { (text: String) =>
+      if (text == null)
+        // the expression's null row: counts/ratios null, but the
+        // score's least() IGNORES null operands (Catalyst and DuckDB
+        // alike), so the first two terms saturate at 1.0 and the punct
+        // term contributes 0 → 0.4 + 0.3 = 0.7
+        (Option.empty[Int], Option.empty[Int], Option.empty[Double],
+          Option.empty[Double], Some(0.7))
+      else {
+        val (chars, nTok, punctR, stopR, score) = TextStatsKernel.qualitySignals(text)
+        // NaN punct ratio = the empty-text edge; SQL NULL like the
+        // DuckDB oracle (see qualitySignals' scaladoc)
+        (Some(chars), Some(nTok),
+          if (punctR.isNaN) None else Some(TextStatsKernel.round4(punctR)),
+          Some(TextStatsKernel.round4(stopR)), Some(TextStatsKernel.round4(score)))
+      }
+    }.withName("quality_signals")
+
     def run(df: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
       requireIntegralId(df, idCol, "QualityScore")
-      val spark = df.sparkSession
-      import spark.implicits._
-      df.select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (id, text) =>
-            if (text == null)
-              // the expression's null row: counts/ratios null, but the
-              // score's least() IGNORES null operands (Catalyst and
-              // DuckDB alike), so the first two terms saturate at 1.0
-              // and the punct term contributes 0 → 0.4 + 0.3 = 0.7
-              (id, Option.empty[Int], Option.empty[Int], Option.empty[Double],
-                Option.empty[Double], Some(0.7))
-            else {
-              val (chars, nTok, punctR, stopR, score) =
-                TextStatsKernel.qualitySignals(text)
-              // NaN punct ratio = the empty-text edge; SQL NULL like
-              // the DuckDB oracle (see qualitySignals' scaladoc)
-              (id, Some(chars), Some(nTok),
-                if (punctR.isNaN) None else Some(TextStatsKernel.round4(punctR)),
-                Some(TextStatsKernel.round4(stopR)),
-                Some(TextStatsKernel.round4(score)))
-            }
-          }
-        }
-        .toDF(idCol, "n_chars", "n_tokens", "punct_ratio", "stopword_ratio",
-          "quality_score")
+      df.select(col(idCol).cast("long").as(idCol), Signals(col(textCol)).as("k"))
+        .select(col(idCol) +: kernelFields("n_chars", "n_tokens", "punct_ratio",
+          "stopword_ratio", "quality_score"): _*)
         .orderBy(idCol)
     }
 
@@ -480,7 +485,7 @@ object TextOps {
       */
     val CombinedOraclePattern: String = CombinedPattern
 
-    /** Execution: [[PiiKernel]], a typed mapPartitions kernel — the
+    /** Execution: [[PiiKernel]], the `pii_counts` kernel UDF — the
       * hand-compiled equivalent of scanning [[CombinedPattern]] (same
       * rationale as the winnowing/minhash kernels: java.util.regex's
       * backtracking NFA re-attempts the email arm at every word char,
@@ -490,28 +495,23 @@ object TextOps {
       */
     def run(df: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
       requireIntegralId(df, idCol, "PiiScan")
-      val spark = df.sparkSession
-      import spark.implicits._
-      df.select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (id, text) =>
-            if (text == null)
-              (id, Option.empty[Int], Option.empty[Int], Option.empty[Int],
-                Option.empty[Int], Option.empty[Int], Option.empty[Int],
-                Option.empty[Int])
-            else {
-              val c = PiiKernel.counts(text)
-              (id, Some(c(PiiKernel.Email)), Some(c(PiiKernel.Url)),
-                Some(c(PiiKernel.Phone)), Some(c(PiiKernel.Ipv4)),
-                Some(c(PiiKernel.Ipv6)), Some(c(PiiKernel.Id)),
-                Some(if (c.exists(_ > 0)) 1 else 0))
-            }
-          }
-        }
-        .toDF(idCol, "n_emails", "n_urls", "n_phones", "n_ipv4", "n_ipv6",
-          "n_ids", "has_pii")
+      df.select(col(idCol).cast("long").as(idCol), Counts(col(textCol)).as("k"))
+        .select(col(idCol) +: kernelFields("n_emails", "n_urls", "n_phones",
+          "n_ipv4", "n_ipv6", "n_ids", "has_pii"): _*)
         .orderBy(idCol)
     }
+
+    private val Counts = udf { (text: String) =>
+      if (text == null)
+        (Option.empty[Int], Option.empty[Int], Option.empty[Int], Option.empty[Int],
+          Option.empty[Int], Option.empty[Int], Option.empty[Int])
+      else {
+        val c = PiiKernel.counts(text)
+        (Some(c(PiiKernel.Email)), Some(c(PiiKernel.Url)), Some(c(PiiKernel.Phone)),
+          Some(c(PiiKernel.Ipv4)), Some(c(PiiKernel.Ipv6)), Some(c(PiiKernel.Id)),
+          Some(if (c.exists(_ > 0)) 1 else 0))
+      }
+    }.withName("pii_counts")
 
     private val CountCols = Seq("n_emails" -> "email", "n_urls" -> "url",
       "n_phones" -> "phone", "n_ipv4" -> "ipv4", "n_ipv6" -> "ipv6",
@@ -569,23 +569,22 @@ object TextOps {
     def redact(df: DataFrame, textCol: String = "text",
                idCol: String = "doc_id"): DataFrame = {
       requireIntegralId(df, idCol, "PiiScan.redact")
-      val spark = df.sparkSession
-      import spark.implicits._
-      val tokens = TokenByClass
-      df.select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (id, text) =>
-            if (text == null)
-              (id, Option.empty[String], Option.empty[Int], Option.empty[Int])
-            else {
-              val r = PiiKernel.redact(text, tokens)
-              (id, Some(r), Some(text.codePointCount(0, text.length)),
-                Some(r.codePointCount(0, r.length)))
-            }
-          }
-        }
-        .toDF(idCol, "redacted", "n_chars_before", "n_chars_after")
+      df.select(col(idCol).cast("long").as(idCol), Redact(col(textCol)).as("k"))
+        .select(col(idCol) +: kernelFields("redacted", "n_chars_before",
+          "n_chars_after"): _*)
         .orderBy(idCol)
+    }
+
+    private val Redact = {
+      val tokens = TokenByClass
+      udf { (text: String) =>
+        if (text == null) (Option.empty[String], Option.empty[Int], Option.empty[Int])
+        else {
+          val r = PiiKernel.redact(text, tokens)
+          (Some(r), Some(text.codePointCount(0, text.length)),
+            Some(r.codePointCount(0, r.length)))
+        }
+      }.withName("pii_redact")
     }
 
     def redactOracleSql(table: String): String = {
@@ -620,9 +619,8 @@ object TextOps {
     *
     * `winnowFingerprints` — winnowing over a polynomial rolling hash
     * (Schleimer et al., SIGMOD'03): hash every k-gram, keep the minimum
-    * hash of each sliding window of `w` hashes. Pure higher-order
-    * functions (transform/aggregate over a sequence), so it's still one
-    * codegen'd projection — no UDF, no shuffle.
+    * hash of each sliding window of `w` hashes, in the `winnow_hashes`
+    * kernel UDF — one projection, no shuffle.
     */
   object Fingerprint {
     val K = 8      // k-gram length in chars
@@ -658,62 +656,57 @@ object TextOps {
 
     /** Per-doc array of winnowed k-gram hashes (document sketch).
       *
-      * Typed mapPartitions kernel: the k-gram hashes come from a true
-      * ROLLING polynomial hash (one multiply-add + one subtract per
-      * character) and the window minima from a monotonic deque — O(len)
-      * per document. The equivalent Catalyst formulation is O(len·k)
+      * Kernel UDF: the k-gram hashes come from a true ROLLING
+      * polynomial hash (one multiply-add + one subtract per character)
+      * and the window minima from a monotonic deque — O(len) per
+      * document. The equivalent Catalyst formulation is O(len·k)
       * hashing plus O(len·w) minima with per-element interpreted
       * lambdas (and O(len²) substring scans), which falls over on long
       * documents at scale.
       */
     def winnowFingerprints(df: DataFrame, textCol: String = "text",
-                           idCol: String = "doc_id"): DataFrame = {
-      val spark = df.sparkSession
-      import spark.implicits._
-      val (k, w, base, mod) = (K, W, Base, Mod)
-      df.select(col(idCol).cast("long").as("id"), normalized(col(textCol)).as("t"))
-        .as[(Long, String)]
-        .mapPartitions { it =>
-          // base^(k-1) mod M for the rolling removal term
-          var basePow = 1L
-          (1 until k).foreach(_ => basePow = basePow * base % mod)
-          it.map { case (id, t0) =>
-            val t = if (t0 == null) "" else t0
-            val n = t.length
-            val nHashes = math.max(n - (k - 1), if (n == 0) 0 else 1)
-            val hashes = new Array[Long](math.max(nHashes, 0))
-            if (n > 0) {
-              var h = 0L
-              var i = 0
-              while (i < math.min(k, n)) { h = (h * base + t.charAt(i)) % mod; i += 1 }
-              hashes(0) = h
-              var s = 1
-              while (s < nHashes) {
-                h = ((h - t.charAt(s - 1) * basePow % mod + mod * base) % mod * base
-                  + t.charAt(s + k - 1)) % mod
-                hashes(s) = h
-                s += 1
-              }
-            }
-            // sliding-window minimum via monotonic index deque
-            val out = scala.collection.mutable.LinkedHashSet.empty[Long]
-            if (hashes.nonEmpty) {
-              val win = math.min(w, hashes.length)
-              val deque = new java.util.ArrayDeque[Int]()
-              var i = 0
-              while (i < hashes.length) {
-                while (!deque.isEmpty && hashes(deque.peekLast()) >= hashes(i))
-                  deque.pollLast()
-                deque.addLast(i)
-                if (deque.peekFirst() <= i - win) deque.pollFirst()
-                if (i >= win - 1) out += hashes(deque.peekFirst())
-                i += 1
-              }
-            }
-            (id, out.toSeq)
-          }
-        }.toDF(idCol, "winnow_hashes")
+                           idCol: String = "doc_id"): DataFrame =
+      df.select(col(idCol).cast("long").as(idCol),
+          Winnow(normalized(col(textCol))).as("winnow_hashes"))
         .orderBy(idCol)
-    }
+
+    /** base^(k-1) mod M, the rolling removal term. */
+    private val BasePow = (1 until K).foldLeft(1L)((p, _) => p * Base % Mod)
+
+    private val Winnow = udf { (t0: String) =>
+      val t = if (t0 == null) "" else t0
+      val n = t.length
+      val nHashes = math.max(n - (K - 1), if (n == 0) 0 else 1)
+      val hashes = new Array[Long](math.max(nHashes, 0))
+      if (n > 0) {
+        var h = 0L
+        var i = 0
+        while (i < math.min(K, n)) { h = (h * Base + t.charAt(i)) % Mod; i += 1 }
+        hashes(0) = h
+        var s = 1
+        while (s < nHashes) {
+          h = ((h - t.charAt(s - 1) * BasePow % Mod + Mod * Base) % Mod * Base
+            + t.charAt(s + K - 1)) % Mod
+          hashes(s) = h
+          s += 1
+        }
+      }
+      // sliding-window minimum via monotonic index deque
+      val out = scala.collection.mutable.LinkedHashSet.empty[Long]
+      if (hashes.nonEmpty) {
+        val win = math.min(W, hashes.length)
+        val deque = new java.util.ArrayDeque[Int]()
+        var i = 0
+        while (i < hashes.length) {
+          while (!deque.isEmpty && hashes(deque.peekLast()) >= hashes(i))
+            deque.pollLast()
+          deque.addLast(i)
+          if (deque.peekFirst() <= i - win) deque.pollFirst()
+          if (i >= win - 1) out += hashes(deque.peekFirst())
+          i += 1
+        }
+      }
+      out.toSeq
+    }.withName("winnow_hashes")
   }
 }

@@ -2,7 +2,8 @@ package graft.operators.text
 
 /** Hand-rolled per-document text statistics — the execution kernel
   * behind [[TextOps.TokenCount]], [[TextOps.QualityScore]] and
-  * [[Curate]] (round 13, same adopted-kernel rationale as
+  * [[Curate]], each of which calls it from a named kernel UDF
+  * ([[TextOps.kernelFields]]) (round 13, same adopted-kernel rationale as
   * [[PiiKernel]]/[[HtmlKernel]]: the Catalyst forms re-evaluate the
   * tokenize expression per output column and run interpreted
   * `filter`/`array_contains` lambdas per token — measured 72 s
@@ -144,7 +145,9 @@ object TextStatsKernel {
 
   /** `lower(trim(regexp_replace(t, WsClass+, ' ')))` — the
     * [[TextOps.Fingerprint.normalized]] form: collapse ws runs to one
-    * space, strip edge SPACES only, Locale.ROOT lowercase.
+    * space, strip edge SPACES only, lowercase through [[catalystLower]].
+    * The one kernel-side normalizer: [[Curate]], MinHash `signatures`
+    * and [[Decontaminate]] (probes and documents) all call it.
     */
   def normalize(t: String): String = {
     val sb = new java.lang.StringBuilder(t.length)

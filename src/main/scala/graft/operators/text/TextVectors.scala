@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   * document ⇒ the zero vector, which every downstream cosine consumer
   * already excludes (NaN-score guard).
   *
-  * Scale shape: one typed mapPartitions pass, no shuffle, no UDF —
-  * the same kernel shape as every decode/text leg; output is
+  * Scale shape: one projection with the `text_vector` kernel UDF, no
+  * shuffle — the kernel shape of every text leg; output is
   * `(vec_id, embedding)`, exactly the embeddings-table schema, so the
   * frame drops into any ANN/dedup call unchanged.
   *
@@ -87,15 +87,9 @@ object TextVectors {
   def run(df: DataFrame, dim: Int = DefaultDim,
           textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     TextOps.requireIntegralId(df, idCol, "TextVectors")
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val lowered =
-            if (text == null) "" else TextStatsKernel.catalystLower(text)
-          (id, vectorize(lowered, dim))
-        }
-      }.toDF("vec_id", "embedding")
+    val vector = udf { (text: String) =>
+      vectorize(if (text == null) "" else TextStatsKernel.catalystLower(text), dim)
+    }.withName("text_vector")
+    df.select(col(idCol).cast("long").as("vec_id"), vector(col(textCol)).as("embedding"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.text.TextOps
+import graft.operators.text.{Curate, TextOps}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions._
   *
   * Spark-first decomposition of the batch decision:
   *
-  *  - quality score and language ID are row-local Column expressions
-  *    over the NORMALIZED (fingerprint) text — identical code to
-  *    batch, no state, fully map-side;
+  *  - fingerprint, quality score and language ID are the batch
+  *    operator's own signals kernel ([[graft.operators.text.Curate.signals]])
+  *    over the NORMALIZED (fingerprint) text — identical code to batch,
+  *    empty and null text included, no state, fully map-side;
   *  - the batch operator's exact-dup window (keep the min doc id per
   *    content fingerprint) becomes `dropDuplicatesWithinWatermark` on
   *    the fingerprint: keep the FIRST ARRIVAL, with state bounded by
@@ -38,23 +39,18 @@ object CurateStream {
 
   def run(docs: DataFrame, minQuality: Double = 0.5, keepLang: String = "en",
           textCol: String = "text", idCol: String = "doc_id",
-          tsCol: String = "ts", watermark: String = "1 hour"): DataFrame = {
-    val norm = TextOps.Fingerprint.normalized(col(textCol))
-    docs
-      .withColumn("fingerprint", md5(norm))
-      .withColumn("quality_score", round(TextOps.QualityScore.score(norm), 4))
-      .withColumn("predicted_lang", TextOps.LangId.predicted(norm))
+          tsCol: String = "ts", watermark: String = "1 hour"): DataFrame =
+    docs.select(col(idCol), col(tsCol), col(textCol), Curate.signals(col(textCol)).as("k"))
+      .select(Seq(col(idCol), col(tsCol), col(textCol)) ++
+        TextOps.kernelFields(Curate.SignalFields: _*): _*)
       // null-text parity with the batch twin, by construction:
       // predicted_lang is TOTAL (null text → 'und', never null), so
       // this conjunction is never null — for null text it is
-      // (null >= q) && ('und' === lang) = false, dropping the row
+      // (0.7 >= q) && ('und' === lang) = false, dropping the row
       // exactly as the batch twin's wrong_lang branch does
       // (spec-pinned in StreamingSpec).
       .where(col("quality_score") >= minQuality &&
         col("predicted_lang") === keepLang)
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("fingerprint")
-      .select(col(idCol), col(tsCol), col(textCol), col("fingerprint"),
-        col("quality_score"), col("predicted_lang"))
-  }
 }

@@ -139,7 +139,7 @@ class DedupSpec extends AnyFunSuite {
     // sets (the same trigram normalization the operator uses)
     val sh = Dedup.MinHashDedup.CharNgrams()
     def grams(t: String): Set[Long] =
-      sh.shingleHashes(Dedup.MinHashDedup.normalizeKernel(t)).toSet
+      sh.shingleHashes(graft.operators.text.TextStatsKernel.normalize(t)).toSet
     val corpusSets = corpus.collect()
       .map(r => r.getLong(0) -> grams(r.getString(1))).toMap
     batch.collect().foreach { r =>

@@ -418,6 +418,41 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
+  test("text kernels run as named UDFs: no object boundary, each kernel once per row") {
+    // the row-local kernel shape (TextOps.kernelFields): a kernel is a
+    // ScalaUDF in one Project over the scan, never a typed
+    // mapPartitions. A collapsed projection would evaluate the kernel
+    // once per output field, so each kernel must appear in exactly as
+    // many plan nodes as the query has legs reading it.
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val helper = new AdaptiveSparkPlanHelper {}
+    val expected = Map(
+      "text_tokens" -> Map("token_counts" -> 1),
+      "text_quality" -> Map("quality_signals" -> 1),
+      "text_pii" -> Map("pii_counts" -> 1),
+      "text_redact" -> Map("pii_redact" -> 1),
+      "text_curate" -> Map("curate_signals" -> 1),
+      "text_html_extract" -> Map("html_extract" -> 1),
+      // the window triples feed both the hot-set count and the join
+      "text_span_dedup_hashed" -> Map("window_hashes" -> 2, "span_rebuild" -> 1),
+      "text_vectorize" -> Map("text_vector" -> 1),
+      "text_decontaminate" -> Map("probe_hits" -> 1))
+    for ((name, kernels) <- expected) {
+      val df = q(name)
+      df.collect()
+      val nodes = helper.collect(df.queryExecution.executedPlan) { case n => n }
+      val objectNodes = nodes.map(_.nodeName).filter(n =>
+        Seq("DeserializeToObject", "SerializeFromObject", "MapPartitions").exists(n.contains))
+      assert(objectNodes.isEmpty, s"$name: object boundary $objectNodes in:\n${df.queryExecution.executedPlan}")
+      val udfs = nodes.flatMap(_.expressions.flatMap(_.collect {
+        case u: ScalaUDF => u.udfName.getOrElse("<anonymous>")
+      }))
+      val counts = udfs.groupBy(identity).view.mapValues(_.size).toMap
+      assert(counts == kernels, s"$name: kernel evaluations $counts in:\n${df.queryExecution.executedPlan}")
+    }
+  }
+
   test("text ops stay in one codegen'd projection over the scan (no agg shuffle)") {
     val p = plan(q("text_quality"))
     // the only exchange allowed is the final orderBy's range partition

@@ -94,6 +94,35 @@ class StreamingSpec extends AnyFunSuite {
     } finally query.stop()
   }
 
+  test("streaming curation drops empty and whitespace-only text as the batch twin does") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val en = ("the a of and to in is on for with " * 12).trim
+    val rows = Seq(
+      (1L, ts("10:00"), en),     // keep
+      (2L, ts("10:05"), ""),     // empty → low_quality, not a divide by zero
+      (3L, ts("10:10"), " \t "), // whitespace-only: the same empty normalized text
+      (4L, ts("10:15"), "where is the cat and the dog on the mat of the house"))
+    val input = MemoryStream[(Long, Timestamp, String)]
+    val query = graft.streaming.CurateStream.run(
+        input.toDF().toDF("doc_id", "ts", "text"))
+      .writeStream.format("memory").queryName("curate_stream_empty")
+      .outputMode("append").start()
+    try {
+      input.addData(rows: _*)
+      query.processAllAvailable()
+      val streamed = spark.table("curate_stream_empty")
+        .collect().map(_.getLong(0)).toSet
+      val batch = graft.operators.text.Curate.run(
+          rows.map(r => (r._1, r._3)).toDF("doc_id", "text"))
+      // both normalize to "": the later one is the first one's duplicate
+      val reasons = batch.collect().map(r => r.getLong(0) -> r.getAs[String]("drop_reason")).toMap
+      assert(reasons(2L) == "low_quality" && reasons(3L) == "duplicate", reasons)
+      assert(streamed == batch.where(col("keep") === 1).collect().map(_.getLong(0)).toSet)
+      assert(streamed == Set(1L, 4L))
+    } finally query.stop()
+  }
+
   test("stateless operators (hashSplit) run unchanged on streams, same assignments") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -275,4 +275,23 @@ class TextOpsSpec extends AnyFunSuite {
     assert(Bpe.wordCounts(df).collect().map(_.getString(0)).toSet ===
       Set("real", "words", "here"))
   }
+
+  test(".mapPartitions under operators/text only in Bpe and KeywordSearch") {
+    // row-local text kernels are named UDFs (TextOps.kernelFields);
+    // Bpe keeps a per-partition memo over a broadcast and KeywordSearch
+    // collects partition statistics, so only they stay typed
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala/graft/operators/text")
+    assert(Files.isDirectory(root), "scan must run from the repository root")
+    val sites = Files.list(root).iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.collect {
+          case l if l.split("//")(0).contains(".mapPartitions") &&
+              !Seq("*", "/*").exists(l.trim.startsWith) => p.getFileName.toString
+        }
+      }
+    assert(sites.sorted == Seq("Bpe.scala", "KeywordSearch.scala", "KeywordSearch.scala"), sites)
+  }
 }
