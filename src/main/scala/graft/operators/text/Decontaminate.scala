@@ -12,10 +12,11 @@ import org.apache.spark.sql.functions._
   * kernel UDF's closure as a prefix-hash table; each document makes
   * one pass with a rolling hash (Rabin-Karp, window = shortest probe
   * length), position-anchored exact verification on hash hits —
-  * collisions can't flag — and emits its hit count. Cost is O(text length + verified hits) per
-  * document regardless of probe count; probe memory is O(total probe
-  * chars), broadcast once per executor. Contamination REMOVAL is then
-  * a filter on the output joined back upstream.
+  * collisions can't flag — and emits its hit count. Cost is O(text
+  * length + verified hits) per document regardless of probe count;
+  * probe memory is O(total probe chars), broadcast once per executor.
+  * Contamination REMOVAL is then a filter on the output joined back
+  * upstream.
   */
 object Decontaminate {
 

@@ -39,10 +39,10 @@ object CurateStream {
 
   def run(docs: DataFrame, minQuality: Double = 0.5, keepLang: String = "en",
           textCol: String = "text", idCol: String = "doc_id",
-          tsCol: String = "ts", watermark: String = "1 hour"): DataFrame =
-    docs.select(col(idCol), col(tsCol), col(textCol), Curate.signals(col(textCol)).as("k"))
-      .select(Seq(col(idCol), col(tsCol), col(textCol)) ++
-        TextOps.kernelFields(Curate.SignalFields: _*): _*)
+          tsCol: String = "ts", watermark: String = "1 hour"): DataFrame = {
+    val kept = Seq(col(idCol), col(tsCol), col(textCol))
+    docs.select(kept :+ Curate.signals(col(textCol)).as("k"): _*)
+      .select(kept ++ TextOps.kernelFields(Curate.SignalFields: _*): _*)
       // null-text parity with the batch twin, by construction:
       // predicted_lang is TOTAL (null text → 'und', never null), so
       // this conjunction is never null — for null text it is
@@ -53,4 +53,5 @@ object CurateStream {
         col("predicted_lang") === keepLang)
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("fingerprint")
+  }
 }
